@@ -22,13 +22,34 @@ micro-batch at a time — within a batch every update reads the same model
 snapshot, and duplicate keys in a batch resolve last-write-wins by input
 order (max input ordinal), matching per-key arrival order.
 
-Scale: the join shuffles the *ratings batch* by user then item while the
-model is broadcast; update aggregation shuffles by key only. No
-driver-side loops; all arithmetic is codegen'd zip_with.
+Two implementations of that one step:
+
+- :func:`sgd_step` — the DataFrame operator (the catalog ``sgd_step``
+  query): the join shuffles the *ratings batch* by user then item while
+  the model is broadcast; update aggregation shuffles by key only; all
+  arithmetic is codegen'd zip_with.
+- :func:`sgd_step_local` — the driver kernel the online stream runs
+  (``streaming.loader.run_online_sgd_stream``): it takes one collected
+  micro-batch plus the factor rows that batch touches, so its driver
+  memory is bounded by one micro-batch and its touched rows, never by
+  the model. It performs ``sgd_step``'s operations in the same order on
+  IEEE doubles (the dot product is a left-to-right fold from 0.0, one
+  factor column at a time; no ``np.dot``/``sum``, whose summation
+  order differs), so on well-formed factors its output equals
+  ``sgd_step``'s bit for bit — a test pins the two equal, and
+  ``sgd_step`` stays the reference. The two differ on malformed factors
+  (a null element, or user and item vectors of different lengths, as a
+  bad model line parsed with try_cast gives): ``sgd_step`` propagates
+  the null through the dot product and writes all-null vectors for both
+  keys, since its NaN guard ignores nulls; the kernel drops that
+  rating's two rows and keeps the keys' earlier values.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Mapping, Sequence
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -127,3 +148,70 @@ def sgd_step(
         .agg(F.max(w).alias("last"))
         .select("id", "kind", F.col("last.f").alias("factors"))
     )
+
+
+def sgd_step_local(
+    ratings: Iterable[Sequence],
+    users: Mapping[str, Sequence[float] | None],
+    items: Mapping[str, Sequence[float] | None],
+    user_mean: Sequence[float] | None = None,
+    item_mean: Sequence[float] | None = None,
+    learning_rate: float = 0.1,
+    user_reg: float = 0.0,
+    item_reg: float = 0.0,
+) -> list[tuple[str, str, list[float]]]:
+    """:func:`sgd_step` (simultaneous form) on driver-local data.
+
+    ``ratings``: ``(user_id, item_id, rating)`` triples in input order,
+    none of them null. ``users``/``items``: factors by id (``str`` of
+    the rating's id, as ``sgd_step`` casts it); a missing id or a None
+    value falls back to ``user_mean``/``item_mean``, and a rating with
+    neither is dropped. Returns ``(id, kind, factors)`` rows, one per
+    key: the last rating in input order whose row passed the NaN guard
+    wins.
+
+    Unlike ``sgd_step``, a null factor element counts as NaN, so the
+    guard drops that rating's rows, and a rating whose user and item
+    vectors differ in length is dropped (``sgd_step`` writes all-null
+    vectors for both keys in either case). Raises ValueError when the
+    kept ratings do not all share one rank."""
+    uids, iids, rs, us, its = [], [], [], [], []
+    for user_id, item_id, rating in ratings:
+        uid, iid = str(user_id), str(item_id)
+        u = users.get(uid)
+        i = items.get(iid)
+        u = user_mean if u is None else u
+        i = item_mean if i is None else i
+        if u is None or i is None or len(u) != len(i):
+            continue
+        uids.append(uid)
+        iids.append(iid)
+        rs.append(float(rating))
+        us.append(u)
+        its.append(i)
+    if not rs:
+        return []
+    try:
+        U = np.array(us, dtype=np.float64)
+        I = np.array(its, dtype=np.float64)
+    except ValueError as exc:
+        raise ValueError(f"sgd_step_local: ratings differ in factor rank ({exc})") from None
+    # NaN/inf results are expected here and dropped by the guard below
+    with np.errstate(invalid="ignore", over="ignore"):
+        # dot(u, i): aggregate(zip_with(u, i, *), 0.0, +) — one column at a time
+        acc = np.zeros(len(rs))
+        for j in range(U.shape[1]):
+            acc = acc + U[:, j] * I[:, j]
+        e = (np.array(rs) - acc)[:, None]
+        eta = learning_rate
+        U_new = U + eta * (e * I - user_reg * U)
+        I_new = I + eta * (e * U - item_reg * I)
+    u_ok = ~np.isnan(U_new).any(axis=1)
+    i_ok = ~np.isnan(I_new).any(axis=1)
+    out: dict[tuple[str, str], list[float]] = {}
+    for n, (uid, iid) in enumerate(zip(uids, iids)):
+        if u_ok[n]:
+            out[(uid, "U")] = U_new[n].tolist()
+        if i_ok[n]:
+            out[(iid, "I")] = I_new[n].tolist()
+    return [(id_, kind, f) for (id_, kind), f in out.items()]

@@ -346,9 +346,17 @@ def partitioned_write(
     distinct values land on DIFFERENT reducers — never
     ``repartition(n, *cols)``, which caps the WHOLE write at n tasks
     (n=1 would funnel 100 TB through a single task).
+
+    The salt is an ``xxhash64`` of the row's non-partition columns: it
+    is the same under task retry and independent of the partition
+    columns. A position-based salt (row index in its input partition
+    mod k) would equal a partition column computed as ``id % k`` and
+    give every value one file. A frame of partition columns only
+    hashes those.
     """
     cols = [F.col(c) for c in partition_cols]
-    salt = F.pmod(F.monotonically_increasing_id(), F.lit(files_per_partition))
+    hashed = [c for c in df.columns if c not in partition_cols] or partition_cols
+    salt = F.pmod(F.xxhash64(*hashed), F.lit(files_per_partition))
     (
         df.withColumn("_file_salt", salt)
         .repartition(*cols, F.col("_file_salt"))

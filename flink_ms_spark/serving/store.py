@@ -12,6 +12,13 @@ Spark has no KV server, so the store is dual-backed:
   lookups (the reference's 2-network-hop lookup path is ~ms; a local
   dict is strictly faster at equal semantics).
 
+While the store is dict-backed the dict is the state and the DataFrame
+view is derived from it LAZILY: :meth:`ModelStore.view` builds it on its
+first call after a write and caches it until the next write, so a write
+costs O(batch) driver work (one ``dict.update``, which makes the whole
+batch visible to lookups at once) and the O(store) ``createDataFrame``
+is paid only by a caller that asks for the view.
+
 At 100 TB the dict holds only the MODEL (|users|+|items| keys), never
 data-scale state; if a model outgrows driver memory the dict layer is
 dropped and lookups fall back to the persisted view. That fallback
@@ -49,21 +56,36 @@ full-view scan.
 Upsert ordering: within an upsert batch, last-write-wins by a caller
 ordinal (source offset order), mirroring Flink's per-key arrival order
 (SURVEY.md §7 hard-part 3).
+
+Batch-scale access for driver-side writers: :meth:`ModelStore.lookup_many`
+fetches a batch's keys (dict gets, or one pyarrow ``isin`` read per
+touched leaf), and :meth:`ModelStore.upsert_batch` also takes a
+``{key: Row}`` mapping of already-deduplicated rows — the online SGD
+stream reads and writes only the rows its micro-batch touches.
+
+The switch from dict to leaves is logged once, at INFO, on the
+``flink_ms_spark.serving.store`` logger (a child of ``flink_ms_spark``).
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import re
 import tempfile
 import zlib
 from collections import OrderedDict
+from collections.abc import Iterable, Mapping
 from typing import Optional
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from flink_ms_spark import fsutil
+
+
+_ABSENT = object()  # hot-tier sentinel: None there is a cached miss
 
 
 class ModelStore:
@@ -105,6 +127,14 @@ class ModelStore:
         self._spill_root = spill_dir
         self._spilled = False
         self._dict: dict[str, Row] = {}
+        # dict tier: the view schema (key + payload) and the lazily built
+        # view, tagged with the write count it was built at — one tuple,
+        # so a reader racing a write never caches a stale view under a
+        # fresh tag
+        self._schema: StructType | None = None
+        self._writes = 0
+        self._view_cache: tuple[int, DataFrame] | None = None
+        # spilled tier: the view over the live manifest's leaves
         self._df: DataFrame | None = None
         self._gen = 0
         # manifest: bucket -> leaf path RELATIVE to spill_root
@@ -121,6 +151,7 @@ class ModelStore:
             int,
             tuple[
                 dict,
+                StructType | None,
                 DataFrame | None,
                 bool,
                 dict[int, str] | None,
@@ -223,8 +254,6 @@ class ModelStore:
         (every key deleted) reconstructs an empty frame from the
         manifest's recorded leaf schema — there are no leaves to scan."""
         if not self._manifest:
-            from pyspark.sql.types import StructType
-
             schema = StructType.fromJson(json.loads(self._leaf_schema_json))
             return self.spark.createDataFrame([], schema).withColumn(
                 "spill_bucket", self._bucket_expr()
@@ -244,12 +273,12 @@ class ModelStore:
         copy per upsert batch."""
         if self._spill_root is None:
             return
-        live_maps = [snap[3] for snap in self._snapshots.values() if snap[3]]
+        live_maps = [snap[4] for snap in self._snapshots.values() if snap[4]]
         if self._manifest:
             live_maps.append(self._manifest)
         live_leaves = {rel for m in live_maps for rel in m.values()}
         keep_nos = {self._manifest_no} | {
-            snap[4] for snap in self._snapshots.values()
+            snap[5] for snap in self._snapshots.values()
         }
         for name in fsutil.list_names(self.spark, self._spill_root):
             m = self._MANIFEST_RE.match(name)
@@ -356,8 +385,6 @@ class ModelStore:
             # ms-class Spark path must be observable, and a narrow
             # except keeps genuine programming errors loud instead of
             # permanently demoting the store (ADVICE r9).
-            import logging
-
             logging.getLogger(__name__).warning(
                 "ModelStore %s: pyarrow cannot read leaf %s (%s); point "
                 "lookups fall back to the Spark path for this leaf",
@@ -370,15 +397,30 @@ class ModelStore:
 
     # -- write path ------------------------------------------------------
 
-    def upsert_batch(self, batch: DataFrame, key_col: str = "key", ordinal_col: str | None = None) -> None:
+    def upsert_batch(
+        self,
+        batch: DataFrame | Mapping[str, Row],
+        key_col: str = "key",
+        ordinal_col: str | None = None,
+    ) -> None:
         """Merge a batch: latest row per key wins.
 
         If ``ordinal_col`` is given, within-batch duplicates resolve by
         max ordinal (source offset order); otherwise by an input-order
         ordinal we attach. The dedup is one shuffle on key over the
         *batch*, never over the full store (the store merge itself is a
-        dict update driver-side + union-dedup DataFrame-side).
+        dict update driver-side, or a touched-bucket rewrite when
+        spilled).
+
+        ``batch`` may also be a ``{key: Row}`` mapping whose rows are
+        already one per key and carry exactly the store's payload
+        fields (``key_col``/``ordinal_col`` do not apply). The dict tier
+        applies it as one ``dict.update``; a spilled store turns it into
+        a batch-scale DataFrame and merges it like any other batch.
         """
+        if isinstance(batch, Mapping):
+            self._upsert_rows(dict(batch))
+            return
         # reserved-name check up front, not at spill time: an unspilled
         # store must reject the FIRST offending batch before mutating
         # any state, or it accumulates rows that can never spill
@@ -400,38 +442,95 @@ class ModelStore:
         if self._spilled:
             self._merge_spilled(latest)
             return
-        rows = latest.collect()
-        for r in rows:
+        rows = {}
+        for r in latest.collect():
             d = r.asDict()
             k = d.pop("key")
-            self._dict[k] = Row(**d)
-        self._rebuild_df(latest.schema)
+            rows[k] = Row(**d)
+        self._update_dict(rows, latest.schema)
+
+    def _upsert_rows(self, rows: dict[str, Row]) -> None:
+        if not rows:
+            return
+        if self._spilled:
+            cols = self._cols
+        elif self._schema is not None:
+            cols = self._schema.names
+        else:
+            raise ValueError(
+                f"store {self.name!r} is empty: its first upsert must be a "
+                "DataFrame, which fixes the payload schema"
+            )
+        payload = {c for c in cols if c != "key"}
+        for k, r in rows.items():
+            if set(r.__fields__) != payload:
+                raise ValueError(
+                    f"store {self.name!r}: row for key {k!r} has fields "
+                    f"{sorted(r.__fields__)}, the store's payload is {sorted(payload)}"
+                )
+        if not self._spilled:
+            self._update_dict(rows, self._schema)
+            return
+        self._merge_spilled(
+            self.spark.createDataFrame(
+                [tuple(k if c == "key" else r[c] for c in cols) for k, r in rows.items()],
+                self.view().schema,
+            )
+        )
+
+    def _update_dict(self, rows: dict[str, Row], schema: StructType) -> None:
+        """Dict tier: apply one batch of winners. The view is NOT rebuilt
+        here — :meth:`view` builds it on demand."""
+        if self._schema is not None and set(schema.names) != set(self._schema.names):
+            # the view aligns rows to the newest schema BY NAME, so every
+            # row this batch does not overwrite must carry its fields
+            for k, v in self._dict.items():
+                if k in rows:
+                    continue
+                missing = [n for n in schema.names if n != "key" and n not in v.__fields__]
+                if missing:
+                    raise ValueError(
+                        f"store {self.name!r}: upsert batch schema adds "
+                        f"column(s) {missing} that rows written earlier lack"
+                    )
+        self._dict.update(rows)
+        self._schema = schema
+        self._writes += 1
         if self.max_dict_keys is not None and len(self._dict) > self.max_dict_keys:
             self._spill()
 
     def _spill(self) -> None:
         """Key count exceeded ``max_dict_keys``: drop the dict layer.
-        The just-rebuilt view already holds every key; persist it as
-        per-bucket parquet leaves + a manifest so point lookups read
-        one model-scale file and later upserts rewrite only touched
-        buckets (and, as a bonus over the earlier localCheckpoint
-        design, the spilled view survives executor loss — parquet is
-        durable)."""
+        Build the view once from the dict and persist it as per-bucket
+        parquet leaves + a manifest so point lookups read one
+        model-scale file and later upserts rewrite only touched buckets
+        (and, as a bonus over the earlier localCheckpoint design, the
+        spilled view survives executor loss — parquet is durable)."""
         if self._spill_root is None:
             self._spill_root = tempfile.mkdtemp(prefix=f"modelstore-{self.name}-")
-        cols = self._df.columns
+        n_keys = len(self._dict)
+        view = self._dict_view()
         self._gen += 1
-        leaves = self._write_leaves(self._df, self.spill_buckets)
-        self._install_manifest(leaves, cols)
+        leaves = self._write_leaves(view, self.spill_buckets)
+        self._install_manifest(leaves, view.columns)
         self._dict = {}
+        self._view_cache = None
         self._hot.clear()
         self._spilled = True
+        logging.getLogger(__name__).info(
+            "ModelStore %s: %d keys exceed max_dict_keys=%d; spilled to %d "
+            "bucket leaves under %s",
+            self.name, n_keys, self.max_dict_keys, len(leaves), self._spill_root,
+            extra={"event": "store_spill", "store": self.name, "keys": n_keys,
+                   "max_dict_keys": self.max_dict_keys, "leaves": len(leaves),
+                   "spill_dir": self._spill_root},
+        )
 
     def _merge_spilled(self, latest: DataFrame) -> None:
-        # same loud schema-drift guard as the dict path's _rebuild_df —
-        # BOTH directions: a batch that DROPS a column would lose data
-        # for old rows, and a batch that ADDS one would otherwise die
-        # inside unionByName with an opaque AnalysisException
+        # loud schema-drift guard — BOTH directions: a batch that DROPS
+        # a column would lose data for old rows, and a batch that ADDS
+        # one would otherwise die inside unionByName with an opaque
+        # AnalysisException
         dropped = [c for c in self._cols if c not in latest.columns]
         if dropped:
             raise ValueError(
@@ -496,10 +595,10 @@ class ModelStore:
         Accepts an iterable of keys or a batch-scale DataFrame carrying
         ``key_col``; returns how many of them existed.
 
-        In-memory: dict pops + view rebuild. Spilled: rewrites ONLY the
-        buckets the keys hash into (left_anti over their leaves) — the
-        same O(batch + touched buckets) cost shape as upsert_batch. A
-        bucket emptied by the delete leaves the new manifest entirely
+        In-memory: dict pops (the view is rebuilt on its next use).
+        Spilled: rewrites ONLY the buckets the keys hash into
+        (left_anti over their leaves) — the same O(batch + touched
+        buckets) cost shape as upsert_batch. A bucket emptied by the delete leaves the new manifest entirely
         (absence of a bucket IS its tombstone; lookups in it are miss
         by construction), untouched leaves are shared byte-identically.
         Snapshots taken before the delete keep serving the deleted
@@ -512,8 +611,8 @@ class ModelStore:
             return 0
         if not self._spilled:
             n = sum(1 for k in key_list if self._dict.pop(k, None) is not None)
-            if n and self._df is not None:
-                self._rebuild_df(self._df.schema)
+            if n:
+                self._writes += 1
             return n
         by_bucket: dict[int, list[str]] = {}
         for k in key_list:
@@ -550,26 +649,17 @@ class ModelStore:
                 del self._hot[k]
         return n_existed
 
-    def _rebuild_df(self, schema) -> None:
-        # align EVERY accumulated row to the CURRENT schema BY NAME:
-        # createDataFrame maps Row objects positionally, so a later
-        # upsert batch with the same columns in a different order would
-        # silently swap same-typed fields (id <-> kind) for every
-        # pre-existing key; a missing field is a loud error instead
-        field_names = [f.name for f in schema.fields]
-
-        def aligned(k: str, v: Row) -> tuple:
-            d = {"key": k, **v.asDict()}
-            missing = [n for n in field_names if n not in d]
-            if missing:
-                raise ValueError(
-                    f"store {self.name!r}: upsert batch schema drops "
-                    f"column(s) {missing} that earlier batches carried"
-                )
-            return tuple(d[n] for n in field_names)
-
-        rows = [aligned(k, v) for k, v in self._dict.items()]
-        self._df = self.spark.createDataFrame(rows, schema=schema)
+    def _dict_view(self) -> DataFrame:
+        # align EVERY row to the CURRENT schema BY NAME: createDataFrame
+        # maps Row objects positionally, so a later upsert batch with the
+        # same columns in a different order would silently swap
+        # same-typed fields (id <-> kind) for every pre-existing key
+        names = self._schema.names
+        rows = [
+            tuple(d[n] for n in names)
+            for d in ({"key": k, **v.asDict()} for k, v in list(self._dict.items()))
+        ]
+        return self.spark.createDataFrame(rows, schema=self._schema)
 
     # -- read path -------------------------------------------------------
 
@@ -585,60 +675,88 @@ class ModelStore:
         if self.hot_cache_keys and key in self._hot:
             self._hot.move_to_end(key)
             return self._hot[key]
-        row = self._lookup_leaf(key)
+        rel = self._manifest.get(self._bucket_of(key))
+        # no leaf: no key ever hashed into this bucket
+        row = None if rel is None else self._read_leaf(rel, [key]).get(key)
         if self.hot_cache_keys:
             self._hot[key] = row
             if len(self._hot) > self.hot_cache_keys:
                 self._hot.popitem(last=False)
         return row
 
-    def _lookup_leaf(self, key: str) -> Optional[Row]:
-        rel = self._manifest.get(self._bucket_of(key))
-        if rel is None:
-            return None  # no key ever hashed into this bucket
+    def lookup_many(self, keys: Iterable[str]) -> dict[str, Row]:
+        """Batch point query: ``{key: Row}`` for the keys present
+        (misses are absent), the same Rows :meth:`lookup` returns.
+        Dict tier: dict gets. Spilled: hot-tier entries are served as
+        they stand (read through, not filled, so a batch-scale fetch
+        does not evict the serving head; upserts already evict every
+        entry of a bucket they rewrite), the rest cost ONE read per
+        touched bucket leaf — a pyarrow ``isin`` filter, with a
+        leaf-scoped Spark filter as the fallback."""
+        if not self._spilled:
+            d = self._dict
+            return {k: row for k in keys if (row := d.get(k)) is not None}
+        out: dict[str, Row] = {}
+        by_bucket: dict[int, list[str]] = {}
+        for k in dict.fromkeys(keys):
+            hit = self._hot.get(k, _ABSENT) if self.hot_cache_keys else _ABSENT
+            if hit is _ABSENT:
+                by_bucket.setdefault(self._bucket_of(k), []).append(k)
+            elif hit is not None:
+                out[k] = hit
+        for b, ks in by_bucket.items():
+            rel = self._manifest.get(b)
+            if rel is not None:
+                out.update(self._read_leaf(rel, ks))
+        return out
+
+    def _read_leaf(self, rel: str, keys: list[str]) -> dict[str, Row]:
+        """``{key: Row}`` for the ``keys`` found in one leaf."""
         leaf = self._leaf_abs(rel)
         dataset = self._arrow_dataset(leaf)
         if dataset is not None:
             import pyarrow.dataset as ds
 
-            tbl = dataset.to_table(filter=ds.field("key") == key)
-            if tbl.num_rows == 0:
-                return None
-            if tbl.num_rows > 1:
-                # the merge path guarantees one row per key; >1 means a
+            recs = dataset.to_table(filter=ds.field("key").isin(keys)).to_pylist()
+        else:
+            recs = [
+                r.asDict()
+                for r in self.spark.read.parquet(leaf)
+                .where(F.col("key").isin(keys))
+                .collect()
+            ]
+        out: dict[str, Row] = {}
+        for d in recs:
+            k = d.pop("key")
+            if k in out:
+                # the merge path guarantees one row per key; more means a
                 # corrupted or externally-written leaf — fail loud
                 # instead of serving an arbitrary row
                 raise ValueError(
-                    f"store {self.name!r}: leaf {leaf!r} holds "
-                    f"{tbl.num_rows} rows for key {key!r}; expected exactly 1"
+                    f"store {self.name!r}: leaf {leaf!r} holds more than "
+                    f"one row for key {k!r}; expected exactly 1"
                 )
-            d = {
-                c: tbl.column(c)[0].as_py()
-                for c in tbl.column_names
-                if c != "key"
-            }
-            return Row(**d)
-        rows = (
-            self.spark.read.parquet(leaf)
-            .where(F.col("key") == key)
-            .limit(1)
-            .collect()
-        )
-        if not rows:
-            return None
-        d = rows[0].asDict()
-        d.pop("key")
-        return Row(**d)
+            out[k] = Row(**d)
+        return out
 
     def view(self) -> DataFrame:
         """The latest-per-key DataFrame — the join side for batch work.
         Spilled stores hide the internal ``spill_bucket`` partition column
-        and preserve the pre-spill column order."""
-        if self._df is None:
-            raise ValueError(f"store {self.name!r} is empty")
+        and preserve the pre-spill column order. A dict-backed store
+        builds it from the dict on the first call after a write (an
+        O(store) ``createDataFrame``) and returns the cached frame until
+        the next write."""
         if self._spilled:
             return self._df.select(*self._cols)
-        return self._df
+        if self._schema is None:
+            raise ValueError(f"store {self.name!r} is empty")
+        cached = self._view_cache
+        if cached is not None and cached[0] == self._writes:
+            return cached[1]
+        at = self._writes  # read BEFORE the dict: a racing write re-tags
+        df = self._dict_view()
+        self._view_cache = (at, df)
+        return df
 
     def keys(self) -> list[str]:
         """Model-scale by contract — collects from the view when
@@ -665,6 +783,7 @@ class ModelStore:
         self._next_version += 1
         self._snapshots[v] = (
             dict(self._dict),
+            self._schema,
             self._df,
             self._spilled,
             dict(self._manifest) if self._manifest is not None else None,
@@ -680,8 +799,10 @@ class ModelStore:
         snapshot returns the store to dict-backed lookups."""
         if version not in self._snapshots:
             raise KeyError(f"no snapshot {version} in store {self.name!r}")
-        d, df, spilled, manifest, manifest_no, cols = self._snapshots[version]
+        d, schema, df, spilled, manifest, manifest_no, cols = self._snapshots[version]
         self._dict = dict(d)
+        self._schema = schema
+        self._writes += 1  # the dict-tier view is rebuilt on next use
         self._df = df
         self._spilled = spilled
         # a held snapshot pins its manifest's leaves against GC, so

@@ -6,11 +6,11 @@ queryable ValueState (ALSKafkaConsumer.java:67-92). Spark-first that
 becomes: file/kafka stream source → parse (same codecs as batch) →
 ``foreachBatch`` latest-per-key merge into the ModelStore, with a
 checkpoint location for exactly-once state progression. The online-SGD
-job (SGD.java:49-85) becomes the same loop with an sgd_step between
-parse and merge — the per-record state RPCs of the reference are
-replaced by a stream-static join per micro-batch (X4 → join; the
-reference is itself eventually consistent through its Kafka loop, so
-semantics align at batch boundaries).
+job (SGD.java:49-85) becomes the same loop with an SGD step between
+parse and merge — the per-record state RPCs of the reference become
+one batched read of the rows a micro-batch touches and one batched
+write of its winners (the reference is itself eventually consistent
+through its Kafka loop, so semantics align at batch boundaries).
 
 File source is used in tests (no Kafka broker in this environment);
 ``source='kafka'`` wires the same pipeline to a broker when present.
@@ -20,11 +20,11 @@ default interval maps to the processing-time trigger.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from flink_ms_spark.functions.codecs import parse_model_line
-from flink_ms_spark.operators.sgd import sgd_step
+from flink_ms_spark.operators.sgd import sgd_step_local
 from flink_ms_spark.serving.store import ModelStore, apply_cdc_batch
 from flink_ms_spark.sources.text import parse_rating_lines
 
@@ -121,38 +121,57 @@ def run_online_sgd_stream(
     sep: str = "\t",
     available_now: bool = True,
 ):
-    """Online SGD (M6): rating stream → per-micro-batch
-    model-join update → merge back into the serving store.
+    """Online SGD (M6): rating stream → per-micro-batch update of the
+    touched model rows → merge back into the serving store.
 
-    Every batch reads the CURRENT store view (stream-static join
-    against the latest snapshot), applies one simultaneous-update step
-    and merges last-write-wins — the Spark-native shape of the
-    reference's read-state/update/write-Kafka loop (SGD.java:160-234).
-    Mean-vector cold-start rows (MEAN-U/MEAN-I) are honored when
-    present in the store (M7).
+    Each micro-batch is collected ONCE to the driver, which fetches only
+    the ``<user>-U`` / ``<item>-I`` rows it touches plus ``MEAN-U`` /
+    ``MEAN-I`` (:meth:`ModelStore.lookup_many`), applies one
+    simultaneous-update step with the numpy kernel
+    :func:`~flink_ms_spark.operators.sgd.sgd_step_local` (bit-identical
+    to ``sgd_step`` on well-formed factors) and upserts the winners as one ``{key: Row}``
+    batch — the Spark-native shape of the reference's
+    read-state/update/write-Kafka loop (SGD.java:160-234). Work and
+    driver memory per batch are bounded by one micro-batch plus its
+    touched rows, never by the store, on both store tiers. Mean-vector
+    cold-start rows (MEAN-U/MEAN-I) are honored when present (M7); the
+    MEAN rows themselves are never updated. Lines whose user, item or
+    rating does not parse are dropped at the source.
     """
     lines = spark.readStream.text(ratings_path)
-    ratings = parse_rating_lines(lines, sep=sep).where(F.col("user_id").isNotNull())
+    ratings = parse_rating_lines(lines, sep=sep).where(
+        F.col("user_id").isNotNull()
+        & F.col("item_id").isNotNull()
+        & F.col("rating").isNotNull()
+    )
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
+        rows = batch_df.collect()
+        if not rows:
             return
-        model = store.view().select("id", "kind", "factors")
-        mean_u = model.where((F.col("id") == "MEAN") & (F.col("kind") == "U")).select("factors")
-        mean_i = model.where((F.col("id") == "MEAN") & (F.col("kind") == "I")).select("factors")
-        updates = sgd_step(
-            batch_df,
-            model.where(F.col("id") != "MEAN"),
-            user_mean=mean_u if mean_u.take(1) else None,
-            item_mean=mean_i if mean_i.take(1) else None,
+        users = {str(r.user_id) for r in rows}
+        items = {str(r.item_id) for r in rows}
+        found = store.lookup_many(
+            [f"{u}-U" for u in users] + [f"{i}-I" for i in items] + ["MEAN-U", "MEAN-I"]
+        )
+
+        def factors(key: str):
+            row = found.get(key)
+            return None if row is None else row.factors
+
+        updates = sgd_step_local(
+            rows,
+            {u: factors(f"{u}-U") for u in users},
+            {i: factors(f"{i}-I") for i in items},
+            user_mean=factors("MEAN-U"),
+            item_mean=factors("MEAN-I"),
             learning_rate=learning_rate,
             user_reg=user_reg,
             item_reg=item_reg,
         )
-        kv = updates.select(
-            F.concat_ws("-", "id", "kind").alias("key"), "id", "kind", "factors"
+        store.upsert_batch(
+            {f"{id_}-{kind}": Row(id=id_, kind=kind, factors=f) for id_, kind, f in updates}
         )
-        store.upsert_batch(kv)
 
     writer = ratings.writeStream.foreachBatch(step).option(
         "checkpointLocation", checkpoint_dir

@@ -288,21 +288,28 @@ def test_partitioned_write_prunes_at_listing_time(spark, tmp_path):
     # files_per_partition must FAN OUT the write (the salt spreads
     # each value over up to k reducers), never funnel it: with k=4 the
     # total file count across the 4 values exceeds one-per-value, and
-    # no directory exceeds k files. AQE's partition coalescing re-merges
-    # this TINY shuffle into few tasks (correct at this size — the salt
-    # matters when partitions are big enough to survive coalescing), so
-    # pin the mechanism with coalescing off.
-    out4 = str(tmp_path / "part4")
+    # no directory exceeds k files, whatever the input partitioning (a
+    # salt that tracked the row's position in its input partition would
+    # equal ``id % 4`` at 2,500-row partitions and collapse each value
+    # to one file). AQE's partition coalescing re-merges this TINY
+    # shuffle into few tasks (correct at this size — the salt matters
+    # when partitions are big enough to survive coalescing), so pin the
+    # mechanism with coalescing off.
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try:
-        partitioned_write(df, out4, ["lang"], files_per_partition=4)
+        for n_parts in (None, 4, 32):  # None: the session's default
+            df_n = spark.range(10_000, numPartitions=n_parts).select(
+                F.col("id"), (F.col("id") % 4).cast("string").alias("lang")
+            )
+            out4 = str(tmp_path / f"part4-{n_parts}")
+            partitioned_write(df_n, out4, ["lang"], files_per_partition=4)
+            per_dir = [len(glob.glob(f"{out4}/lang={v}/*.parquet")) for v in range(4)]
+            assert all(1 <= n <= 4 for n in per_dir), (n_parts, per_dir)
+            assert sum(per_dir) > 4, (n_parts, per_dir)
+            back = spark.read.parquet(out4)
+            assert back.count() == 10_000 and back.where("lang = '2'").count() == 2500
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    per_dir = [len(glob.glob(f"{out4}/lang={v}/*.parquet")) for v in range(4)]
-    assert all(1 <= n <= 4 for n in per_dir), per_dir
-    assert sum(per_dir) > 4, per_dir
-    back = spark.read.parquet(out4)
-    assert back.count() == 10_000 and back.where("lang = '2'").count() == 2500
 
     scan = spark.read.parquet(out).filter(F.col("lang") == "2")
     plan = scan._jdf.queryExecution().executedPlan().toString()

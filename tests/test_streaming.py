@@ -558,7 +558,7 @@ def test_streaming_exact_dedup_first_seen_wins(spark, tmp_path):
 
 def test_online_sgd_stream_converges_over_batches(spark, tmp_path):
     """The streaming learning loop end-to-end: each micro-batch's
-    stream-static join + sgd_step merge must reduce the served model's
+    touched-row SGD update + merge must reduce the served model's
     MSE on the observed ratings (reference SGD.java's purpose)."""
     from flink_ms_spark.operators.evaluate import mse
     from flink_ms_spark.serving.store import ModelStore
