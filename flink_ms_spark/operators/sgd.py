@@ -12,7 +12,10 @@ Reference semantics (SGD.java:160-234), adopted exactly:
 - cold-start fallback: missing user/item factors ⇒ mean vector
   (MEAN-U / MEAN-I; SGD.java:140-151,219-234) — left join + coalesce.
 - NaN guard: drop update rows containing NaN (SGDV0.java:206-226
-  behavior, adopted per SURVEY.md M9).
+  behavior, adopted per SURVEY.md M9). A rating that would write nulls
+  is dropped before the update: a null rating, a null factor element,
+  or user and item vectors of different lengths (a malformed model
+  line parsed with try_cast gives the last two).
 - one input produces two output rows (user row + item row) — T7's
   double-collect, expressed as explode of a 2-struct array.
 
@@ -35,14 +38,11 @@ Two implementations of that one step:
   the model. It performs ``sgd_step``'s operations in the same order on
   IEEE doubles (the dot product is a left-to-right fold from 0.0, one
   factor column at a time; no ``np.dot``/``sum``, whose summation
-  order differs), so on well-formed factors its output equals
-  ``sgd_step``'s bit for bit — a test pins the two equal, and
-  ``sgd_step`` stays the reference. The two differ on malformed factors
-  (a null element, or user and item vectors of different lengths, as a
-  bad model line parsed with try_cast gives): ``sgd_step`` propagates
-  the null through the dot product and writes all-null vectors for both
-  keys, since its NaN guard ignores nulls; the kernel drops that
-  rating's two rows and keeps the keys' earlier values.
+  order differs), so its output equals ``sgd_step``'s bit for bit,
+  malformed ratings and factors included — a test pins the two equal,
+  and ``sgd_step`` stays the reference. The one difference: ``sgd_step``
+  updates kept ratings of different ranks side by side, where the kernel
+  raises ValueError.
 """
 
 from __future__ import annotations
@@ -109,8 +109,18 @@ def sgd_step(
         joined = joined.crossJoin(im).withColumn("i", F.coalesce("i", "im")).drop("im")
     # Hard error parity: reference aborts when factors are missing and no
     # mean is available (SGD.java:147-151) — here those rows are dropped
-    # and counted by the caller if needed.
-    joined = joined.where(F.col("u").isNotNull() & F.col("i").isNotNull())
+    # and counted by the caller if needed. A null rating or factor
+    # element would turn every updated factor null, which the NaN guard
+    # below does not see, and zip_with pads vectors of different ranks
+    # with nulls: such ratings are dropped too.
+    joined = joined.where(
+        F.col("u").isNotNull()
+        & F.col("i").isNotNull()
+        & F.col("rating").isNotNull()
+        & (F.size("u") == F.size("i"))
+        & ~F.exists("u", lambda x: x.isNull())
+        & ~F.exists("i", lambda x: x.isNull())
+    )
 
     e = (F.col("rating") - dot("u", "i")).alias("e")
     joined = joined.withColumn("e", e)
@@ -162,21 +172,22 @@ def sgd_step_local(
 ) -> list[tuple[str, str, list[float]]]:
     """:func:`sgd_step` (simultaneous form) on driver-local data.
 
-    ``ratings``: ``(user_id, item_id, rating)`` triples in input order,
-    none of them null. ``users``/``items``: factors by id (``str`` of
+    ``ratings``: ``(user_id, item_id, rating)`` triples in input order;
+    user and item ids are not null. ``users``/``items``: factors by id (``str`` of
     the rating's id, as ``sgd_step`` casts it); a missing id or a None
     value falls back to ``user_mean``/``item_mean``, and a rating with
     neither is dropped. Returns ``(id, kind, factors)`` rows, one per
     key: the last rating in input order whose row passed the NaN guard
     wins.
 
-    Unlike ``sgd_step``, a null factor element counts as NaN, so the
-    guard drops that rating's rows, and a rating whose user and item
-    vectors differ in length is dropped (``sgd_step`` writes all-null
-    vectors for both keys in either case). Raises ValueError when the
-    kept ratings do not all share one rank."""
+    As in ``sgd_step``, a rating is dropped when it is null, when a
+    factor element is null (it counts as NaN, so the guard drops both
+    rows) or when its user and item vectors differ in length. Raises
+    ValueError when the kept ratings do not all share one rank."""
     uids, iids, rs, us, its = [], [], [], [], []
     for user_id, item_id, rating in ratings:
+        if rating is None:
+            continue
         uid, iid = str(user_id), str(item_id)
         u = users.get(uid)
         i = items.get(iid)

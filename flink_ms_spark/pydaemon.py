@@ -30,7 +30,8 @@ Wiring: ``spark.python.daemon.module=flink_ms_spark.pydaemon``
 (session.py). The patch is belt-and-braces guarded: if anything about
 the pyspark internals it touches has drifted, it leaves the stock
 implementation in place and the daemon starts unpatched (slow but
-correct).
+correct), logging one WARNING with ``event="pydaemon_unpatched"`` on
+the ``flink_ms_spark.pydaemon`` logger.
 
 Protocol note: the reimplementation below reads the exact same wire
 fields as pyspark 4.1's ``setup_spark_files`` (files-dir string,
@@ -39,6 +40,8 @@ installed pyspark's ``worker_util.setup_spark_files``.
 """
 
 from __future__ import annotations
+
+import logging
 
 
 def _patch() -> None:
@@ -83,8 +86,13 @@ def _patch() -> None:
 
 try:  # never let the patch kill the daemon — unpatched is slow, not wrong
     _patch()
-except Exception:  # pragma: no cover - version-drift fallback
-    pass
+except Exception as exc:  # version-drift fallback
+    # named explicitly: the daemon runs this module as __main__
+    logging.getLogger("flink_ms_spark.pydaemon").warning(
+        "pydaemon: worker patch not applied, Python tasks run the stock "
+        "per-task import-cache purge (%r)", exc,
+        exc_info=exc, extra={"event": "pydaemon_unpatched"},
+    )
 
 
 if __name__ == "__main__":

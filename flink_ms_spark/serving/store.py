@@ -76,6 +76,7 @@ import tempfile
 import zlib
 from collections import OrderedDict
 from collections.abc import Iterable, Mapping
+from contextlib import suppress
 from typing import Optional
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -111,9 +112,11 @@ class ModelStore:
         # Misses are cached too (a miss costs the same leaf read).
         # Coherence: upserts evict every cached entry in a TOUCHED
         # bucket (driver knows each key's bucket), rollback/recovery
-        # clear. 0 disables.
+        # clear. 0 disables. Lookups may run on another thread (the
+        # serving loop) than writes, see _evict_hot.
         self.hot_cache_keys = hot_cache_keys
         self._hot: OrderedDict[str, Optional[Row]] = OrderedDict()
+        self._hot_epoch = 0  # bumped by every hot-tier eviction
         # on a cluster point spill_dir at shared storage (HDFS/S3) so
         # the spilled view survives driver restarts: the constructor
         # scans for the newest COMPLETE generation (a `_SUCCESS`-marked
@@ -513,10 +516,12 @@ class ModelStore:
         self._gen += 1
         leaves = self._write_leaves(view, self.spill_buckets)
         self._install_manifest(leaves, view.columns)
+        # flip the tier before dropping the dict, so a concurrent lookup
+        # reads one tier or the other, never an empty dict
+        self._spilled = True
         self._dict = {}
         self._view_cache = None
-        self._hot.clear()
-        self._spilled = True
+        self._evict_hot(None)
         logging.getLogger(__name__).info(
             "ModelStore %s: %d keys exceed max_dict_keys=%d; spilled to %d "
             "bucket leaves under %s",
@@ -579,13 +584,24 @@ class ModelStore:
         finally:
             latest.unpersist()
         self._install_manifest({**self._manifest, **new_leaves}, self._cols)
-        # hot-tier coherence at bucket granularity: any cached entry
-        # (hit or miss sentinel) whose key hashes into a rewritten
-        # bucket may be stale now; untouched buckets' entries stay warm
-        if self._hot:
-            touched_set = set(touched)
-            for k in [k for k in self._hot if self._bucket_of(k) in touched_set]:
-                del self._hot[k]
+        self._evict_hot(set(touched))
+
+    def _evict_hot(self, buckets: set[int] | None) -> None:
+        """Hot-tier coherence at bucket granularity, called after a new
+        manifest is installed: any cached entry (hit or miss sentinel)
+        whose key hashes into a rewritten bucket may be stale now
+        (``buckets=None``: every entry); untouched buckets' entries stay
+        warm. Lookups may run concurrently on another thread and insert
+        or LRU-pop entries, so this iterates a snapshot and tolerates
+        keys already gone; the epoch bump tells a lookup that read a
+        leaf before the rewrite not to cache what it read."""
+        self._hot_epoch += 1
+        if buckets is None:
+            self._hot.clear()
+            return
+        for k in list(self._hot):
+            if self._bucket_of(k) in buckets:
+                self._hot.pop(k, None)
 
     def delete_keys(self, keys, key_col: str = "key") -> int:
         """CDC tombstones — the delete arm of a MERGE change feed (the
@@ -643,10 +659,7 @@ class ModelStore:
         }
         new_map.update(new_leaves)
         self._install_manifest(new_map, self._cols)
-        if self._hot:
-            touched_set = set(touched)
-            for k in [k for k in self._hot if self._bucket_of(k) in touched_set]:
-                del self._hot[k]
+        self._evict_hot(set(touched))
         return n_existed
 
     def _dict_view(self) -> DataFrame:
@@ -672,16 +685,26 @@ class ModelStore:
         ms-class latency the reference's network lookup already pays."""
         if not self._spilled:
             return self._dict.get(key)
-        if self.hot_cache_keys and key in self._hot:
-            self._hot.move_to_end(key)
-            return self._hot[key]
+        # one read of the hot tier: a writer thread may evict the key
+        # between any two operations on it
+        hit = self._hot.get(key, _ABSENT) if self.hot_cache_keys else _ABSENT
+        if hit is not _ABSENT:
+            with suppress(KeyError):  # evicted since the get
+                self._hot.move_to_end(key)
+            return hit
+        epoch = self._hot_epoch
         rel = self._manifest.get(self._bucket_of(key))
         # no leaf: no key ever hashed into this bucket
         row = None if rel is None else self._read_leaf(rel, [key]).get(key)
         if self.hot_cache_keys:
             self._hot[key] = row
-            if len(self._hot) > self.hot_cache_keys:
-                self._hot.popitem(last=False)
+            if self._hot_epoch != epoch:
+                # buckets were rewritten while the leaf was read, so the
+                # row may be stale: answer with it, but do not keep it
+                self._hot.pop(key, None)
+            elif len(self._hot) > self.hot_cache_keys:
+                with suppress(KeyError):  # emptied by a concurrent clear
+                    self._hot.popitem(last=False)
         return row
 
     def lookup_many(self, keys: Iterable[str]) -> dict[str, Row]:
@@ -810,7 +833,7 @@ class ModelStore:
         self._manifest = dict(manifest) if manifest is not None else None
         self._manifest_no = manifest_no
         self._cols = cols
-        self._hot.clear()  # cached rows belong to the rolled-away state
+        self._evict_hot(None)  # cached rows belong to the rolled-away state
 
     def release_snapshot(self, version: int) -> None:
         """Drop a snapshot; any generation it alone was pinning is

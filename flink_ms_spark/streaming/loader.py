@@ -129,7 +129,7 @@ def run_online_sgd_stream(
     ``MEAN-I`` (:meth:`ModelStore.lookup_many`), applies one
     simultaneous-update step with the numpy kernel
     :func:`~flink_ms_spark.operators.sgd.sgd_step_local` (bit-identical
-    to ``sgd_step`` on well-formed factors) and upserts the winners as one ``{key: Row}``
+    to ``sgd_step``) and upserts the winners as one ``{key: Row}``
     batch — the Spark-native shape of the reference's
     read-state/update/write-Kafka loop (SGD.java:160-234). Work and
     driver memory per batch are bounded by one micro-batch plus its

@@ -57,12 +57,15 @@ def _case(name: str):
         items["20"] = [1.0] * rank
         return [(1, 10, 3.0), (5, 10, 4.0), (6, 20, 1.0), (2, 11, 5.0)], users, items, None, None, 0.0, 0.0
     if name == "malformed":
-        # a null element (user 7) and user/item vectors of different
-        # ranks (user 8, item 22): sgd_step writes all-null vectors for
-        # both keys of each such rating, the kernel drops both rows
+        # a null element (user 7), user/item vectors of different ranks
+        # (user 8, item 22) and a null rating (user 1, item 23): each of
+        # these ratings is dropped, so its keys get no row
         users = {**users, "7": [None] + [1.0] * (rank - 1), "8": [1.0] * (rank - 1)}
-        items = {**items, "21": [1.0] * rank, "22": [1.0] * rank}
-        return ratings[:6] + [(7, 21, 3.0), (8, 22, 2.0)], users, items, None, None, 0.0, 0.0
+        items = {**items, "21": [1.0] * rank, "22": [1.0] * rank, "23": [1.0] * rank}
+        cases = [(7, 21, 3.0), (8, 22, 2.0), (1, 23, None)]
+        return ratings[:6] + cases, users, items, None, None, 0.0, 0.0
+    if name == "null_rating":
+        return [(1, 10, None)], users, items, None, None, 0.0, 0.0
     if name == "regularised":
         return ratings, users, items, mean_u, mean_i, 0.03, 0.07
     raise AssertionError(name)
@@ -70,7 +73,8 @@ def _case(name: str):
 
 @pytest.mark.parametrize(
     "case",
-    ["repeats", "cold_from_mean", "cold_without_mean", "nan_factor", "malformed", "regularised"],
+    ["repeats", "cold_from_mean", "cold_without_mean", "nan_factor", "malformed",
+     "null_rating", "regularised"],
 )
 def test_sgd_step_local_equals_sgd_step_bit_for_bit(spark, case):
     ratings, users, items, mean_u, mean_i, lu, li = _case(case)
@@ -97,11 +101,19 @@ def test_sgd_step_local_equals_sgd_step_bit_for_bit(spark, case):
     )
     got = {(id_, kind): f for id_, kind, f in got_rows}
     assert len(got) == len(got_rows)  # one row per key
-    if case == "malformed":  # the documented difference
-        poisoned = {("7", "U"), ("21", "I"), ("8", "U"), ("22", "I")}
-        assert all(all(x is None for x in want.pop(k)) for k in poisoned)
-        assert not poisoned & set(got)
     assert got == want
+    if case == "malformed":
+        dropped = {("7", "U"), ("21", "I"), ("8", "U"), ("22", "I"), ("23", "I")}
+        assert not dropped & set(got)
+        # the sequential form drops the same ratings
+        seq = sgd_step(
+            spark.createDataFrame(ratings, RATINGS_SCHEMA), model,
+            learning_rate=eta, sequential=True,
+        ).collect()
+        assert not dropped & {(r.id, r.kind) for r in seq}
+        assert all(None not in r.factors for r in seq)
+    if case == "null_rating":
+        assert got == {}
     if case == "cold_without_mean":
         assert ("99", "U") not in got and ("77", "I") not in got
     if case == "cold_from_mean":

@@ -55,3 +55,26 @@ def test_add_py_file_visible_in_warm_workers(spark):
         r.v for r in spark.range(0, 32, 1, 4).mapInPandas(use, "v long").collect()
     }
     assert vals == {31337}
+
+
+def test_unpatched_fallback_logs_one_warning(monkeypatch, caplog):
+    """When the pyspark internals the patch touches have drifted, the
+    daemon starts unpatched and says so once."""
+    import importlib
+    import logging
+    import sys
+
+    # the patch's import of pyspark.worker_util now raises ImportError
+    monkeypatch.setitem(sys.modules, "pyspark.worker_util", None)
+    caplog.set_level(logging.WARNING, logger="flink_ms_spark.pydaemon")
+    mod = sys.modules.get("flink_ms_spark.pydaemon")
+    if mod is None:
+        importlib.import_module("flink_ms_spark.pydaemon")
+    else:
+        importlib.reload(mod)
+    records = [r for r in caplog.records if getattr(r, "event", None) == "pydaemon_unpatched"]
+    assert len(records) == 1
+    (rec,) = records
+    assert rec.name == "flink_ms_spark.pydaemon"
+    assert rec.levelno == logging.WARNING
+    assert rec.exc_info is not None and issubclass(rec.exc_info[0], ImportError)

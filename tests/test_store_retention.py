@@ -415,3 +415,88 @@ def test_hot_tier_semantics_and_coherence(spark, tmp_path):
     assert not store._hot
     assert store.lookup("k7").x == 7.0 and store.lookup("ghost") is None
     store.release_snapshot(v)
+
+
+def test_hot_tier_lookups_interleaved_with_upserts(spark, tmp_path, monkeypatch):
+    """The serving loop looks keys up while the stream's upsert rewrites
+    buckets. Two interleavings, made deterministic by wrapping the
+    store's own methods: (1) a lookup inside the upsert's hot-tier
+    eviction (through ``_bucket_of``, which the eviction calls per
+    cached key) inserts a key and LRU-pops the oldest — the upsert must
+    complete; (2) an upsert while a lookup reads its leaf — the lookup
+    may answer with the row it read, but must not cache it."""
+    store = ModelStore(
+        spark, "RACE", max_dict_keys=1, spill_buckets=8,
+        spill_dir=str(tmp_path / "spill"), hot_cache_keys=3,
+    )
+    store.upsert_batch(_mk_batch(spark, [(f"k{i}", float(i)) for i in range(32)]))
+    for k in ("k0", "k1", "k2"):  # k0 is the LRU entry
+        store.lookup(k)
+
+    bucket_of = store._bucket_of
+    armed = [True]
+
+    def lookup_inside_eviction(key):
+        if armed[0]:
+            armed[0] = False
+            store.lookup("k3")  # inserts k3, pops k0
+        return bucket_of(key)
+
+    monkeypatch.setattr(store, "_bucket_of", lookup_inside_eviction)
+    store.upsert_batch(_mk_batch(spark, [("k0", 100.0)]))
+    assert not armed[0]  # the interleaving happened
+    assert store.lookup("k0").x == 100.0
+
+    read_leaf = store._read_leaf
+
+    def upsert_during_read(rel, keys):
+        rows = read_leaf(rel, keys)  # the row before the upsert
+        monkeypatch.setattr(store, "_read_leaf", read_leaf)
+        store.upsert_batch(_mk_batch(spark, [("k5", 500.0)]))
+        return rows
+
+    monkeypatch.setattr(store, "_read_leaf", upsert_during_read)
+    assert store.lookup("k5").x == 5.0  # answered with what it read
+    assert store.lookup("k5").x == 500.0  # not served stale from the cache
+
+
+def test_hot_tier_stress_lookups_during_upserts(spark, tmp_path):
+    """Lookups on one thread (as the serving loop runs them) while
+    upserts rewrite buckets on another, with a very short thread switch
+    interval: no lookup raises, and afterwards every key serves its
+    latest value (a stale row left in the hot tier would show here)."""
+    import sys
+    import threading
+
+    keys = [f"k{i}" for i in range(40)]
+    store = ModelStore(
+        spark, "STRESS", max_dict_keys=1, spill_buckets=8,
+        spill_dir=str(tmp_path / "spill"), hot_cache_keys=16,
+    )
+    store.upsert_batch(_mk_batch(spark, [(k, 0.0) for k in keys]))
+    errors: list[BaseException] = []
+    done = threading.Event()
+
+    def reader():
+        try:
+            while not done.is_set():
+                for k in keys:
+                    store.lookup(k)
+        except BaseException as exc:  # reported by the assertion below
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    t = threading.Thread(target=reader, daemon=True)
+    t.start()
+    try:
+        for v in (1.0, 2.0, 3.0):
+            store.upsert_batch(_mk_batch(spark, [(k, v) for k in keys[::2]]))
+    finally:
+        done.set()
+        t.join(timeout=30)
+        sys.setswitchinterval(interval)
+    assert not t.is_alive()
+    assert not errors, errors
+    for n, k in enumerate(keys):
+        assert store.lookup(k).x == (3.0 if n % 2 == 0 else 0.0), k
