@@ -16,6 +16,8 @@ small-star alternation, which converges in O(log n) rounds
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -163,6 +165,12 @@ def connected_components_bipartite(
     )
     sample = grouped.limit(local_threshold + 1).collect()
     if len(sample) <= local_threshold:
+        logging.getLogger(__name__).info(
+            "connected components: %d multi-member groups <= local_threshold=%d; "
+            "solved with driver-local union-find", len(sample), local_threshold,
+            extra={"event": "cc_local_solve", "groups": len(sample),
+                   "local_threshold": local_threshold},
+        )
         rows = [(n, r[group_col]) for r in sample for n in r["_nodes"]]
         out_schema = membership.select(
             F.col(node_col).alias("node"), F.col(node_col).alias("component")

@@ -27,11 +27,13 @@ list changes — Spark itself refuses to re-add a file under an existing
 name, so this path is unreachable through the public API.
 
 Wiring: ``spark.python.daemon.module=flink_ms_spark.pydaemon``
-(session.py). The patch is belt-and-braces guarded: if anything about
-the pyspark internals it touches has drifted, it leaves the stock
-implementation in place and the daemon starts unpatched (slow but
-correct), logging one WARNING with ``event="pydaemon_unpatched"`` on
-the ``flink_ms_spark.pydaemon`` logger.
+(session.py). The patch is belt-and-braces guarded: it applies only
+when the worker's ``pyspark.__version__`` is in the 4.1 family, and if
+the version differs or anything about the pyspark internals it touches
+has drifted, it leaves the stock implementation in place and the
+daemon starts unpatched (slow but correct), logging one WARNING with
+``event="pydaemon_unpatched"`` on the ``flink_ms_spark.pydaemon``
+logger.
 
 Protocol note: the reimplementation below reads the exact same wire
 fields as pyspark 4.1's ``setup_spark_files`` (files-dir string,
@@ -47,6 +49,12 @@ import logging
 def _patch() -> None:
     import importlib
     import os
+
+    import pyspark
+
+    # the wire fields below are pyspark 4.1's; another family may differ
+    if not pyspark.__version__.startswith("4.1."):
+        raise RuntimeError(f"pyspark {pyspark.__version__} is not the 4.1 family")
 
     import pyspark.worker as worker
     import pyspark.worker_util as worker_util

@@ -15,7 +15,12 @@ through its Kafka loop, so semantics align at batch boundaries).
 File source is used in tests (no Kafka broker in this environment);
 ``source='kafka'`` wires the same pipeline to a broker when present.
 Checkpointing (X5) is the ``checkpointLocation`` option; the 60s
-default interval maps to the processing-time trigger.
+default interval maps to the processing-time trigger. Each micro-batch
+commits three metadata files there (the file source's ``sources/0/N``,
+the offset WAL ``offsets/N`` before the batch runs, ``commits/N`` after
+it); ``session.get_spark`` writes them through Spark's FileSystem-based
+checkpoint manager, an atomic rename with 2 subprocess spawns per file
+on a host without libhadoop instead of 8 (see the session module).
 """
 
 from __future__ import annotations

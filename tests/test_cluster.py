@@ -52,3 +52,35 @@ def test_bipartite_matches_pair_graph(spark):
     }
     assert got_local == want
     assert got_dist == want
+
+
+def test_local_solve_logs_one_event_and_adds_no_job(spark, caplog):
+    """The driver-local union-find branch says so once, with the group
+    count; the log call adds no job and leaves the result alone."""
+    import logging
+
+    from flink_ms_spark.operators.cluster import connected_components_bipartite
+
+    m = spark.createDataFrame(
+        [(1, "g1"), (2, "g1"), (2, "g2"), (3, "g2"), (5, "g3"), (6, "g3"), (9, "g4")],
+        ["node", "group"],
+    )
+    tracker = spark.sparkContext.statusTracker()
+
+    def solve(level: int, tag: str):
+        logging.getLogger("flink_ms_spark.operators.cluster").setLevel(level)
+        spark.sparkContext.setJobGroup(tag, tag)
+        try:
+            out = {(r.node, r.component) for r in connected_components_bipartite(m).collect()}
+        finally:
+            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(tracker.getJobIdsForGroup(tag))
+
+    caplog.set_level(logging.INFO, logger="flink_ms_spark.operators.cluster")
+    logged, logged_jobs = solve(logging.INFO, "cc_local_logged")
+    records = [r for r in caplog.records if getattr(r, "event", None) == "cc_local_solve"]
+    assert len(records) == 1
+    assert records[0].levelno == logging.INFO and records[0].groups == 3
+    quiet, quiet_jobs = solve(logging.WARNING, "cc_local_quiet")
+    assert logged == quiet == {(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)}
+    assert logged_jobs == quiet_jobs

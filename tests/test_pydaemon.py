@@ -78,3 +78,34 @@ def test_unpatched_fallback_logs_one_warning(monkeypatch, caplog):
     assert rec.name == "flink_ms_spark.pydaemon"
     assert rec.levelno == logging.WARNING
     assert rec.exc_info is not None and issubclass(rec.exc_info[0], ImportError)
+
+
+def test_other_pyspark_family_stays_stock(monkeypatch, caplog):
+    """A worker whose pyspark is not 4.1.x keeps the stock
+    ``setup_spark_files`` and says so once: the patch mirrors 4.1's
+    wire fields."""
+    import importlib
+    import logging
+    import sys
+
+    import pyspark
+    import pyspark.worker as worker
+    import pyspark.worker_util as worker_util
+
+    def stock(infile):
+        return None
+
+    monkeypatch.setattr(pyspark, "__version__", "4.2.0")
+    monkeypatch.setattr(worker_util, "setup_spark_files", stock)
+    monkeypatch.setattr(worker, "setup_spark_files", stock)
+    caplog.set_level(logging.WARNING, logger="flink_ms_spark.pydaemon")
+    mod = sys.modules.get("flink_ms_spark.pydaemon")
+    if mod is None:
+        importlib.import_module("flink_ms_spark.pydaemon")
+    else:
+        importlib.reload(mod)
+    records = [r for r in caplog.records if getattr(r, "event", None) == "pydaemon_unpatched"]
+    assert len(records) == 1
+    assert "4.2.0" in str(records[0].exc_info[1])
+    assert worker_util.setup_spark_files is stock
+    assert worker.setup_spark_files is stock
