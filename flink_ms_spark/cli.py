@@ -436,7 +436,7 @@ def cmd_dedup_ingest(args: argparse.Namespace) -> None:
     """Streaming ingestion dedup: watch a JSONL directory, drop docs
     that near-duplicate the already-ingested corpus (incremental LSH
     registry), write survivors to the output corpus dir."""
-    from flink_ms_spark.sources.jsonl import CORPUS_SCHEMA
+    from flink_ms_spark.schemas import CORPUS_SCHEMA
     from flink_ms_spark.streaming.neardup import StreamingNearDup
 
     spark = _spark("[DEDUP-INGEST]")
@@ -504,7 +504,7 @@ def cmd_chunk_ingest(args: argparse.Namespace) -> None:
     reject docs whose content is already ≥ --max-dup-ratio present in
     the chunk registry (edit- and quilt-robust where dedup-ingest's
     whole-doc LSH is not), write survivors per batch."""
-    from flink_ms_spark.sources.jsonl import CORPUS_SCHEMA
+    from flink_ms_spark.schemas import CORPUS_SCHEMA
     from flink_ms_spark.streaming.chunk_dedup import StreamingChunkDedup
 
     spark = _spark("[CHUNK-INGEST]")

@@ -1,10 +1,9 @@
 """Hadoop-FileSystem helpers for driver-side generation/manifest IO.
 
 Every persisted surface in this engine (store generations, near-dup
-registries, versioned corpus snapshots, ANN index increments, ingest
-manifests) is WRITTEN by Spark, which resolves paths through the
-Hadoop FileSystem API — bare local paths in local mode, hdfs:// or
-s3a:// URIs on a cluster. Driver-side bookkeeping around those
+and chunk registries, ANN index builds and increments) is WRITTEN by
+Spark, which resolves paths through the Hadoop FileSystem API — bare
+local paths in local mode, hdfs:// or s3a:// URIs on a cluster. Driver-side bookkeeping around those
 surfaces must resolve paths the SAME way: ``os.listdir`` on an
 ``hdfs://`` string silently sees nothing, ``glob`` sums zero bytes,
 and ``shutil.rmtree`` deletes nothing — each a quiet no-op exactly

@@ -25,15 +25,6 @@ def dot(a: Column | str, b: Column | str) -> Column:
     )
 
 
-def vec_scale(a: Column | str, s: Column) -> Column:
-    """s * a, elementwise."""
-    return F.transform(_c(a), lambda x: x * s)
-
-
-def vec_add(a: Column | str, b: Column | str) -> Column:
-    return F.zip_with(_c(a), _c(b), lambda x, y: x + y)
-
-
 def vec_axpy(alpha: Column, x: Column | str, y: Column | str) -> Column:
     """alpha*x + y elementwise — the SGD update shape
     (reference SGD.java:188-207)."""

@@ -85,41 +85,6 @@ def train_quality_classifier(
     return [float(model.intercept)] + [float(c) for c in model.coefficients]
 
 
-def incremental_rescore(
-    spark,
-    root: str,
-    v_old: int,
-    v_new: int,
-    prior_scores: DataFrame,
-    weights: tuple[float, ...] = FROZEN_WEIGHTS,
-) -> DataFrame:
-    """Quality scores for snapshot ``v_new`` computed INCREMENTALLY
-    from ``prior_scores`` (the scores of ``v_old``): only added ∪
-    changed docs are re-scored; removed/changed rows leave the prior
-    table; unchanged rows are carried over untouched. Pinned equal to
-    a full re-score of v_new (tests/test_quality_model.py).
-
-    This is the 100 TB re-processing pattern the versioned corpus
-    exists for: the diff is one digest full-outer join
-    (sources/versioned.py:corpus_diff), and the expensive stage —
-    scoring, or any per-doc model — touches only the changed slice,
-    not the corpus."""
-    from flink_ms_spark.sources.versioned import corpus_diff, read_version
-
-    diff = corpus_diff(spark, root, v_old, v_new)
-    stale = diff.where(F.col("change").isin("removed", "changed")).select(
-        "doc_id"
-    )
-    fresh_ids = diff.where(F.col("change").isin("added", "changed")).select(
-        "doc_id"
-    )
-    fresh = read_version(spark, root, v_new).join(
-        fresh_ids, "doc_id", "left_semi"
-    )
-    carried = prior_scores.join(stale, "doc_id", "left_anti")
-    return carried.unionByName(score_quality(fresh, weights))
-
-
 def score_quality(
     docs: DataFrame,
     weights: tuple[float, ...] = FROZEN_WEIGHTS,

@@ -1,44 +1,21 @@
-"""Iterative graph operators — the scale path for the graph queries.
+"""Iterative graph operators behind the catalog's graph queries:
+co-occurrence edges, triangle counting and label propagation
+(``triangle_copurchase``, ``lpa_communities``), each a DataFrame plan
+whose rounds are keyed shuffles.
 
 The catalog's ``event_pagerank`` is a 3-iteration SQL unroll (chosen
 for DuckDB oracle parity); Spark inlines each CTE, so the unrolled
 plan re-derives the edge pipeline per iteration. That is harmless on
-a 5-node fixture graph but wrong at web scale. This module holds the
-production form: edges are built once and cached; each iteration is
-ONE shuffle of the rank vector (|nodes| rows) joined against the
-cached edge table — the standard Pregel-on-DataFrames shape.
-
-tests/test_graph_timeseries.py pins this implementation to the SQL
-unroll's output at 6 dp, so the two forms are interchangeable.
+the 5-node fixture graph; a web-scale PageRank would build the edges
+once and shuffle only the rank vector per iteration.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from flink_ms_spark.partitioning import materialize
-
-
-def transition_edges(
-    events: DataFrame,
-    node_col: str = "event_type",
-    seq_cols: tuple[str, str] = ("ts", "event_id"),
-    part_col: str = "user_id",
-) -> DataFrame:
-    """(src, dst, p) row-stochastic transition edges from per-key
-    time-ordered sequences. One window shuffle on ``part_col``, then
-    tiny aggregates."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(part_col).orderBy(*seq_cols)
-    ev = events.select(
-        F.col(node_col).alias("src"), F.lead(node_col).over(w).alias("dst")
-    ).where(F.col("dst").isNotNull())
-    e = ev.groupBy("src", "dst").agg(F.count("*").cast("double").alias("w"))
-    tot = e.groupBy("src").agg(F.sum("w").alias("tot"))
-    return e.join(tot, "src").select("src", "dst", (F.col("w") / F.col("tot")).alias("p"))
 
 
 def cooccurrence_edges(
@@ -154,54 +131,6 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     # the 1-row summary pins the result; the upstream localCheckpoint
     # blocks are GC-managed, so nothing leaks in a resident engine
     out = n_e.crossJoin(tri).transform(materialize)
-    return out
-
-
-def pagerank_iterative(
-    edges: DataFrame,
-    nodes: DataFrame,
-    n_iter: int = 3,
-    damping: float = 0.85,
-) -> DataFrame:
-    """PageRank over cached edges: rank_{t+1}(n) = (1−d)/N +
-    d·Σ_{(m→n)} rank_t(m)·p(m→n), uniform init.
-
-    ``edges`` (src, dst, p) is persisted once; every iteration shuffles
-    only the rank vector (|nodes| rows) for the rank⋈edges join and the
-    per-dst sum — edge bytes never move again. Dangling mass is not
-    redistributed (matches the catalog query's semantics on graphs
-    where every node has out-edges).
-
-    Returns (node, pagerank) with pagerank rounded to 6 dp.
-    """
-    # eager localCheckpoint (not lazy persist): the per-iteration joins
-    # reference the edge table once per round in ONE final plan, and
-    # AQE's concurrent stage futures would race to compute a lazily
-    # persisted edge subtree (see lpa_communities)
-    edges = edges.transform(materialize)
-    n_nodes = nodes.count()
-    base = (1.0 - damping) / n_nodes
-    rank = nodes.select("node", F.lit(1.0 / n_nodes).alias("pr"))
-    for _ in range(n_iter):
-        contrib = (
-            rank.join(edges, rank["node"] == edges["src"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pr") * F.col("p")).alias("inflow"))
-        )
-        rank = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
-                ).alias("pr"),
-            )
-        )
-    out = rank.select(
-        "node", F.round("pr", 6).cast("double").alias("pagerank")
-    ).orderBy(F.col("pagerank").desc(), "node")
-    out = out.transform(materialize)  # |nodes| rows
     return out
 
 

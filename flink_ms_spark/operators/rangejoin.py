@@ -11,8 +11,8 @@ bucket-coarse candidates. Candidate inflation is bounded by
 ceil(band/B)+1 per left row — with B = band width, ≤ 2×.
 
 Reference scope: the reference has no range join; this backs the
-north-star `preceding_5min_count` query and is the batch twin of the
-stream-stream interval join (`streaming/joins.py`).
+north-star `preceding_5min_count` query. A stream-stream interval join
+needs no twin: Structured Streaming plans it natively with watermarks.
 """
 
 from __future__ import annotations

@@ -1217,8 +1217,8 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Batch twin of the streaming log-histogram quantile sketch
-# (streaming/quantiles.py): identical geometric binning, hash-checked.
+# Log-histogram of events.value with the geometric binning of
+# streaming/quantiles.py:log_bin, hash-checked.
 # IEEE double ln/division/floor are bit-deterministic across engines,
 # so the bin ids match exactly.
 
@@ -1233,10 +1233,9 @@ FROM b GROUP BY bin ORDER BY bin
 
 @register("log_histogram", oracle=_LOG_HIST_ORACLE)
 def q_log_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Geometric (growth 1.2) value histogram of events.value — the
-    batch form of the streaming quantile sketch's state, one map-side-
-    combined keyed agg; any quantile is then a scan of ~hundreds of
-    bins with relative error ≤ growth − 1."""
+    """Geometric (growth 1.2) value histogram of events.value — one
+    map-side-combined keyed agg; any quantile is then a scan of
+    ~hundreds of bins with relative error ≤ growth − 1."""
     from pyspark.sql import functions as F
 
     from flink_ms_spark.streaming.quantiles import log_bin

@@ -57,6 +57,18 @@ KV_SCHEMA = T.StructType(
     ]
 )
 
+# JSONL document corpus, one object per line; the streaming ingest lanes
+# (cli dedup-ingest, chunk-ingest) read it with this pinned schema, since
+# inference scans the input twice and types drift between shards.
+CORPUS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), True),
+        T.StructField("text", T.StringType(), True),
+        T.StructField("lang", T.StringType(), True),
+        T.StructField("source", T.StringType(), True),
+    ]
+)
+
 # Driver-generated fixture tables (/root/testdata/<sf>/<name>.parquet).
 FIXTURE_TABLES = (
     "region",

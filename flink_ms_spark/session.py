@@ -37,6 +37,11 @@ The settings are chosen for the 100 TB design point, not just local[32]:
   (a pyspark upgrade moved it), Spark's default stays and one WARNING
   with ``event="checkpoint_manager_default"`` is logged on the
   ``flink_ms_spark.session`` logger.
+- The pydaemon worker wrapper (``flink_ms_spark/pydaemon.py``) is set
+  only for a ``local`` master, because its ``PYTHONPATH`` names this
+  driver's directory. A cluster master (``extra_conf["spark.master"]``)
+  keeps Spark's stock daemon, and one INFO record with
+  ``event="pydaemon_nonlocal_master"`` is logged on the same logger.
 """
 
 from __future__ import annotations
@@ -62,53 +67,68 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session with engine defaults applied."""
-    cpus = cpus or DEFAULT_CPUS
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.default.parallelism", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # Model tables at reference scale are small relative to fact
-        # tables; let Spark broadcast aggressively (AQE re-checks at
-        # runtime with actual sizes).
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
-        # Python worker daemon wrapper (flink_ms_spark/pydaemon.py):
-        # skips the unconditional per-task importlib.invalidate_caches()
-        # in worker_util.setup_spark_files when no new py-files were
-        # shipped — the purge forces ~16 zip-central-directory re-reads
-        # per task (pyspark.zip, py4j, the spark-core jar), measured as
-        # a 120-230 ms floor on EVERY Python task at any input size.
-        # Scale-relevant on any cluster (the purge runs per task per
-        # worker everywhere); falls back to stock behavior if pyspark
-        # internals drift (see pydaemon docstring).
-        .config("spark.python.daemon.module", "flink_ms_spark.pydaemon")
-        # the daemon subprocess needs the package importable: propagate
-        # this package's parent dir into the workers' PYTHONPATH
-        .config(
-            "spark.executorEnv.PYTHONPATH",
-            os.pathsep.join(
-                p
-                for p in (
-                    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                    os.environ.get("PYTHONPATH", ""),
-                )
-                if p
-            ),
-        )
-    )
-    for k, v in (extra_conf or {}).items():
+    builder = SparkSession.builder
+    for k, v in session_conf(app_name, cpus or DEFAULT_CPUS, extra_conf).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     if _CHECKPOINT_MANAGER_CONF not in (extra_conf or {}):
         _set_checkpoint_manager(spark)
     return spark
+
+
+def session_conf(
+    app_name: str, cpus: int, extra_conf: dict[str, str] | None = None
+) -> dict[str, str]:
+    """Every setting ``get_spark`` gives the builder; ``extra_conf``
+    comes last, so a caller's value wins."""
+    extra = extra_conf or {}
+    conf = {
+        "spark.app.name": app_name,
+        "spark.master": f"local[{cpus}]",
+        "spark.sql.shuffle.partitions": str(cpus),
+        "spark.default.parallelism": str(cpus),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        # Model tables at reference scale are small relative to fact
+        # tables; let Spark broadcast aggressively (AQE re-checks at
+        # runtime with actual sizes).
+        "spark.sql.autoBroadcastJoinThreshold": "64m",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        "spark.ui.enabled": "false",
+    }
+    master = extra.get("spark.master", conf["spark.master"])
+    if master.startswith("local"):
+        # Python worker daemon wrapper (flink_ms_spark/pydaemon.py):
+        # skips the unconditional per-task importlib.invalidate_caches()
+        # in worker_util.setup_spark_files when no new py-files were
+        # shipped — the purge forces ~16 zip-central-directory re-reads
+        # per task (pyspark.zip, py4j, the spark-core jar), measured as
+        # a 120-230 ms floor on EVERY Python task at any input size;
+        # falls back to stock behavior if pyspark internals drift (see
+        # pydaemon docstring). The daemon subprocess needs the package
+        # importable, so this package's parent dir goes into the
+        # workers' PYTHONPATH — a driver-local path, which is why a
+        # cluster master keeps the stock daemon: there the import would
+        # fail before ``--py-files`` arrive.
+        conf["spark.python.daemon.module"] = "flink_ms_spark.pydaemon"
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            p
+            for p in (
+                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                os.environ.get("PYTHONPATH", ""),
+            )
+            if p
+        )
+    else:
+        logging.getLogger(__name__).info(
+            "session: master %s is not local, Python workers keep the stock "
+            "daemon", master, extra={"event": "pydaemon_nonlocal_master"},
+        )
+    conf.update(extra)
+    return conf
 
 
 def _set_checkpoint_manager(spark: SparkSession) -> None:

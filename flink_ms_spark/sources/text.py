@@ -1,4 +1,4 @@
-"""Batch text-format sources (SURVEY.md §2.1 S1-S4, S6, S8).
+"""Batch text-format sources (SURVEY.md §2.1 S1-S4, S6).
 
 Each mirrors a reference source's semantics but is declared through the
 DataFrame reader so Catalyst sees a proper scan (splittable files,
@@ -53,12 +53,6 @@ def read_libsvm(spark: SparkSession, path: str, num_features: int | None = None)
     if num_features is not None:
         reader = reader.option("numFeatures", str(num_features))
     return reader.load(path)
-
-
-def collection_source(spark: SparkSession, n: int, parallelism: int | None = None) -> DataFrame:
-    """S8 — in-memory range source 1..n (reference
-    ALSModelGenerator.scala:46-47 ``env.fromCollection(1 to N)``)."""
-    return spark.range(1, n + 1, numPartitions=parallelism).withColumnRenamed("id", "value")
 
 
 def parse_rating_lines(lines: DataFrame, sep: str = "\t", col: str = "value") -> DataFrame:

@@ -7,12 +7,14 @@ idempotent per-batch increment partitions beside the base table.
 Serving unions base + live increments through ``load_codes`` (pq) /
 ``similarity.load_ivf_members`` (ivf) / ``similarity.load_ivfpq_codes``
 (ivfpq) — the index stays fresh without retraining, and a replayed
-micro-batch overwrites its own partition (exactly-once, same
-``batch_id=N`` dynamic-overwrite pattern as ``streaming/ingest.py``).
+micro-batch overwrites its own partition (exactly-once, the
+``batch_id=N`` dynamic-overwrite pattern of the other ingest lanes,
+``streaming/neardup.py`` and ``streaming/chunk_dedup.py``).
 
 Why frozen codebooks are the right trade: PQ cell boundaries only
 need retraining when the embedding DISTRIBUTION moves (monitored by
-``centroid_drift`` / ``streaming/drift.py``), not when rows arrive.
+the ``centroid_drift`` query and ``reindex_*``'s error ratio), not
+when rows arrive.
 Encoding is a broadcast-codebook map — no shuffle, no state — so the
 streaming path is scan-speed; the expensive Lloyd training stays a
 rare offline job.

@@ -83,15 +83,6 @@ def _read_manifest(spark: SparkSession, base_dir: str) -> dict | None:
     return json.loads(fsutil.read_text(spark, path))
 
 
-def base_manifest(spark: SparkSession, registry_dir: str) -> dict | None:
-    """The base tier's commit manifest, or None before the first
-    compaction. Public so maintenance paths (ingest.compact_registries)
-    can tell 'never compacted' apart from 'compacted, live tier
-    currently empty' — the latter may still hold crash-orphaned
-    generation dirs worth a GC refold."""
-    return _read_manifest(spark, _base_dir(registry_dir))
-
-
 def base_table(spark: SparkSession, registry_dir: str) -> DataFrame | None:
     """The compacted base tier as a catalog-registered BUCKETED table
     (or None before the first compaction).

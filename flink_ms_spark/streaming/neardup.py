@@ -150,11 +150,10 @@ class StreamingNearDup:
     ``registry_dir`` holds the persisted bucket registry; survivors of
     each batch are returned by :meth:`process_batch`.
 
-    Survivor sink (the streaming/rules.py pattern): with ``out_dir``
-    set, :meth:`run` writes each batch's survivors to
-    ``out_dir/batch_id=N`` parquet INSIDE the batch — an idempotent
-    per-batch overwrite, so survivors never cross the driver and a
-    replayed batch rewrites its own partition. This matters because
+    Survivor sink: with ``out_dir`` set, :meth:`run` writes each
+    batch's survivors to ``out_dir/batch_id=N`` parquet INSIDE the
+    batch — an idempotent per-batch overwrite, so survivors never
+    cross the driver and a replayed batch rewrites its own partition. This matters because
     survivors are the NON-duplicates, i.e. nearly the whole stream at
     typical dup rates; collecting them driver-side is an unbounded
     memory sink at ingest scale. ``debug_keep=True`` opts into the

@@ -1,29 +1,24 @@
-"""Streaming quantiles via a mergeable log-scaled histogram — the
-HDR-histogram approach: bounded state, deterministic, additive merge.
+"""Log-scaled histogram bins — the HDR-histogram approach to quantiles:
+bounded state, deterministic, additive merge.
 
-Misra-Gries (streaming/sketches.py) covers heavy hitters; this covers
-the other monitoring staple: p50/p95/p99 of a value stream. A KLL/GK
-sketch gives rank error; the log-histogram gives RELATIVE VALUE error
-instead — bin edges grow geometrically (``growth`` per bin), so any
-quantile estimate is within one bin, i.e. within ``growth − 1``
-relative error (12 bins per decade at growth = 1.2 ⇒ ≤ 20%; tighten
-with more bins). That guarantee is state-size-independent of the data:
-state is one count per OCCUPIED bin, merge is count addition —
-associative, commutative, replay-friendly.
+A KLL/GK sketch gives rank error; the log-histogram gives RELATIVE
+VALUE error instead — bin edges grow geometrically (``growth`` per
+bin), so any quantile estimate is within one bin, i.e. within
+``growth − 1`` relative error (12 bins per decade at growth = 1.2 ⇒
+≤ 20%; tighten with more bins). That guarantee is independent of the
+data: state is one count per OCCUPIED bin, and merging two histograms
+is count addition — associative, commutative, replay-friendly.
 
-Spark-first: the per-batch summary is a plain ``groupBy(bin).count()``
-(map-side partial aggregation does the heavy lifting); the
-cross-batch fold is an in-process dict the foreachBatch loop owns,
-exactly the IncrementalRollup pattern (streaming/ivm.py). At 100 TB
-the same bin-count table is just a keyed parquet view — the additive
-merge is what makes the sketch distributable and restart-safe.
+Spark-first: a histogram is a plain ``groupBy(log_bin).count()``
+(map-side partial aggregation does the heavy lifting); the catalog's
+``log_histogram`` query (plans/mixing.py) is that aggregate over
+``events.value``.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -37,131 +32,3 @@ def log_bin(col, growth: float = 1.2) -> "F.Column":
         F.when(c > 0, F.floor(F.log(c) / F.lit(lg)).cast("int"))
         .otherwise(F.lit(-(2**31)).cast("int"))
     )
-
-
-def bin_counts(df: DataFrame, value_col: str, growth: float = 1.2) -> DataFrame:
-    """(bin, n): the batch's histogram summary — one shuffle whose
-    key space is the occupied-bin count (~hundreds), with map-side
-    combine doing almost all the reduction."""
-    return (
-        df.select(log_bin(value_col, growth).alias("bin"))
-        .groupBy("bin")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-class StreamingQuantiles:
-    """foreachBatch fold of log-histogram summaries with quantile
-    queries between (or after) batches.
-
-    Error contract: for q in (0, 1], ``quantile(q)`` returns the
-    geometric midpoint of the bin containing the q-th ranked value —
-    within a factor of sqrt(growth) of a true value in that bin, so
-    relative error ≤ growth − 1 against the exact quantile (pinned in
-    tests/test_streaming.py).
-    """
-
-    def __init__(
-        self,
-        value_col: str = "value",
-        growth: float = 1.2,
-        state_path: str | None = None,
-        spark=None,
-    ):
-        """``state_path`` makes the sketch RESTART-SAFE: each batch's
-        bin-count summary is written to ``state_path/batch_id=N``
-        (idempotent per-batch overwrite, the streaming/ingest.py
-        pattern), and construction rebuilds ``bins`` by summing the
-        persisted table — so a restarted query whose checkpoint skips
-        already-committed batches still folds their counts. Without it
-        the sketch is DRIVER-LIFETIME ONLY and must not be paired with
-        a checkpointed stream (``run()`` enforces this)."""
-        self.value_col = value_col
-        self.growth = growth
-        self.bins: dict[int, int] = {}
-        self._nonpos = 0
-        self.state_path = state_path
-        if state_path is not None:
-            if spark is None:
-                raise ValueError("state_path requires the spark session")
-            self._rebuild(spark)
-
-    def _rebuild(self, spark) -> None:
-        """Fold the persisted per-batch summaries back into memory —
-        additive merge, so order (and batch replay, which overwrites
-        its own partition) cannot double-count."""
-        try:
-            persisted = spark.read.parquet(self.state_path)
-        except Exception as e:
-            # ONLY a missing path means first run. Anything else
-            # (corrupt footer, transient FS error) must surface: the
-            # checkpoint will skip committed batches, so restarting
-            # with silently-empty bins loses history for good.
-            if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-                return
-            raise
-        for r in persisted.groupBy("bin").agg(F.sum("n").alias("n")).collect():
-            if r["bin"] == -(2**31):
-                self._nonpos += r["n"]
-            else:
-                self.bins[r["bin"]] = self.bins.get(r["bin"], 0) + r["n"]
-
-    def update(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
-        summary = bin_counts(batch_df, self.value_col, self.growth)
-        if self.state_path is not None and batch_id is not None:
-            import os
-
-            summary = summary.cache()
-            summary.write.mode("overwrite").parquet(
-                os.path.join(self.state_path, f"batch_id={batch_id}")
-            )
-        for r in summary.collect():
-            if r["bin"] == -(2**31):
-                self._nonpos += r["n"]
-            else:
-                self.bins[r["bin"]] = self.bins.get(r["bin"], 0) + r["n"]
-        if self.state_path is not None and batch_id is not None:
-            summary.unpersist()
-
-    def merge(self, other: "StreamingQuantiles") -> None:
-        """Additive merge of two sketches (shard → global rollup)."""
-        for b, n in other.bins.items():
-            self.bins[b] = self.bins.get(b, 0) + n
-        self._nonpos += other._nonpos
-
-    @property
-    def count(self) -> int:
-        return sum(self.bins.values())
-
-    def quantile(self, q: float) -> float | None:
-        """Geometric-midpoint estimate of the q-th quantile of the
-        positive values seen so far (None when empty)."""
-        total = self.count
-        if not total:
-            return None
-        target = max(1, math.ceil(q * total))
-        seen = 0
-        for b in sorted(self.bins):
-            seen += self.bins[b]
-            if seen >= target:
-                return self.growth ** (b + 0.5)
-        return None
-
-    def run(self, stream_df: DataFrame, checkpoint: str, available_now: bool = True):
-        if self.state_path is None:
-            # A checkpoint skips committed batches on restart, but this
-            # sketch's counts live in driver memory — replaying into a
-            # fresh instance would silently truncate the stream. Only a
-            # persisted-state sketch may checkpoint.
-            raise ValueError(
-                "checkpointed run() requires state_path= (restart-safe "
-                "persisted bins); driver-lifetime sketches must drive "
-                "foreachBatch without a checkpoint"
-            )
-        writer = (
-            stream_df.writeStream.foreachBatch(self.update)
-            .option("checkpointLocation", checkpoint)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()

@@ -1,25 +1,6 @@
 from __future__ import annotations
 
 import os
-import sys
-
-# Protobuf shim (tests/_pyshim): bridges the system-vendored pure-Python
-# google.protobuf into this container so the transformWithStateInPandas
-# test can run. Must happen BEFORE the JVM launches: PYTHONPATH
-# propagates to the PySpark executor workers, whose interpreter startup
-# imports the shim's sitecustomize (the in-process patch below covers
-# this already-started driver interpreter). No-op where protobuf is
-# installed for real, and the TWS test stays importorskip-gated where
-# neither exists.
-_PYSHIM = os.path.join(os.path.dirname(__file__), "_pyshim")
-try:
-    import google.protobuf  # noqa: F401
-except ImportError:
-    sys.path.insert(0, _PYSHIM)
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        [_PYSHIM] + ([os.environ["PYTHONPATH"]] if os.environ.get("PYTHONPATH") else [])
-    )
-    import sitecustomize  # noqa: F401  (applies the version-check relaxation)
 
 import pytest
 

@@ -264,7 +264,8 @@ def test_compaction_gc_reclaims_crash_orphaned_generations(spark, tmp_path):
     """A crash between the manifest flip and cleanup leaves the prior
     generation dir (and its catalog entry) orphaned; the NEXT
     compaction must reclaim every generation the manifest does not
-    name, not just its direct predecessor."""
+    name, not just its direct predecessor — also when no batch arrived
+    since, so the live tier is empty and the base alone is refolded."""
     from flink_ms_spark import fsutil
     from flink_ms_spark.streaming.chunk_dedup import StreamingChunkDedup
 
@@ -279,13 +280,21 @@ def test_compaction_gc_reclaims_crash_orphaned_generations(spark, tmp_path):
     spark.read.parquet(fsutil.join(base, "gen=0")).write.parquet(orphan)
     assert fsutil.exists(spark, orphan)
 
-    sd.process_batch(_docs(spark, [(2, _text(600, "B"))]), 1)
-    sd.compact(spark)  # writes gen=1, must sweep gen=0 AND gen=99
+    # no new batch: the live tier is empty, the refold runs off the
+    # base manifest alone and sweeps gen=0 AND gen=99
+    assert fsutil.count_files(spark, sd.registry_dir, ".parquet") == 0
+    assert sd.compact(spark)["generation"] == 1
     names = set(fsutil.list_names(spark, base, dirs_only=True))
     assert names == {"gen=1"}, names
+
+    spark.read.parquet(fsutil.join(base, "gen=1")).write.parquet(orphan)
+    sd.process_batch(_docs(spark, [(2, _text(600, "B"))]), 1)
+    sd.compact(spark)  # writes gen=2, must sweep gen=1 AND gen=99
+    names = set(fsutil.list_names(spark, base, dirs_only=True))
+    assert names == {"gen=2"}, names
     tables = [t.name for t in spark.catalog.listTables()
               if t.name.startswith("chunkreg_")]
-    assert all(t.endswith("_g1") or not t.startswith(
+    assert all(t.endswith("_g2") or not t.startswith(
         "chunkreg_" + __import__("hashlib").md5(
             sd.registry_dir.encode()).hexdigest()[:10]) for t in tables)
 

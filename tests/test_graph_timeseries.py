@@ -137,23 +137,3 @@ def test_doc_chunks_cover_tokens_exactly(spark, sf_smoke):
                 assert c.start_tok < prev_end  # overlap keeps continuity
             prev_end = c.end_tok
         assert last.end_tok == max(c.end_tok for c in chunks)
-
-
-def test_iterative_pagerank_matches_sql_unroll(spark, sf_smoke):
-    """The cached-edges iterative form (the 100-TB path) and the SQL
-    unroll (the oracle-parity form) must be interchangeable."""
-    from pyspark.sql import functions as F
-
-    from flink_ms_spark.operators.graph import pagerank_iterative, transition_edges
-    from flink_ms_spark.sources.tables import load_table
-
-    events = load_table(spark, sf_smoke, "events")
-    edges = transition_edges(events)
-    nodes = events.select(F.col("event_type").alias("node")).distinct()
-    got = {
-        r.node: r.pagerank for r in pagerank_iterative(edges, nodes, n_iter=3).collect()
-    }
-    want = {r.node: r.pagerank for r in QUERIES["event_pagerank"](spark, sf_smoke).collect()}
-    assert got.keys() == want.keys()
-    for n in want:
-        assert math.isclose(got[n], want[n], abs_tol=2e-6), (n, got[n], want[n])

@@ -194,24 +194,6 @@ def test_bpe_encode_stats_invariants(spark, docs):
         assert r.bpe_per_word >= 1.0
 
 
-def test_jsonl_corpus_round_trip(spark, docs, tmp_path):
-    from flink_ms_spark.sources.jsonl import read_jsonl_corpus, write_jsonl_corpus
-
-    out = tmp_path / "corpus_jsonl"
-    write_jsonl_corpus(docs.select("doc_id", "text", "lang", "source"), str(out),
-                       n_shards=4)
-    back = read_jsonl_corpus(spark, str(out))
-    assert back.count() == docs.count()
-    a = {r.doc_id: (r.text, r.lang, r.source) for r in back.collect()}
-    b = {r.doc_id: (r.text, r.lang, r.source)
-         for r in docs.select("doc_id", "text", "lang", "source").collect()}
-    assert a == b
-    # hash sharding is deterministic: same doc_id → same shard file set
-    import glob
-    shards = glob.glob(str(out / "part-*"))
-    assert len(shards) == 4
-
-
 def test_dsir_sample_budget_and_order(spark, docs):
     from flink_ms_spark.plans.catalog import QUERIES
 
@@ -478,45 +460,6 @@ def test_lpa_communities_refine_connected_components(spark):
     comp_b = {got[n] for n in (10, 11, 12)}
     assert comp_a.isdisjoint(comp_b)
     assert got[10] == got[11] == got[12]  # clique B converges
-
-
-def test_versioned_corpus_snapshot_and_diff(spark, docs, tmp_path):
-    from flink_ms_spark.sources.versioned import (
-        corpus_diff,
-        read_version,
-        write_version,
-    )
-
-    root = str(tmp_path / "corpus_versions")
-    base = docs.select("doc_id", "text").limit(50)
-    v1 = write_version(base, root)
-    assert v1 == 1
-
-    # v2: drop one doc, change one, add one
-    changed = base.withColumn(
-        "text",
-        F.when(F.col("doc_id") == 1, F.concat(F.col("text"), F.lit(" EDITED")))
-        .otherwise(F.col("text")),
-    ).where(F.col("doc_id") != 2)
-    extra = spark.createDataFrame([(999_999, "brand new doc")], ["doc_id", "text"])
-    v2 = write_version(changed.unionByName(extra), root)
-    assert v2 == 2
-
-    # old snapshot still readable and intact (snapshot isolation)
-    assert read_version(spark, root, 1).count() == 50
-    assert read_version(spark, root).count() == 50  # 50 - 1 + 1
-
-    d = {(r.change, r.doc_id) for r in corpus_diff(spark, root, 1, 2).collect()}
-    assert d == {("changed", 1), ("removed", 2), ("added", 999_999)}
-
-    # torn-write recovery: simulate a crash that wrote v=3 data but
-    # never flipped the manifest — the next write must skip past the
-    # orphan instead of failing errorifexists forever
-    base.limit(3).write.parquet(str(tmp_path / "corpus_versions" / "v=3"))
-    v4 = write_version(base.limit(5), root)
-    assert v4 == 4
-    assert read_version(spark, root).count() == 5
-    assert read_version(spark, root, 2).count() == 50  # older intact
 
 
 def test_sq8_reconstruction_error_bounded(spark, emb):

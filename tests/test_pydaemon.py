@@ -109,3 +109,32 @@ def test_other_pyspark_family_stays_stock(monkeypatch, caplog):
     assert "4.2.0" in str(records[0].exc_info[1])
     assert worker_util.setup_spark_files is stock
     assert worker.setup_spark_files is stock
+
+
+def test_daemon_set_only_for_local_master(caplog):
+    """The daemon's PYTHONPATH names the driver's directory, so a
+    cluster master keeps the stock daemon and says so once; checked on
+    the builder settings, with no second session."""
+    import logging
+
+    from flink_ms_spark.session import session_conf
+
+    def events():
+        return [r for r in caplog.records
+                if getattr(r, "event", None) == "pydaemon_nonlocal_master"]
+
+    daemon = ("spark.python.daemon.module", "spark.executorEnv.PYTHONPATH")
+    caplog.set_level(logging.INFO, logger="flink_ms_spark.session")
+    local = session_conf("t", 4)
+    assert local["spark.master"] == "local[4]"
+    assert local["spark.python.daemon.module"] == "flink_ms_spark.pydaemon"
+    assert local["spark.executorEnv.PYTHONPATH"]
+    assert not events()
+
+    remote = session_conf("t", 4, {"spark.master": "spark://h:7077"})
+    assert remote["spark.master"] == "spark://h:7077"
+    assert not set(daemon) & set(remote)
+    (rec,) = events()
+    assert rec.name == "flink_ms_spark.session"
+    assert rec.levelno == logging.INFO
+    assert "spark://h:7077" in rec.getMessage()

@@ -65,37 +65,3 @@ def test_scoring_plan_is_scan_speed(spark, sf_oracle):
     )
     assert "Exchange" not in plan
     assert "Python" not in plan  # no UDF in the hot path
-
-
-def test_incremental_rescore_equals_full_rescore(spark, sf_oracle, tmp_path):
-    """Rescoring only the diff (added ∪ changed) plus carrying over
-    unchanged rows must equal a full rescore of the new snapshot."""
-    from pyspark.sql import functions as F
-
-    from flink_ms_spark.ml.quality import incremental_rescore, score_quality
-    from flink_ms_spark.sources.versioned import write_version
-
-    root = str(tmp_path / "vers")
-    docs = load_table(spark, sf_oracle, "documents").select("doc_id", "text")
-    v1 = write_version(docs, root)
-    prior = score_quality(docs)
-
-    changed = docs.withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 7 == 0, F.concat(F.col("text"), F.lit(" EDITED TAIL"))
-        ).otherwise(F.col("text")),
-    ).where(F.col("doc_id") % 11 != 0)  # ~9% removed, ~14% changed
-    extra = spark.createDataFrame(
-        [(1_000_000 + i, f"brand new document number {i} with plenty of the words")
-         for i in range(5)],
-        "doc_id LONG, text STRING",
-    )
-    v2_docs = changed.unionByName(extra)
-    v2 = write_version(v2_docs, root)
-
-    inc = incremental_rescore(spark, root, v1, v2, prior)
-    full = score_quality(spark.read.parquet(f"{root}/v={v2}"))
-    a = sorted(map(tuple, inc.collect()))
-    b = sorted(map(tuple, full.collect()))
-    assert a == b and len(a) == v2_docs.count()

@@ -174,181 +174,6 @@ def test_online_sgd_stream_updates_model(spark, tmp_path):
     assert list(store.lookup("MEAN-U").factors) == [1.0, 1.0]
 
 
-def test_windowed_counts_watermark_drops_late_rows(spark, tmp_path):
-    """Event-time tumbling windows in append mode: a window emits once
-    the watermark passes its end; rows older than the watermark are
-    dropped across restarts (checkpointed watermark)."""
-    from flink_ms_spark.streaming.aggregates import windowed_event_counts
-
-    src = tmp_path / "events_in"
-    ckpt = tmp_path / "ckpt_win"
-    src.mkdir()
-    schema = "ts TIMESTAMP, event_type STRING, value DOUBLE"
-
-    def run(name: str) -> list:
-        stream = spark.readStream.schema(schema).json(str(src))
-        agg = windowed_event_counts(
-            stream, window_duration="1 hour", watermark_delay="30 minutes"
-        )
-        sink: list = []
-
-        q = (
-            agg.writeStream.foreachBatch(
-                lambda df, _bid: sink.extend(df.collect())
-            )
-            .outputMode("append")
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return sink
-
-    # batch 1: two 10:00-window rows, one 13:00 row that pushes the
-    # watermark to 12:30 → the 10:00 window closes and is emitted
-    _write(
-        str(src / "a.json"),
-        [
-            '{"ts": "2024-01-01 10:05:00", "event_type": "click", "value": 1.0}',
-            '{"ts": "2024-01-01 10:20:00", "event_type": "click", "value": 2.0}',
-            '{"ts": "2024-01-01 13:00:00", "event_type": "view", "value": 5.0}',
-        ],
-    )
-    rows1 = run("win1")
-    emitted = {(str(r.window_start), r.event_type): r for r in rows1}
-    key = ("2024-01-01 10:00:00", "click")
-    assert key in emitted
-    assert emitted[key].n_events == 2 and emitted[key].total_value == 3.0
-
-    # batch 2: a LATE 10:40 row (before the 12:30 watermark → dropped)
-    # and a 15:00 row that closes the 13:00 window
-    _write(
-        str(src / "b.json"),
-        [
-            '{"ts": "2024-01-01 10:40:00", "event_type": "click", "value": 100.0}',
-            '{"ts": "2024-01-01 15:00:00", "event_type": "view", "value": 7.0}',
-        ],
-    )
-    rows2 = run("win2")
-    emitted2 = {(str(r.window_start), r.event_type): r for r in rows2}
-    # the late click row must NOT re-open or re-emit the 10:00 window
-    assert ("2024-01-01 10:00:00", "click") not in emitted2
-    key13 = ("2024-01-01 13:00:00", "view")
-    assert key13 in emitted2
-    assert emitted2[key13].n_events == 1 and emitted2[key13].total_value == 5.0
-
-
-def test_hopping_windowed_counts_multi_assign(spark, tmp_path):
-    """Sliding (hop) windows: with 1h windows advancing every 15 min,
-    one event belongs to exactly 4 windows; a watermark-advancing later
-    row closes and emits all 4 (batch twin: q:hopping_window_counts)."""
-    from flink_ms_spark.streaming.aggregates import windowed_event_counts
-
-    src = tmp_path / "hop_in"
-    ckpt = tmp_path / "ckpt_hop"
-    src.mkdir()
-    schema = "ts TIMESTAMP, event_type STRING, value DOUBLE"
-    _write(
-        str(src / "a.json"),
-        [
-            '{"ts": "2024-01-01 10:05:00", "event_type": "click", "value": 1.0}',
-            '{"ts": "2024-01-01 14:00:00", "event_type": "view", "value": 5.0}',
-        ],
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    agg = windowed_event_counts(
-        stream,
-        window_duration="1 hour",
-        slide="15 minutes",
-        watermark_delay="30 minutes",
-    )
-    sink: list = []
-    q = (
-        agg.writeStream.foreachBatch(lambda df, _bid: sink.extend(df.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    click = sorted(
-        str(r.window_start) for r in sink if r.event_type == "click"
-    )
-    assert click == [
-        "2024-01-01 09:15:00",
-        "2024-01-01 09:30:00",
-        "2024-01-01 09:45:00",
-        "2024-01-01 10:00:00",
-    ]
-    assert all(r.n_events == 1 for r in sink if r.event_type == "click")
-
-
-def test_transform_with_state_latest_per_key(spark, tmp_path):
-    """X1 via transformWithStateInPandas: engine-managed ValueState
-    keeps the latest payload per key across micro-batch runs (state
-    restored from the checkpoint on the second run).
-
-    Requires a working protobuf install (the TWS driver worker imports
-    google.protobuf.descriptor) — skipped where absent."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from flink_ms_spark.streaming.value_state import latest_per_key_state
-
-    src = tmp_path / "vs_in"
-    ckpt = tmp_path / "ckpt_vs"
-    src.mkdir()
-    schema = "key STRING, ord LONG, payload STRING"
-
-    changelog: dict[str, str] = {}
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    def run() -> None:
-        stream = spark.readStream.schema(schema).json(str(src))
-        out = latest_per_key_state(stream)
-        q = (
-            out.writeStream.foreachBatch(
-                lambda df, _bid: changelog.update(
-                    {r.key: r.payload for r in df.collect()}
-                )
-            )
-            .outputMode("update")
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    try:
-        _write(
-            str(src / "a.json"),
-            [
-                '{"key": "1-U", "ord": 1, "payload": "1.0;2.0"}',
-                '{"key": "2-U", "ord": 2, "payload": "3.0;4.0"}',
-                '{"key": "1-U", "ord": 3, "payload": "9.0;9.0"}',
-            ],
-        )
-        run()
-        assert changelog == {"1-U": "9.0;9.0", "2-U": "3.0;4.0"}
-
-        # second batch: within-batch last-write-wins by ord, other keys
-        # keep their checkpointed state
-        _write(
-            str(src / "b.json"),
-            [
-                '{"key": "2-U", "ord": 5, "payload": "7.0;7.0"}',
-                '{"key": "2-U", "ord": 4, "payload": "ignored"}',
-            ],
-        )
-        run()
-        assert changelog["2-U"] == "7.0;7.0"
-        assert changelog["1-U"] == "9.0;9.0"
-    finally:  # shared session: never leak the provider to other tests
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_kafka_source_builder(spark):
     """S7/K2 plan construction: with the connector jar present the
     builder yields a streaming (value, kafka_offset) plan; without a
@@ -605,49 +430,6 @@ def test_online_sgd_stream_converges_over_batches(spark, tmp_path):
     assert all(b <= a + 1e-9 for a, b in zip(errs, errs[1:])), f"MSE rose: {errs}"
 
 
-def test_interval_join_streams_within_bound(spark, tmp_path):
-    """Stream-stream interval join: conversions pair with the trigger
-    within 30 minutes; outside the bound they don't."""
-    from flink_ms_spark.streaming.joins import interval_join
-
-    imp_dir, clk_dir = tmp_path / "imps", tmp_path / "clicks"
-    ckpt = tmp_path / "ckpt_join"
-    imp_dir.mkdir(), clk_dir.mkdir()
-    imp_schema = "user_id LONG, ts TIMESTAMP, campaign STRING"
-    clk_schema = "user_id LONG, ts TIMESTAMP, amount DOUBLE"
-
-    _write(
-        str(imp_dir / "a.json"),
-        [
-            '{"user_id": 1, "ts": "2024-01-01 10:00:00", "campaign": "c1"}',
-            '{"user_id": 2, "ts": "2024-01-01 10:00:00", "campaign": "c2"}',
-        ],
-    )
-    _write(
-        str(clk_dir / "a.json"),
-        [
-            '{"user_id": 1, "ts": "2024-01-01 10:10:00", "amount": 5.0}',
-            '{"user_id": 2, "ts": "2024-01-01 11:30:00", "amount": 7.0}',
-            '{"user_id": 3, "ts": "2024-01-01 10:05:00", "amount": 9.0}',
-        ],
-    )
-    imps = spark.readStream.schema(imp_schema).json(str(imp_dir))
-    clicks = spark.readStream.schema(clk_schema).json(str(clk_dir))
-    joined = interval_join(imps, clicks, max_delay="30 minutes")
-    rows: list = []
-    q = (
-        joined.writeStream.foreachBatch(lambda df, _b: rows.extend(df.collect()))
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {(r.user_id, r.campaign, r.amount) for r in rows}
-    # user 1: within 10 min → joined; user 2: 90 min late → dropped;
-    # user 3: no impression → dropped
-    assert got == {(1, "c1", 5.0)}
-
-
 def test_streaming_curate_matches_batch_semantics(spark, tmp_path):
     """Quality gate + scrub + watermark dedup as one append stream:
     short docs drop, duplicate digests drop (first seen wins), PII is
@@ -709,175 +491,6 @@ def test_streaming_curate_matches_batch_semantics(spark, tmp_path):
     assert sorted(d for d, _, _ in out) == [1, 4, 6]
 
 
-def test_session_windows_merge_and_close_on_gap(spark, tmp_path):
-    """Streaming session windows: events within the gap merge into one
-    session whose extent is data-driven; a session emits (append mode)
-    once the watermark passes its end; a later burst opens a NEW
-    session for the same key."""
-    from flink_ms_spark.streaming.aggregates import session_windowed_counts
-
-    src = tmp_path / "sess_in"
-    ckpt = tmp_path / "ckpt_sess"
-    src.mkdir()
-    schema = "ts TIMESTAMP, user_id LONG, value DOUBLE"
-
-    def run() -> list:
-        stream = spark.readStream.schema(schema).json(str(src))
-        agg = session_windowed_counts(
-            stream, gap="10 minutes", watermark_delay="5 minutes"
-        )
-        sink: list = []
-        q = (
-            agg.writeStream.foreachBatch(lambda df, _bid: sink.extend(df.collect()))
-            .outputMode("append")
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return sink
-
-    # one user: 10:00 / 10:05 / 10:12 chain (each within 10 min of the
-    # previous → ONE session 10:00-10:22); a 11:00 row advances the
-    # watermark past the session end so it closes and emits
-    _write(
-        str(src / "a.json"),
-        [
-            '{"ts": "2024-01-01 10:00:00", "user_id": 1, "value": 1.0}',
-            '{"ts": "2024-01-01 10:05:00", "user_id": 1, "value": 2.0}',
-            '{"ts": "2024-01-01 10:12:00", "user_id": 1, "value": 3.0}',
-            '{"ts": "2024-01-01 11:00:00", "user_id": 2, "value": 9.0}',
-        ],
-    )
-    rows = run()
-    sess = {(r.user_id, str(r.session_start)): r for r in rows}
-    key = (1, "2024-01-01 10:00:00")
-    assert key in sess
-    assert sess[key].n_events == 3 and sess[key].total_value == 6.0
-    assert str(sess[key].session_end) == "2024-01-01 10:22:00"  # last ts + gap
-
-    # second batch: a new burst for user 1 well after the gap → a NEW
-    # session, closed by a later watermark-advancing row
-    _write(
-        str(src / "b.json"),
-        [
-            '{"ts": "2024-01-01 12:00:00", "user_id": 1, "value": 4.0}',
-            '{"ts": "2024-01-01 13:00:00", "user_id": 2, "value": 9.0}',
-        ],
-    )
-    rows2 = run()
-    sess2 = {(r.user_id, str(r.session_start)): r for r in rows2}
-    key2 = (1, "2024-01-01 12:00:00")
-    assert key2 in sess2
-    assert sess2[key2].n_events == 1 and sess2[key2].total_value == 4.0
-    assert (1, "2024-01-01 10:00:00") not in sess2  # closed session stays closed
-
-
-def test_streaming_heavy_hitters_no_false_negatives(spark, tmp_path):
-    """Mergeable Misra-Gries across micro-batches: every term whose
-    TOTAL count across all batches exceeds N/(sketch_k+1) must be in
-    the final summary, and counters never overcount."""
-    from flink_ms_spark.streaming.sketches import StreamingHeavyHitters
-
-    src = tmp_path / "hh_in"
-    src.mkdir()
-    # batch files with a skewed distribution: 'alpha' dominates, a
-    # mid-frequency 'beta' spans batches, plus singleton noise
-    rows_a = ["alpha"] * 50 + ["beta"] * 8 + [f"noise{i}" for i in range(30)]
-    rows_b = ["alpha"] * 40 + ["beta"] * 9 + [f"zz{i}" for i in range(30)]
-    _write(str(src / "a.json"), [f'{{"term": "{t}"}}' for t in rows_a])
-    _write(str(src / "b.json"), [f'{{"term": "{t}"}}' for t in rows_b])
-
-    hh = StreamingHeavyHitters(col="term", sketch_k=10)
-    stream = spark.readStream.schema("term STRING").json(str(src))
-    q = hh.run(stream, str(tmp_path / "ckpt_hh"))
-    q.awaitTermination(120)
-
-    total = len(rows_a) + len(rows_b)
-    assert hh.n_seen == total
-    got = dict(hh.candidates())
-    true = {"alpha": 90, "beta": 17}
-    # no false negatives above N/(k+1)
-    for term, cnt in true.items():
-        if cnt > total / (hh.sketch_k + 1):
-            assert term in got, term
-            # MG counters are lower bounds within N/(k+1)
-            assert got[term] <= cnt
-            assert cnt - got[term] <= total / (hh.sketch_k + 1)
-    # bounded state
-    assert len(got) <= hh.sketch_k
-
-
-def test_incremental_rollup_matches_batch_agg(spark, tmp_path):
-    """IVM additive fold: after streaming two files, the materialized
-    (day -> sum,count,mean) view equals the batch GROUP BY over the
-    union; a restarted query does not double-apply batches."""
-    from flink_ms_spark.streaming.ivm import IncrementalRollup
-
-    src = tmp_path / "ivm_in"
-    src.mkdir()
-    _write(
-        str(src / "a.json"),
-        [
-            '{"day": "2024-01-01", "v": 10.0}',
-            '{"day": "2024-01-01", "v": 2.0}',
-            '{"day": "2024-01-02", "v": 7.0}',
-        ],
-    )
-    _write(
-        str(src / "b.json"),
-        ['{"day": "2024-01-02", "v": 3.0}', '{"day": "2024-01-03", "v": 1.5}'],
-    )
-    roll = IncrementalRollup(key_expr="day", value_col="v")
-    schema = "day STRING, v DOUBLE"
-    stream = spark.readStream.schema(schema).json(str(src))
-    roll.run(stream, str(tmp_path / "ckpt_ivm")).awaitTermination(120)
-
-    snap = roll.snapshot()
-    assert snap["2024-01-01"] == (12.0, 2, 6.0)
-    assert snap["2024-01-02"] == (10.0, 2, 5.0)
-    assert snap["2024-01-03"] == (1.5, 1, 1.5)
-
-    # restart over the same checkpoint: no new data -> no change,
-    # and a replayed batch id would be skipped by the idempotent fold
-    stream2 = spark.readStream.schema(schema).json(str(src))
-    roll.run(stream2, str(tmp_path / "ckpt_ivm")).awaitTermination(120)
-    assert roll.snapshot() == snap
-
-
-def test_incremental_rollup_journal_restart(spark, tmp_path):
-    """Journaled IVM survives a PROCESS restart without double-apply:
-    a fresh instance rebuilds the view from the journal, and replaying
-    the same batches (fresh checkpoint, same data) is a no-op because
-    batch ids come back identical and dedupe against the journal."""
-    from flink_ms_spark.streaming.ivm import IncrementalRollup
-
-    src = tmp_path / "ivm_j_in"
-    src.mkdir()
-    _write(
-        str(src / "a.json"),
-        ['{"day": "2024-01-01", "v": 4.0}', '{"day": "2024-01-02", "v": 6.0}'],
-    )
-    journal = str(tmp_path / "ivm_journal")
-    schema = "day STRING, v DOUBLE"
-
-    roll = IncrementalRollup("day", "v", journal_dir=journal)
-    stream = spark.readStream.schema(schema).json(str(src))
-    roll.run(stream, str(tmp_path / "ckpt_ivm_j")).awaitTermination(120)
-    snap = roll.snapshot()
-    assert snap["2024-01-01"] == (4.0, 1, 4.0)
-
-    # simulate crash + restart: new object, same journal — view restored
-    roll2 = IncrementalRollup("day", "v", journal_dir=journal)
-    assert roll2.snapshot() == snap
-
-    # checkpoint lost (fresh ckpt dir) -> Structured Streaming replays
-    # batch 0; the journal dedupes it, so no double-apply
-    stream2 = spark.readStream.schema(schema).json(str(src))
-    roll2.run(stream2, str(tmp_path / "ckpt_ivm_j2")).awaitTermination(120)
-    assert roll2.snapshot() == snap
-
-
 def test_streaming_mse_ledger(spark, tmp_path):
     """Continuous evaluation: per-micro-batch MSE of arriving ratings
     against the CURRENT served model, appended to an idempotent
@@ -916,20 +529,6 @@ def test_streaming_mse_ledger(spark, tmp_path):
     rows = {r.batch_id: r for r in ev.ledger(spark).collect()}
     assert set(rows) == {0, 1}
     assert rows[1].n == 1 and rows[1].mse == 1.0
-
-
-def test_rules_ban_keeps_null_source_rows(spark):
-    """A ban list must not silently drop rows with NULL provenance:
-    NULL.isin(...) is NULL and a bare negation filters the row out."""
-    from flink_ms_spark.streaming.rules import apply_rules
-
-    df = spark.createDataFrame(
-        [(1, "keep me here ok", "spamsite"), (2, "keep me here ok", None),
-         (3, "keep me here ok", "good")],
-        "doc_id LONG, text STRING, source STRING",
-    )
-    kept = {r.doc_id for r in apply_rules(df, {"banned_sources": ["spamsite"]}).collect()}
-    assert kept == {2, 3}  # banned dropped, NULL-source SURVIVES
 
 
 def test_spilled_store_bucket_pruned_layout(spark):

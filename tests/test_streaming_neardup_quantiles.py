@@ -1,16 +1,13 @@
-"""Streaming incremental LSH near-dup + log-histogram quantiles."""
+"""Streaming incremental LSH near-dup: cross-batch drops, replay, registry compaction."""
 
 from __future__ import annotations
 
 import json
 
-import numpy as np
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_ms_spark.streaming.neardup import StreamingNearDup, band_signatures
-from flink_ms_spark.streaming.quantiles import StreamingQuantiles, bin_counts
 
 DOC_SCHEMA = T.StructType(
     [
@@ -224,285 +221,6 @@ def test_band_signatures_match_batch_minhash_math(spark):
     assert by_doc[1] != by_doc[3]
 
 
-def test_quantile_sketch_relative_error_bound(spark, tmp_path):
-    rng = np.random.default_rng(7)
-    vals = np.abs(rng.lognormal(mean=2.0, sigma=1.0, size=20_000)) + 0.001
-    df = spark.createDataFrame([(float(v),) for v in vals], ["value"])
-
-    sk = StreamingQuantiles(growth=1.2)
-    # fold as three "micro-batches" + one merged shard
-    parts = np.array_split(vals, 3)
-    for i, p in enumerate(parts[:2]):
-        sk.update(spark.createDataFrame([(float(v),) for v in p], ["value"]), i)
-    shard = StreamingQuantiles(growth=1.2)
-    shard.update(spark.createDataFrame([(float(v),) for v in parts[2]], ["value"]))
-    sk.merge(shard)
-
-    assert sk.count == len(vals)
-    for q in (0.5, 0.95, 0.99):
-        est = sk.quantile(q)
-        exact = float(np.quantile(vals, q))
-        assert abs(est - exact) / exact <= 0.2 + 1e-9  # growth − 1 bound
-
-
-def test_quantile_sketch_streaming_run(spark, tmp_path):
-    src = tmp_path / "vals_in"
-    src.mkdir()
-    (src / "a.json").write_text(
-        "\n".join(json.dumps({"value": float(v)}) for v in range(1, 101))
-    )
-    schema = T.StructType([T.StructField("value", T.DoubleType())])
-    state = str(tmp_path / "q_state")
-    ckpt = str(tmp_path / "ckpt_q")
-    sk = StreamingQuantiles(growth=1.1, state_path=state, spark=spark)
-    stream = spark.readStream.schema(schema).json(str(src))
-    q = sk.run(stream, ckpt)
-    q.awaitTermination(120)
-    assert sk.count == 100
-    est = sk.quantile(0.5)
-    assert abs(est - 50.0) / 50.0 <= 0.1 + 1e-9
-
-    # RESTART: a fresh instance rebuilds bins from the persisted
-    # per-batch summaries, so the checkpoint skipping batch 0 does not
-    # truncate the sketch (the round-2 advisory finding).
-    (src / "b.json").write_text(
-        "\n".join(json.dumps({"value": float(v)}) for v in range(101, 201))
-    )
-    sk2 = StreamingQuantiles(growth=1.1, state_path=state, spark=spark)
-    assert sk2.count == 100  # recovered without replaying batch 0
-    q = sk2.run(spark.readStream.schema(schema).json(str(src)), ckpt)
-    q.awaitTermination(120)
-    assert sk2.count == 200
-    est = sk2.quantile(0.5)
-    assert abs(est - 100.0) / 100.0 <= 0.1 + 1e-9
-
-
-def test_quantile_sketch_refuses_checkpoint_without_state(spark, tmp_path):
-    """Driver-lifetime sketches must not pair with a checkpoint — the
-    restart would silently skip committed batches into empty bins."""
-    schema = T.StructType([T.StructField("value", T.DoubleType())])
-    src = tmp_path / "vals_nockpt"
-    src.mkdir()
-    sk = StreamingQuantiles()
-    stream = spark.readStream.schema(schema).json(str(src))
-    with pytest.raises(ValueError, match="state_path"):
-        sk.run(stream, str(tmp_path / "ckpt_bad"))
-
-
-def test_bin_counts_is_single_keyed_agg(spark):
-    df = spark.range(1000).select((F.col("id") + 1).cast("double").alias("value"))
-    plan = bin_counts(df, "value")._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") <= 1  # one shuffle, keyed on bin
-
-
-def test_drift_monitor_flags_distribution_shift(spark, tmp_path):
-    from flink_ms_spark.sources.tables import load_table
-    from flink_ms_spark.streaming.drift import (
-        StreamingDriftMonitor,
-        bucket_profile,
-        kl_bits,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    baseline = bucket_profile(docs)
-
-    # in-distribution batch: a slice of the same corpus → tiny KL
-    in_dist = docs.limit(20).select("text")
-    # drifted batch: a single repeated alien token → concentrated mass
-    drifted = spark.createDataFrame(
-        [("zzgarbledtoken " * 50,)] * 20, ["text"]
-    )
-    kl_in = kl_bits(bucket_profile(in_dist), baseline)
-    kl_out = kl_bits(bucket_profile(drifted), baseline)
-    assert kl_out > kl_in
-    assert kl_out > 1.0  # concentrated alien mass is unambiguous
-
-    # streaming form
-    src = tmp_path / "drift_in"
-    _write_docs(src, [{"doc_id": 1, "text": "zzgarbledtoken " * 50}])
-    mon = StreamingDriftMonitor(baseline, threshold_bits=0.5)
-    stream = spark.readStream.schema(DOC_SCHEMA).json(str(src))
-    q = mon.run(stream, str(tmp_path / "ckpt_drift"))
-    q.awaitTermination(120)
-    assert len(mon.scores) == 1 and mon.scores[0][3] is True
-
-
-def test_streaming_ingest_quality_gate(spark, tmp_path):
-    """Optional model-based quality gate inside the ingest pipeline:
-    prose passes, long-word no-stopword gibberish is dropped before
-    the registry/write stages."""
-    from flink_ms_spark.sources.tables import load_table
-    from flink_ms_spark.streaming.drift import bucket_profile
-    from flink_ms_spark.streaming.ingest import StreamingIngest
-
-    baseline = bucket_profile(
-        load_table(spark, "/root/testdata/sf0.001", "documents")
-    )
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("source", T.StringType()),
-        ]
-    )
-    src = tmp_path / "qgate_in"
-    _write_docs(src, [
-        {"doc_id": 1, "source": "ok",
-         "text": "the cat sat on the mat and it is a good day to walk in the park"},
-        {"doc_id": 2, "source": "ok",
-         "text": "zxqvwkjhsdfpo mnbpoiuylkjqa rrtteewwqqzz vvccxxzzaass"},
-    ])
-    out = tmp_path / "qgate_corpus"
-    ing = StreamingIngest(
-        str(out), baseline, drift_threshold_bits=1e9, quality_threshold=0.5
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    q = ing.run(stream, str(tmp_path / "ckpt_qg"))
-    q.awaitTermination(120)
-    kept = spark.read.parquet(str(out / "batch_id=0"))
-    assert [r.doc_id for r in kept.collect()] == [1]
-    assert ing.manifest[0]["n_in"] == 2 and ing.manifest[0]["n_gated"] == 1
-
-
-def test_streaming_ingest_capstone_end_to_end(spark, tmp_path):
-    import json as _json
-
-    from flink_ms_spark.sources.tables import load_table
-    from flink_ms_spark.streaming.drift import bucket_profile
-    from flink_ms_spark.streaming.ingest import StreamingIngest
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    baseline = bucket_profile(docs)
-    texts = [r.text for r in docs.limit(4).collect()]
-
-    rules_path = tmp_path / "rules.json"
-    rules_path.write_text(_json.dumps({"banned_sources": ["spam"]}))
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("source", T.StringType()),
-        ]
-    )
-    src = tmp_path / "ingest_in"
-    # batch 0: in-distribution docs; one banned, one duplicate pair
-    _write_docs(src, [
-        {"doc_id": 1, "text": texts[0], "source": "ok"},
-        {"doc_id": 2, "text": texts[0], "source": "ok"},     # near-dup of 1
-        {"doc_id": 3, "text": texts[1], "source": "spam"},   # banned
-        {"doc_id": 4, "text": texts[2], "source": "ok"},
-    ])
-    out = tmp_path / "corpus"
-    ing = StreamingIngest(str(out), baseline, rules_path=str(rules_path),
-                          drift_threshold_bits=4.0)
-    stream = spark.readStream.schema(schema).json(str(src))
-    q = ing.run(stream, str(tmp_path / "ckpt_ing"))
-    q.awaitTermination(120)
-
-    m = _json.loads((out / "_manifest.json").read_text())
-    assert m[0]["action"] == "ingested"
-    assert m[0]["n_in"] == 4 and m[0]["n_gated"] == 3 and m[0]["n_written"] == 2
-    kept = spark.read.parquet(str(out / "batch_id=0"))
-    assert sorted(r.doc_id for r in kept.collect()) == [1, 4]
-
-    # batch 1: alien content → quarantined, nothing enters the corpus
-    _write_docs(src, [
-        {"doc_id": 10, "text": "zzalien " * 60, "source": "ok"},
-    ])
-    q = ing.run(stream, str(tmp_path / "ckpt_ing"))
-    q.awaitTermination(120)
-    m = _json.loads((out / "_manifest.json").read_text())
-    assert m[1]["action"] == "quarantined"
-    assert (out / "_quarantine" / "batch_id=1").exists()
-    assert not (out / "batch_id=1").exists()
-
-
-def test_streaming_ewma_matches_sequential_recursion(spark, tmp_path):
-    """StreamingEwma folds per-key batch means with
-    s <- a*x + (1-a)*s across micro-batches (seed = first x); state is
-    one double per key and history records every (batch, key, x, s)."""
-    from flink_ms_spark.streaming.drift import StreamingEwma
-
-    src = tmp_path / "ewma_in"
-    src.mkdir(parents=True, exist_ok=True)
-    # three files -> three micro-batches (maxFilesPerTrigger=1)
-    for i, vals in enumerate([(10.0, 20.0), (40.0, 60.0), (5.0, 15.0)]):
-        (src / f"b{i}.json").write_text(
-            "\n".join(
-                json.dumps({"event_type": "a", "value": v}) for v in vals
-            )
-        )
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    mon = StreamingEwma(alpha=0.5)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = mon.run(stream, str(tmp_path / "ckpt_ewma"))
-    q.awaitTermination(120)
-
-    assert len(mon.history) == 3
-    # replay the recursion over the observed batch-mean sequence
-    s = None
-    for _bid, key, x, ewma in mon.history:
-        assert key == "a"
-        s = x if s is None else 0.5 * x + 0.5 * s
-        assert abs(ewma - s) < 1e-12
-    assert abs(mon.state["a"] - s) < 1e-12
-    # batch means were (15, 50, 10) in some file order; the final state
-    # must lie inside the observed value hull either way
-    assert 10.0 <= mon.state["a"] <= 50.0
-
-
-def test_streaming_ewma_reseed_from_ledger_continues_series(spark):
-    """Restart continuity (ADVICE r5): state is an in-memory dict that
-    does NOT survive a checkpointed restart — a restarting job must
-    seed_state_from its persisted ledger or every key silently reseeds.
-    Pin that a reseeded instance continues the recursion exactly where
-    a continuous run would be, and that an unseeded one does not."""
-    from flink_ms_spark.streaming.drift import StreamingEwma
-
-    def batch(vals):
-        return spark.createDataFrame(
-            [("a", float(v)) for v in vals], "event_type STRING, value DOUBLE"
-        )
-
-    # continuous run: three batches with means 15, 50, 10
-    cont = StreamingEwma(alpha=0.5)
-    for bid, vals in enumerate([(10.0, 20.0), (40.0, 60.0), (5.0, 15.0)]):
-        cont.update(batch(vals), bid)
-    want = cont.state["a"]  # 0.5*10 + 0.5*(0.5*50 + 0.5*15)
-
-    # crashed-after-batch-1 run: its ledger holds batches 0 and 1
-    first = StreamingEwma(alpha=0.5)
-    first.update(batch((10.0, 20.0)), 0)
-    first.update(batch((40.0, 60.0)), 1)
-    ledger = spark.createDataFrame(
-        first.history, "batch_id LONG, key STRING, x DOUBLE, ewma DOUBLE"
-    )
-
-    # restarted instance: empty dict, seeded from the ledger (max_by
-    # batch_id picks batch 1's ewma, not batch 0's), then batch 2
-    restarted = StreamingEwma(alpha=0.5)
-    assert restarted.seed_state_from(ledger) == 1
-    assert abs(restarted.state["a"] - first.state["a"]) < 1e-12
-    restarted.update(batch((5.0, 15.0)), 2)
-    assert abs(restarted.state["a"] - want) < 1e-12
-
-    # without the seed, the key reseeds (s = first post-restart x = 10)
-    unseeded = StreamingEwma(alpha=0.5)
-    unseeded.update(batch((5.0, 15.0)), 2)
-    assert abs(unseeded.state["a"] - 10.0) < 1e-12
-    assert abs(unseeded.state["a"] - want) > 1.0
-
-
 def test_compact_registry_failed_swap_keeps_or_restores_registry(
     spark, tmp_path, monkeypatch
 ):
@@ -545,158 +263,3 @@ def test_compact_registry_failed_swap_keeps_or_restores_registry(
     monkeypatch.setattr(fsutil, "rename", real_rename)
     stats = nd_mod.compact_registry(spark, reg, target_files=1)
     assert stats["rows_after"] == rows_before
-
-
-def test_streaming_ingest_with_chunk_gate_capstone(spark, tmp_path):
-    """Full ingestion story (VERDICT r10 #7): signature dedup -> chunk
-    content dedup -> write, with BOTH registries idempotent under a
-    replayed batch_id. The quilt doc (60% of an admitted doc's content
-    + 40% fresh) deterministically passes the LSH signature gate (no
-    band collision at this overlap for these fixed texts — minhash is
-    pure md5 math) and must be caught by the chunk-level gate."""
-    import hashlib as _hl
-
-    from flink_ms_spark.sources.tables import load_table
-    from flink_ms_spark.streaming.drift import bucket_profile
-    from flink_ms_spark.streaming.ingest import StreamingIngest
-
-    def _txt(n, seed):
-        out, i = [], 0
-        while len(out) < n:
-            h = _hl.md5(f"{seed}:{i}".encode()).hexdigest()
-            out.extend(chr(ord("a") + int(c, 16) % 26) for c in h)
-            i += 1
-        return "".join(out[:n])
-
-    baseline = bucket_profile(
-        load_table(spark, "/root/testdata/sf0.001", "documents")
-    )
-    out = tmp_path / "corpus"
-    ing = StreamingIngest(
-        str(out), baseline, drift_threshold_bits=1e9,
-        chunk_max_dup_ratio=0.45,
-    )
-
-    def _batch(rows):
-        return spark.createDataFrame(
-            rows, "doc_id LONG, text STRING, source STRING"
-        )
-
-    p = _txt(600, "P")
-    # batch 0: unique doc + its exact copy (signature gate drops it)
-    ing.process_batch(_batch([(1, p, "ok"), (2, p, "ok")]), 0)
-    assert ing.manifest[0]["n_written"] == 1
-    assert [r.doc_id for r in spark.read.parquet(str(out / "batch_id=0")).collect()] == [1]
-
-    # batch 1: quilt (passes LSH, 60% chunk-dup -> chunk gate drops)
-    # + a genuinely fresh doc
-    quilt = p[:360] + _txt(240, "Q")
-    fresh = _txt(600, "R")
-    ing.process_batch(_batch([(10, quilt, "ok"), (11, fresh, "ok")]), 1)
-    kept1 = sorted(
-        r.doc_id for r in spark.read.parquet(str(out / "batch_id=1")).collect()
-    )
-    assert kept1 == [11], "quilt must fall to the chunk gate, fresh admitted"
-
-    def _reg_state():
-        band = spark.read.parquet(str(out / "_registry"))
-        chunk = spark.read.parquet(str(out / "_chunk_registry"))
-        return (
-            sorted(map(tuple, band.select("doc_id", "band", "band_sig").collect())),
-            sorted(map(tuple, chunk.select("doc_id", "chunk_hash").collect())),
-        )
-
-    before = _reg_state()
-    # replay batch 1 (foreachBatch retry): identical verdicts, both
-    # registries bit-identical afterwards
-    ing.process_batch(_batch([(10, quilt, "ok"), (11, fresh, "ok")]), 1)
-    kept1r = sorted(
-        r.doc_id for r in spark.read.parquet(str(out / "batch_id=1")).collect()
-    )
-    assert kept1r == [11]
-    assert _reg_state() == before
-
-    # maintenance-window compaction of BOTH registries, then one more
-    # batch: the exact copy falls to the band gate, the quilt to the
-    # chunk gate (now served from the compacted base), fresh admitted
-    stats = ing.compact_registries(spark)
-    assert {"band", "chunk"} <= set(stats)
-    ing.process_batch(
-        _batch([(20, p, "ok"), (21, quilt, "ok"), (22, _txt(600, "S"), "ok")]), 2
-    )
-    kept2 = sorted(
-        r.doc_id for r in spark.read.parquet(str(out / "batch_id=2")).collect()
-    )
-    assert kept2 == [22]
-
-
-def test_compact_registries_skips_empty_registries(spark, tmp_path):
-    """compact_registries on a virgin ingest (nothing registered yet)
-    must skip cleanly instead of dying on parquet schema inference —
-    and an empty band registry must not abort the chunk compaction."""
-    from flink_ms_spark.sources.tables import load_table
-    from flink_ms_spark.streaming.drift import bucket_profile
-    from flink_ms_spark.streaming.ingest import StreamingIngest
-
-    baseline = bucket_profile(
-        load_table(spark, "/root/testdata/sf0.001", "documents")
-    )
-    ing = StreamingIngest(
-        str(tmp_path / "corpus"), baseline, chunk_max_dup_ratio=0.5
-    )
-    stats = ing.compact_registries(spark)
-    assert stats == {
-        "band": {"skipped": "empty registry"},
-        "chunk": {"skipped": "empty registry"},
-    }
-
-
-def test_compact_registries_refolds_chunk_base_with_empty_live(spark, tmp_path):
-    """ADVICE r11: once a chunk base manifest exists, compact_registries
-    must run the chunk compactor even when the live tier has zero
-    parquet files — the refold is what GCs crash-orphaned generation
-    dirs, and gating on live files alone left that debris unreclaimed
-    until new batches happened to arrive."""
-    from flink_ms_spark import fsutil
-    from flink_ms_spark.sources.tables import load_table
-    from flink_ms_spark.streaming.drift import bucket_profile
-    from flink_ms_spark.streaming.ingest import StreamingIngest
-
-    baseline = bucket_profile(
-        load_table(spark, "/root/testdata/sf0.001", "documents")
-    )
-    import hashlib as _h
-
-    text = "".join(
-        chr(ord("a") + int(c, 16) % 26)
-        for i in range(20)
-        for c in _h.md5(f"A:{i}".encode()).hexdigest()
-    )[:600]
-    out = tmp_path / "corpus"
-    ing = StreamingIngest(
-        str(out), baseline, drift_threshold_bits=1e9, chunk_max_dup_ratio=0.5
-    )
-    ing.process_batch(
-        spark.createDataFrame(
-            [(1, text, "ok")], "doc_id LONG, text STRING, source STRING"
-        ),
-        0,
-    )
-    first = ing.compact_registries(spark)
-    assert first["chunk"]["generation"] == 0
-
-    # live tier is now empty; plant flip-window debris in the base
-    chunk_reg = ing.chunkdedup.registry_dir
-    assert fsutil.count_files(spark, chunk_reg, ".parquet") == 0
-    base = chunk_reg.rstrip("/") + "_base"
-    spark.read.parquet(fsutil.join(base, "gen=0")).write.parquet(
-        fsutil.join(base, "gen=77")
-    )
-
-    second = ing.compact_registries(spark)
-    assert second["chunk"].get("skipped") is None, (
-        "chunk compaction must run off the base manifest alone"
-    )
-    assert second["chunk"]["generation"] == 1
-    names = set(fsutil.list_names(spark, base, dirs_only=True))
-    assert names == {"gen=1"}, f"orphaned generations not reclaimed: {names}"
