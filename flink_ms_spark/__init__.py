@@ -59,13 +59,10 @@ _EXPORTS = {
     "train_pq_codebooks": "flink_ms_spark.operators.similarity",
     "pq_encode": "flink_ms_spark.operators.similarity",
     "pq_topk": "flink_ms_spark.operators.similarity",
-    "connected_components": "flink_ms_spark.operators.cluster",
     "connected_components_bipartite": "flink_ms_spark.operators.cluster",
     "canonical_per_component": "flink_ms_spark.operators.cluster",
     "asof_join_backward": "flink_ms_spark.operators.asof",
     "banded_range_join": "flink_ms_spark.operators.rangejoin",
-    "streaming_exact_dedup": "flink_ms_spark.streaming.dedup",
-    "streaming_curate": "flink_ms_spark.streaming.curate",
     "quality_columns": "flink_ms_spark.operators.text",
     "predict_lang": "flink_ms_spark.operators.text",
     "scrub_pii": "flink_ms_spark.operators.text",
@@ -78,34 +75,28 @@ _EXPORTS = {
     "pixel_stats": "flink_ms_spark.operators.multimodal",
     "drop_duplicated_lines": "flink_ms_spark.operators.text",
     # ANN index lifecycle
-    "build_pq_index": "flink_ms_spark.operators.similarity",
-    "load_pq_codebooks": "flink_ms_spark.operators.similarity",
-    "load_pq_codes": "flink_ms_spark.operators.similarity",
-    "load_pq_serving": "flink_ms_spark.operators.similarity",
+    "INDEX_KINDS": "flink_ms_spark.operators.similarity",
+    "build_index": "flink_ms_spark.operators.similarity",
+    "load_index": "flink_ms_spark.operators.similarity",
+    "load_artifact": "flink_ms_spark.operators.similarity",
+    "served_view": "flink_ms_spark.operators.similarity",
+    "reindex": "flink_ms_spark.operators.similarity",
+    "fold_ann_increments": "flink_ms_spark.operators.similarity",
+    "pq_index_topk": "flink_ms_spark.operators.similarity",
     "pq_topk_codes": "flink_ms_spark.operators.similarity",
-    "reindex_pq": "flink_ms_spark.operators.similarity",
-    "build_ivf_index": "flink_ms_spark.operators.similarity",
-    "load_ivf_centroids": "flink_ms_spark.operators.similarity",
-    "reindex_ivf": "flink_ms_spark.operators.similarity",
     "ivf_assignment_stats": "flink_ms_spark.operators.similarity",
     "ivf_cell_stats": "flink_ms_spark.operators.similarity",
     "ivf_query_topk": "flink_ms_spark.operators.similarity",
-    "build_ivfpq_index": "flink_ms_spark.operators.similarity",
     "ivfpq_query_topk": "flink_ms_spark.operators.similarity",
     "ivf_members_topk": "flink_ms_spark.operators.similarity",
-    "load_ivf_members": "flink_ms_spark.operators.similarity",
-    "has_ivf_members": "flink_ms_spark.operators.similarity",
     "assign_members": "flink_ms_spark.operators.similarity",
     "pq_subspace_error": "flink_ms_spark.operators.similarity",
     "read_index_manifest": "flink_ms_spark.operators.similarity",
     "StreamingAnnIngest": "flink_ms_spark.streaming.ann_ingest",
-    "load_codes": "flink_ms_spark.streaming.ann_ingest",
     # physical layout
     "fan_out": "flink_ms_spark.partitioning",
     "write_bucketed": "flink_ms_spark.partitioning",
     "salted_join": "flink_ms_spark.partitioning",
-    "compact_parquet": "flink_ms_spark.partitioning",
-    "partitioned_write": "flink_ms_spark.partitioning",
     "zorder_write": "flink_ms_spark.partitioning",
     # correctness harness
     "compare": "flink_ms_spark.oracle",

@@ -550,13 +550,11 @@ def cmd_compact_registry(args: argparse.Namespace) -> None:
 
 
 def cmd_build_ann_index(args: argparse.Namespace) -> None:
-    """Build-once half of the ANN lifecycle: train the index artifact
-    on the embedding parquet and persist it with a drift baseline.
-    --kind pq (default) trains PQ codebooks + encodes the code table
-    (operators/similarity.py:build_pq_index); --kind ivf trains the
-    coarse k-means quantizer ivf_kmeans_topk/ivf_pq_topk serve
-    (build_ivf_index); --kind ivfpq fuses both (build_ivfpq_index).
-    Serving jobs then run against the persisted artifact without
+    """Build-once half of the ANN lifecycle: train the index artifacts
+    of ``--kind`` (pq codebooks, ivf coarse centroids, or both for
+    ivfpq) on the embedding parquet and persist them, the served
+    tables and a drift baseline (operators/similarity.py:build_index).
+    Serving jobs then run against the persisted index without
     retraining.
 
     REBUILD OVER AN EXISTING INDEX is swap-safe, never in-place: the
@@ -570,187 +568,100 @@ def cmd_build_ann_index(args: argparse.Namespace) -> None:
     (this lane has no gate, so it must not discard a tail silently)."""
     from flink_ms_spark import fsutil
     from flink_ms_spark.operators.similarity import (
+        INDEX_KINDS,
         INDEX_MANIFEST,
-        _swap_index,
+        _replace_index,
+        build_index,
         live_increment_census,
+        persisted_tables,
         read_index_manifest,
     )
 
     spark = _spark("[ANN] build-index")
     df = spark.read.parquet(args.input)
     target = args.index
-    existing = fsutil.exists(
-        spark, fsutil.join(target, INDEX_MANIFEST)
-    ) or any(
-        fsutil.is_dir(spark, fsutil.join(target, d))
-        for d in ("centroids", "codebooks", "codes", "members")
-    )
-    build_path, generation = target, 0
-    if existing:
+
+    def build(path: str, generation: int) -> dict:
+        return build_index(
+            df, path, args.kind, n_cells=args.cells,
+            n_subspaces=args.subspaces, n_codes=args.codes,
+            id_col=args.id_col, vec_col=args.vec_col, seed=args.seed,
+            # the ops lane records the build-time quantizer health so
+            # reindex-ann can measure drift against it later
+            record_stats=True, generation=generation,
+            persist_members=args.persist_members,
+        )
+
+    generation = 0
+    if not fsutil.exists(spark, fsutil.join(target, INDEX_MANIFEST)):
+        arts = build(target, 0)  # fresh, or a build that never committed
+    else:
         m = read_index_manifest(spark, target)
         generation = m["generation"] + 1
-        build_path = target.rstrip("/") + ".rebuilding"
-        # marker BEFORE the census (the reindex gate's ordering): once
-        # it exists ingest refuses to COMMIT, so a batch racing this
-        # check stays uncommitted and replays — landed-after-census
-        # increments can no longer be silently discarded by the swap
-        fsutil.delete(spark, build_path)
-        fsutil.mkdirs(spark, build_path)
-        stamped, legacy, _stale = live_increment_census(
-            spark, target, m["kind"], m["generation"]
-        )
-        if stamped or legacy:
-            fsutil.delete(spark, build_path)  # unblock ingest
-            raise SystemExit(
-                f"build-ann-index: {target} has "
-                f"{len(stamped) + len(legacy)} live streaming increment "
-                f"batch(es); rebuilding here would discard them with NO "
-                f"coverage gate. Use reindex-ann (optionally --force), "
-                f"whose gate proves the rebuild input keeps every served "
-                f"id — or reindex-ann --fold first to fold the tail into "
-                f"the base."
-            )
 
-    try:
-        if args.kind == "ivfpq":
-            from flink_ms_spark.operators.similarity import build_ivfpq_index
+        def rebuild(tmp: str) -> dict:
+            # the census runs after the marker exists (the reindex
+            # gate's ordering): ingest then refuses to COMMIT, so a
+            # batch racing this check stays uncommitted and replays
+            live = [b for t in INDEX_KINDS[m["kind"]].tables
+                    for b in live_increment_census(spark, target, t,
+                                                   m["generation"])[0]]
+            if live:
+                raise SystemExit(
+                    f"build-ann-index: {target} has {len(live)} live "
+                    f"streaming increment batch(es); rebuilding here would "
+                    f"discard them with NO coverage gate. Use reindex-ann "
+                    f"(optionally --force), whose gate proves the rebuild "
+                    f"input keeps every served id — or reindex-ann --fold "
+                    f"first to fold the tail into the base."
+                )
+            return build(tmp, generation)
 
-            cents, cb = build_ivfpq_index(
-                df,
-                build_path,
-                n_cells=args.cells,
-                n_subspaces=args.subspaces,
-                n_codes=args.codes,
-                id_col=args.id_col,
-                vec_col=args.vec_col,
-                seed=args.seed,
-                generation=generation,
-                record_stats=True,
-                persist_members=args.persist_members,
-            )
-            members = " + members table" if args.persist_members else ""
-            desc = (f"ivfpq, {cents.shape[0]} cells, "
-                    f"{cb.shape[0]} subspaces x {cb.shape[1]} codes, "
-                    f"dim {cents.shape[1]}{members}")
-        elif args.kind == "ivf":
-            from flink_ms_spark.operators.similarity import build_ivf_index
-
-            cents = build_ivf_index(
-                df,
-                build_path,
-                n_cells=args.cells,
-                vec_col=args.vec_col,
-                seed=args.seed,
-                record_stats=True,
-                persist_members=args.persist_members,
-                id_col=args.id_col,
-                generation=generation,
-            )
-            members = " + members table" if args.persist_members else ""
-            desc = f"ivf, {cents.shape[0]} cells, dim {cents.shape[1]}{members}"
-        else:
-            from flink_ms_spark.operators.similarity import build_pq_index
-
-            cb = build_pq_index(
-                df,
-                build_path,
-                n_subspaces=args.subspaces,
-                n_codes=args.codes,
-                id_col=args.id_col,
-                vec_col=args.vec_col,
-                seed=args.seed,
-                # the ops lane records the build-time quantization error
-                # so reindex-ann can measure drift against it later
-                record_stats=True,
-                generation=generation,
-            )
-            desc = f"{cb.shape[0]} subspaces x {cb.shape[1]} codes"
-    except BaseException:
-        if build_path != target:
-            fsutil.delete(spark, build_path)  # unblock ingest
-        raise
-    if build_path != target:
-        _swap_index(spark, target, build_path)
+        arts = _replace_index(spark, target, rebuild)
+    parts = [args.kind]
+    if "centroids" in arts:
+        parts.append(f"{arts['centroids'].shape[0]} cells")
+    if "codebooks" in arts:
+        n_sub, n_codes = arts["codebooks"].shape[:2]
+        parts.append(f"{n_sub} subspaces x {n_codes} codes")
+    desc = ", ".join(parts)
+    tables = persisted_tables(spark, target, INDEX_KINDS[args.kind])
+    if "members" in tables:
+        desc += " + members table"
+    if generation:
         desc += f", swapped in at generation {generation}"
-    if args.kind == "pq":
-        from flink_ms_spark.operators.similarity import load_pq_codes
-
-        n = load_pq_codes(spark, target, id_col=args.id_col).count()
+    if tables:
+        n = spark.read.parquet(
+            fsutil.join(target, tables[-1], f"gen={generation}")).count()
         desc += f", {n} vectors encoded"
     print(f"index {target}: {desc}")
 
 
 def cmd_reindex_ann(args: argparse.Namespace) -> None:
     """Monitor → reindex half of the ANN lifecycle: measure the
-    current corpus's quantization error under the serving index's
-    codebooks and rebuild + atomically swap the index when the error
-    has drifted past --max-drift times the build-time baseline
-    (operators/similarity.py:reindex_pq). ANN degrades silently under
-    distribution shift — queries still return k results, just worse
-    ones — so the pipeline needs this explicit health loop. The index
-    KIND (pq codebooks / ivf coarse quantizer / ivfpq both) is read
-    from the index manifest, so one lane monitors every family; the
-    ivfpq monitor watches coarse assignment error AND PQ quantization
-    error (either drifting past the bar rebuilds). ``--fold`` is the
-    cheap maintenance sibling: fold the live increment tail into the
-    base at generation+1 without retraining
-    (similarity.fold_ann_increments)."""
-    from flink_ms_spark.operators.similarity import (
-        fold_ann_increments,
-        read_index_manifest,
-        reindex_ivf,
-        reindex_ivfpq,
-        reindex_pq,
-    )
+    current corpus's error under each quantizer of the serving index
+    and rebuild + swap the index when any has drifted past --max-drift
+    times its build-time baseline (operators/similarity.py:reindex).
+    ANN degrades silently under distribution shift — queries still
+    return k results, just worse ones — so the pipeline needs this
+    explicit health loop. The index kind is read from the manifest, so
+    one lane monitors every family. ``--fold`` is the cheap maintenance
+    sibling: fold the live increment tail into the base at
+    generation+1 without retraining (similarity.fold_ann_increments)."""
+    from flink_ms_spark.operators.similarity import fold_ann_increments, reindex
 
     spark = _spark("[ANN] reindex")
     if args.fold:
-        report = fold_ann_increments(spark, args.index,
-                                     id_col=args.id_col, vec_col=args.vec_col)
-        for k, v in report.items():
-            print(f"{k}\t{v}")
-        return
-    if not args.input:
+        report = fold_ann_increments(spark, args.index, id_col=args.id_col)
+    elif not args.input:
         raise SystemExit("reindex-ann: --input is required unless --fold")
-    df = spark.read.parquet(args.input)
-    kind = read_index_manifest(spark, args.index)["kind"]
-    if kind == "ivfpq":
-        report = reindex_ivfpq(
-            spark,
-            args.index,
-            df,
-            max_drift=args.max_drift,
-            force=args.force,
-            id_col=args.id_col,
-            vec_col=args.vec_col,
-            seed=args.seed,
-            allow_missing=args.allow_missing,
-        )
-    elif kind == "ivf":
-        report = reindex_ivf(
-            spark,
-            args.index,
-            df,
-            max_drift=args.max_drift,
-            force=args.force,
-            vec_col=args.vec_col,
-            seed=args.seed,
-            id_col=args.id_col,
-            allow_missing=args.allow_missing,
-        )
     else:
-        report = reindex_pq(
-            spark,
-            args.index,
-            df,
-            max_drift=args.max_drift,
-            force=args.force,
-            id_col=args.id_col,
-            vec_col=args.vec_col,
-            seed=args.seed,
+        report = reindex(
+            spark, args.index, spark.read.parquet(args.input),
+            max_drift=args.max_drift, force=args.force, id_col=args.id_col,
+            vec_col=args.vec_col, seed=args.seed,
             allow_missing=args.allow_missing,
         )
-    print(f"kind\t{kind}")
     for k, v in report.items():
         print(f"{k}\t{v}")
 
@@ -761,10 +672,10 @@ def cmd_ann_status(args: argparse.Namespace) -> None:
     (servable batches/rows at the current generation vs stale-gen
     debris awaiting cleanup), the tail/base ratio (the lookup-cost
     health signal — every serve reads the full tail until a reindex or
-    fold_ann_increments folds it), drift baseline, and whether a
-    rebuild is in flight (the .rebuilding intent marker — ingest
-    commits are refused while it exists). The pre-flight check before
-    a reindex and the post-mortem after a crashed one.
+    fold folds it), drift baseline, and whether a rebuild is in flight
+    (the .rebuilding intent marker — ingest commits are refused while
+    it exists). The pre-flight check before a reindex and the
+    post-mortem after a crashed one.
 
     SCALE CONTRACT: default counts touch parquet FOOTER metadata only
     (empty-schema counts over the base/tail dirs — no vector columns
@@ -773,19 +684,20 @@ def cmd_ann_status(args: argparse.Namespace) -> None:
     genuinely corpus-scale number: the deduplicated served-row count
     through the same merged recency view serving uses (a
     window-function job over base+tail)."""
-    import json as _json
-
     from flink_ms_spark import fsutil
     from flink_ms_spark.operators.similarity import (
-        has_ivf_members,
+        INDEX_KINDS,
+        _read_stats,
         live_increment_census,
+        persisted_tables,
         read_index_manifest,
+        served_view,
     )
 
     spark = _spark("[ANN] status")
     m = read_index_manifest(spark, args.index)
-    kind, gen = m["kind"], m["generation"]
-    print(f"kind\t{kind}")
+    kind, gen = INDEX_KINDS[m["kind"]], m["generation"]
+    print(f"kind\t{kind.name}")
     print(f"generation\t{gen}")
     rebuilding = fsutil.is_dir(spark, args.index.rstrip("/") + ".rebuilding")
     print(f"rebuild_in_progress\t{str(rebuilding).lower()}")
@@ -794,73 +706,44 @@ def cmd_ann_status(args: argparse.Namespace) -> None:
         # empty schema → parquet footer row counts, no column IO
         return spark.read.parquet(*dirs).count() if dirs else 0
 
-    if kind == "ivf":
-        members = has_ivf_members(spark, args.index)
-        print(f"members_table\t{str(members).lower()}")
-        base_dir = fsutil.join(args.index, "members", f"gen={gen}")
-    else:
-        base_dir = fsutil.join(args.index, "codes", f"gen={gen}")
-        if not fsutil.is_dir(spark, base_dir) and fsutil.is_dir(
-            spark, fsutil.join(args.index, "codes")
-        ):
-            base_dir = fsutil.join(args.index, "codes")  # legacy pre-stamp
+    served = list(kind.tables)[-1]  # the table every query scans
+    has_served = served in persisted_tables(spark, args.index, kind)
+    if served == "members":  # optional: without it, nothing is served
+        print(f"members_table\t{str(has_served).lower()}")
+    base_dir = fsutil.join(args.index, served, f"gen={gen}")
     base_rows = _rows(base_dir) if fsutil.is_dir(spark, base_dir) else 0
-    if kind != "ivf" or has_ivf_members(spark, args.index):
+    if has_served:
         print(f"base_rows\t{base_rows}")
 
-    stamped, legacy, stale_dirs = live_increment_census(
-        spark, args.index, kind, gen
-    )
-    # the two live groups have CONFLICTING partition layouts (stamped
-    # gen=/batch_id= vs legacy batch_id=) — one read over both raises,
-    # so count each group separately and sum, as load_codes reads them
-    live_rows = _rows(*stamped) + _rows(*legacy)
-    print(f"live_increment_batches\t{len(stamped) + len(legacy)}")
+    live, stale_dirs = live_increment_census(spark, args.index, served, gen)
+    live_rows = _rows(*live)
+    print(f"live_increment_batches\t{len(live)}")
     print(f"live_increment_rows\t{live_rows}")
     print(f"stale_generation_dirs\t{stale_dirs}")
     if base_rows:
         print(f"tail_base_ratio\t{live_rows / base_rows:.4f}")
-
     if args.exact:
-        from flink_ms_spark.operators.similarity import (
-            load_ivf_members,
-            load_ivfpq_codes,
-        )
-        from flink_ms_spark.streaming.ann_ingest import load_codes
+        n = served_view(spark, args.index, served).count() if has_served else 0
+        print(f"served_rows\t{n}")
 
-        if kind == "ivf":
-            served = (
-                load_ivf_members(spark, args.index).count()
-                if has_ivf_members(spark, args.index)
-                else 0
-            )
-        elif kind == "ivfpq":
-            served = load_ivfpq_codes(spark, args.index).count()
-        else:
-            served = load_codes(spark, args.index).count()
-        print(f"served_rows\t{served}")
-
-    stats_path = fsutil.join(args.index, "stats.json")
-    if fsutil.exists(spark, stats_path):
-        stats = _json.loads(fsutil.read_text(spark, stats_path))
-        if kind == "ivfpq":
-            print(f"built_coarse_err\t{stats['coarse']['mean_sq_err']}")
-            print(f"built_pq_err\t{stats['pq']['mean_sq_err']}")
-        else:
-            print(f"built_mean_sq_err\t{stats['mean_sq_err']}")
-    else:
+    stats = _read_stats(spark, args.index, kind)
+    if stats is None:
         print("built_mean_sq_err\tmissing (reindex-ann reports stats-missing)")
+    elif len(stats) == 1:
+        print(f"built_mean_sq_err\t{next(iter(stats.values()))['mean_sq_err']}")
+    else:
+        for q, s in stats.items():
+            print(f"built_{q}_err\t{s['mean_sq_err']}")
 
 
 def cmd_ann_ingest(args: argparse.Namespace) -> None:
     """Streaming half of the ANN lifecycle: watch a JSONL directory of
-    (id, embedding) records and land each micro-batch as a
-    generation-stamped increment partition beside the persisted index
-    — PQ codes, IVF member rows, or fused IVF-PQ (cell, code) rows,
-    dispatched on the manifest kind
+    (id, embedding) records and land each micro-batch as
+    generation-stamped increment partitions beside the persisted
+    index's served tables, encoded with the kind's own kernels
     (streaming/ann_ingest.py:StreamingAnnIngest). Serving reads the
     merged view immediately (ann-query); a reindex swap under the
-    stream is survived in place (the worker reloads the new artifact
+    stream is survived in place (the worker reloads the new artifacts
     and re-encodes the batch — run()'s recovery lane). Re-running with
     the same checkpoint is exactly-once: replayed batches overwrite
     their own partitions."""
@@ -883,43 +766,35 @@ def cmd_ann_ingest(args: argparse.Namespace) -> None:
 
 def cmd_ann_query(args: argparse.Namespace) -> None:
     """Serve half: top-k against a persisted ANN index for one query
-    vector (comma-separated floats), dispatched on the manifest kind.
+    vector (comma-separated floats), through the index's MERGED served
+    view (similarity.served_view: base plus current-generation
+    streaming increments, latest batch winning per id), so ann-ingest
+    freshness serves immediately. Each kind has its serve kernel:
 
-    PQ: ADC scan over the MERGED code view (ann_ingest.load_codes —
-    base codes plus current-generation streaming increments, latest
-    batch winning per id). Reading ``codes/`` directly would silently
-    serve a STALE index the moment a streaming worker lands an
-    increment — the exact coherence class the generation machinery
-    exists to kill, so the serve lane goes through the same view the
-    coverage gate audits. Prints ``id<TAB>ad2``, nearest first.
-
-    IVFPQ: ADC over the MERGED code view (ivfpq_query_topk →
-    load_ivfpq_codes — probed cells' base partitions plus the
-    current-generation streaming increment tail, latest batch winning
-    per id), so ann-ingest freshness serves immediately. Prints
-    ``id<TAB>ad2``. With ``--rerank N`` (requires a members table,
-    build --persist-members) the top-N ADC candidates re-rank on
-    EXACT squared L2 from the probed cells' member partitions — the
-    FAISS refine stage; prints ``id<TAB>d2`` exact.
-
-    IVF: with a persisted members table (build --persist-members) the
-    lookup reads ONLY the probed cells' partitions plus the live
-    increment tail (ivf_members_topk — no corpus scan, streamed
-    vectors served). An explicit ``--input`` OVERRIDES the members
-    view (rank against that ad-hoc corpus instead — never silently
-    ignored); without members, --input is required: candidate vectors
-    are assigned cells in one narrow map and ranked ONLY within the
-    query's probed cells (ivf_query_topk) — freshness equals the
-    --input corpus, the documented batch-only contract. Prints
-    ``id<TAB>cos_sim``, nearest first."""
-    from flink_ms_spark.operators.similarity import read_index_manifest
+    - pq: ADC scan over the codes (pq_index_topk); prints
+      ``id<TAB>ad2``, nearest first.
+    - ivfpq: ADC over the probed cells' codes (ivfpq_query_topk);
+      prints ``id<TAB>ad2``. With ``--rerank N`` (requires a members
+      table, build --persist-members) the top-N ADC candidates re-rank
+      on EXACT squared L2 from the probed cells' member partitions —
+      the FAISS refine stage; prints ``id<TAB>d2`` exact.
+    - ivf: with a members table, reads ONLY the probed cells'
+      partitions plus the live tail (ivf_members_topk). An explicit
+      ``--input`` OVERRIDES the members view (rank that ad-hoc corpus
+      instead — never silently ignored); without members, --input is
+      required: candidates are assigned cells in one narrow map and
+      ranked ONLY within the query's probed cells (ivf_query_topk) —
+      freshness equals the --input corpus, the documented batch-only
+      contract. Prints ``id<TAB>cos_sim``, nearest first."""
+    from flink_ms_spark.operators import similarity as sim
 
     spark = _spark("[ANN] query")
     vec = [float(x) for x in args.vector.split(",")]
     q = spark.createDataFrame(
         [(-1, vec)], f"{args.id_col} LONG, {args.vec_col} ARRAY<DOUBLE>"
     )
-    kind = read_index_manifest(spark, args.index)["kind"]
+    kind = sim.read_index_manifest(spark, args.index)["kind"]
+    cols = dict(id_col=args.id_col, vec_col=args.vec_col)
     if args.rerank is not None and kind != "ivfpq":
         raise SystemExit(
             f"ann-query: --rerank is the IVF-PQ refine stage; this index "
@@ -927,63 +802,34 @@ def cmd_ann_query(args: argparse.Namespace) -> None:
             f"candidates — refusing rather than silently ignoring the flag."
         )
     if kind == "ivfpq":
-        from flink_ms_spark.operators.similarity import ivfpq_query_topk
-
-        out = ivfpq_query_topk(
-            spark, args.index, q, k=args.k, n_probe=args.n_probe,
-            id_col=args.id_col, vec_col=args.vec_col, rerank=args.rerank,
+        out = sim.ivfpq_query_topk(spark, args.index, q, k=args.k,
+                                   n_probe=args.n_probe, rerank=args.rerank,
+                                   **cols)
+    elif kind == "pq":
+        out = sim.pq_index_topk(spark, args.index, q, k=args.k, **cols)
+    elif not args.input and sim.persisted_tables(
+            spark, args.index, sim.INDEX_KINDS[kind]):
+        out = sim.ivf_members_topk(spark, args.index, q, k=args.k,
+                                   n_probe=args.n_probe, **cols)
+    elif not args.input:
+        raise SystemExit(
+            "ann-query on an ivf index without a members table needs "
+            "--input (embeddings parquet): the index persists only "
+            "the coarse quantizer, candidates come from the corpus "
+            "(rebuild with --persist-members for O(n_probe) "
+            "partition lookups and streaming freshness)"
         )
-        if args.rerank is not None:
-            for r in out.orderBy("rk").collect():
-                print(f"{r.b}\t{r.d2:.6f}")
-        else:
-            for r in out.orderBy("rk").collect():
-                print(f"{r.b}\t{r.ad2:.6f}")
-        return
-    if kind == "ivf":
-        from flink_ms_spark.operators.similarity import (
-            has_ivf_members,
-            ivf_members_topk,
-            ivf_query_topk,
-            load_ivf_centroids,
+    else:
+        corpus = spark.read.parquet(args.input).select(
+            F.col(args.id_col).cast("long").alias(args.id_col),
+            F.col(args.vec_col).cast("array<double>").alias(args.vec_col),
         )
-
-        if has_ivf_members(spark, args.index) and not args.input:
-            out = ivf_members_topk(
-                spark, args.index, q, k=args.k, n_probe=args.n_probe,
-                id_col=args.id_col, vec_col=args.vec_col,
-            )
-        else:
-            if not args.input:
-                raise SystemExit(
-                    "ann-query on an ivf index without a members table needs "
-                    "--input (embeddings parquet): the index persists only "
-                    "the coarse quantizer, candidates come from the corpus "
-                    "(rebuild with --persist-members for O(n_probe) "
-                    "partition lookups and streaming freshness)"
-                )
-            cents = load_ivf_centroids(spark, args.index)
-            corpus = spark.read.parquet(args.input).select(
-                F.col(args.id_col).cast("long").alias(args.id_col),
-                F.col(args.vec_col).cast("array<double>").alias(args.vec_col),
-            )
-            out = ivf_query_topk(
-                corpus, cents, q, k=args.k, id_col=args.id_col,
-                vec_col=args.vec_col, n_probe=args.n_probe,
-            )
-        for r in out.orderBy("rk").collect():
-            print(f"{r.b}\t{r.cos_sim:.6f}")
-        return
-    from flink_ms_spark.operators.similarity import load_pq_serving, pq_topk_codes
-
-    # codebooks + merged codes bound to ONE generation — a reindex
-    # landing mid-serve raises instead of pairing old books w/ new codes
-    cb, codes, _gen = load_pq_serving(spark, args.index, id_col=args.id_col)
-    out = pq_topk_codes(codes, cb, q, k=args.k, id_col=args.id_col,
-                        vec_col=args.vec_col)
+        out = sim.ivf_query_topk(
+            corpus, sim.load_artifact(spark, args.index, "centroids"), q,
+            k=args.k, n_probe=args.n_probe, **cols,
+        )
     for r in out.orderBy("rk").collect():
-        print(f"{r.b}\t{r.ad2:.6f}")
-
+        print(f"{r.b}\t{r[2]:.6f}")
 
 
 def cmd_sql(args: argparse.Namespace) -> None:

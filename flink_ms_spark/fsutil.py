@@ -124,12 +124,29 @@ def replace_text(spark: SparkSession, path: str, text: str) -> None:
                       "(filesystem returned false); manifest flip aborted")
 
 
-def total_bytes(spark: SparkSession, path: str) -> int:
-    """Recursive byte size from file statuses (no data read)."""
-    fs, jpath, _ = _fs(spark, path)
-    if not fs.exists(jpath):
-        return 0
-    return int(fs.getContentSummary(jpath).getLength())
+def swap_dir(spark: SparkSession, path: str, tmp: str, what: str) -> None:
+    """Install the fully written replacement ``tmp`` at ``path`` by
+    rename-aside: the live directory is never deleted before the
+    replacement is in place, so a crash at any step leaves a complete
+    copy on disk (possibly at ``<path>.old``) and a loud error. Both
+    renames are checked, since Hadoop reports most failures by
+    returning false; a failed install rolls the old copy back.
+
+    MAINTENANCE-WINDOW CONTRACT: between the two renames nothing is at
+    ``path``, so a concurrent reader may fail loudly mid-swap; run
+    swaps (index reindex/fold, registry compaction) in a maintenance
+    window, not under live readers. ``what`` names the directory in
+    the errors."""
+    old = path.rstrip("/") + ".old"
+    delete(spark, old)  # stale debris from a prior crash
+    if not rename(spark, path, old):
+        raise IOError(f"failed to move live {what} {path} aside; "
+                      f"replacement left at {tmp}, live {what} intact")
+    if not rename(spark, tmp, path):
+        restored = rename(spark, old, path)
+        raise IOError(f"failed to install the new {what} at {path}; old "
+                      f"{what} {'restored' if restored else f'left at {old}'}")
+    delete(spark, old)
 
 
 def count_files(spark: SparkSession, path: str, suffix: str = "") -> int:

@@ -24,61 +24,6 @@ from pyspark.sql import functions as F
 from flink_ms_spark.partitioning import materialize
 
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "a",
-    dst: str = "b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Min-label propagation over an undirected edge list.
-
-    Returns ``(node, component)`` for every node appearing in
-    ``pairs``; ``component`` is the smallest node id in the node's
-    connected component. Deterministic (pure min semilattice — the
-    fixpoint is independent of iteration/partition order).
-    """
-    sym = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionAll(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-    )
-    sym = sym.transform(materialize)
-    labels = sym.select("u").distinct().withColumn("comp", F.col("u"))
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(
-                labels.select(F.col("u").alias("v"), F.col("comp").alias("vcomp")),
-                "v",
-            )
-            .groupBy("u")
-            .agg(F.min("vcomp").alias("ncomp"))
-        )
-        proposed = labels.join(neighbor_min, "u", "left").select(
-            "u",
-            F.least(F.col("comp"), F.coalesce(F.col("ncomp"), F.col("comp"))).alias(
-                "comp"
-            ),
-            F.col("comp").alias("old"),
-        )
-        proposed = proposed.transform(materialize)
-        changed = proposed.filter(F.col("comp") < F.col("old")).count()
-        labels = proposed.select("u", "comp")
-        if changed == 0:
-            break
-    else:
-        # never silently return partial labels: min-label propagation
-        # moves one hop per round, so a chain longer than max_iter
-        # would otherwise split one real cluster into phantom clusters
-        # with no signal — the docstring's smallest-id guarantee is a
-        # contract, raise when it can't be met
-        raise RuntimeError(
-            f"connected components did not converge in {max_iter} rounds "
-            "(graph diameter exceeds max_iter — raise it, or densify the "
-            "edge list)"
-        )
-    return labels.select(F.col("u").alias("node"), F.col("comp").alias("component"))
-
-
 def canonical_per_component(components: DataFrame) -> DataFrame:
     """Cluster summary: one row per component with its size and the
     canonical (minimum-id) member — the doc a dedup pass would keep."""

@@ -27,8 +27,11 @@ final top-k.
 
 from __future__ import annotations
 
+import json
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -38,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from flink_ms_spark import fsutil
 from flink_ms_spark.partitioning import fan_out, keyed_kernel_width
 
 CAND_SCHEMA = T.StructType(
@@ -818,7 +822,7 @@ def pq_topk(
 ) -> DataFrame:
     """Encode-then-serve convenience wrapper around ``pq_topk_codes``
     (one-shot jobs / tests). A resident engine builds the code table
-    once with ``build_pq_index`` and serves via ``pq_topk_codes``."""
+    once with ``build_index`` and serves via ``pq_index_topk``."""
     enc = pq_encode(df, codebooks, id_col=id_col, vec_col=vec_col)
     return pq_topk_codes(
         enc,
@@ -844,7 +848,7 @@ def pq_topk_codes(
     ascending rank, ties by neighbor id.
 
     ``codes`` is (id, code ARRAY<INT>) — typically the persisted
-    ``build_pq_index`` output, so serving never touches raw corpus
+    ``build_index`` output, so serving never touches raw corpus
     vectors or retrains codebooks. Queries stay RAW (collected +
     broadcast — small by contract, like ``cosine_topk``); the corpus
     flows as CODES only. Per Arrow batch: one (n_queries ×
@@ -918,161 +922,16 @@ def pq_topk_codes(
     return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
 
 
+# ---------------------------------------------------- persisted ANN indexes
+# Build once, serve many, ingest online, monitor, rebuild: the model
+# lifecycle of the reference (train → publish a generation → serve →
+# update online → retrain) over three index families, driven by one
+# table (INDEX_KINDS). Each kind names its trained artifacts, its
+# served tables and their encode kernel; build_index, reindex,
+# fold_ann_increments, served_view and StreamingAnnIngest run every
+# kind off that table.
+
 INDEX_MANIFEST = "index_manifest.json"
-
-
-def read_index_manifest(spark, path: str) -> dict:
-    """Manifest of a persisted ANN index: ``{"kind": "pq"|"ivf",
-    "generation": N}``. The GENERATION is the coherence token the
-    whole lifecycle hangs on — every rebuild bumps it, every streaming
-    increment partition is stamped with it, and both the serving
-    reader (``ann_ingest.load_codes``) and live ingest workers
-    (``StreamingAnnIngest``) compare against it, so codes encoded
-    under one codebook generation can never be served as distances
-    against another generation's centroids (the silent-wrong-neighbor
-    failure mode). Indexes built before manifests existed read as
-    generation 0 with the kind inferred from the layout."""
-    import json as _json
-
-    from flink_ms_spark import fsutil
-
-    mpath = fsutil.join(path, INDEX_MANIFEST)
-    if fsutil.exists(spark, mpath):
-        return _json.loads(fsutil.read_text(spark, mpath))
-    # pre-manifest inference: centroids + PQ codebooks together can
-    # only be an ivfpq layout (a crashed fresh ivfpq build, since
-    # build_ivfpq_index now writes its manifest before the corpus
-    # pass) — classifying it "ivf" would silently mis-dispatch
-    # ann-query to the wrong serve lane instead of failing incomplete
-    has_cents = fsutil.is_dir(spark, fsutil.join(path, "centroids"))
-    has_books = fsutil.is_dir(spark, fsutil.join(path, "codebooks"))
-    kind = "ivfpq" if (has_cents and has_books) else ("ivf" if has_cents else "pq")
-    return {"kind": kind, "generation": 0}
-
-
-def _write_index_manifest(spark, path: str, kind: str, generation: int) -> None:
-    import json as _json
-
-    from flink_ms_spark import fsutil
-
-    fsutil.replace_text(
-        spark,
-        fsutil.join(path, INDEX_MANIFEST),
-        _json.dumps({"kind": kind, "generation": int(generation)}),
-    )
-
-
-def _swap_index(spark, path: str, tmp: str) -> None:
-    """Install the fully-written replacement index ``tmp`` at ``path``
-    by rename-aside: the live index is never deleted before the
-    replacement is in place, so a crash at any step leaves a complete
-    index on disk (possibly at ``<path>.old``) and a loud error.
-
-    MAINTENANCE-WINDOW CONTRACT (same as the registry compactors,
-    streaming/chunk_dedup.py): the two renames leave a brief window
-    with no index at ``path``, so a concurrent reader may fail loudly
-    mid-swap — run reindex in a maintenance window, not under live
-    queries. The never-a-mix guarantee (old complete index, new
-    complete index, or an ERROR) is structural on every artifact pair:
-    streaming increments (gen= partition prune), the IVF members serve
-    (members/gen=G pinned to the centroid load, load_ivf_members), the
-    PQ serve pair (codes/gen=G pinned to the codebook load,
-    load_pq_serving/load_pq_codes), and ingest commits (per-batch
-    generation + rebuild-marker checks). The one layout outside it is
-    a LEGACY pre-stamp flat ``codes/`` table, which serves in place
-    under this maintenance-window contract until its first reindex
-    rewrites it stamped."""
-    from flink_ms_spark import fsutil
-
-    old = path.rstrip("/") + ".old"
-    fsutil.delete(spark, old)
-    if not fsutil.rename(spark, path, old):
-        raise IOError(f"reindex: failed to move live index {path} aside; "
-                      f"rebuild left at {tmp}, serving index intact")
-    if not fsutil.rename(spark, tmp, path):
-        restored = fsutil.rename(spark, old, path)
-        raise IOError(f"reindex: failed to install rebuilt index at {path}; "
-                      f"old index {'restored' if restored else f'left at {old}'}")
-    fsutil.delete(spark, old)
-
-
-def build_pq_index(
-    df: DataFrame,
-    path: str,
-    n_subspaces: int = 16,
-    n_codes: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    sample_fraction: float | None = None,
-    codebooks: np.ndarray | None = None,
-    record_stats: bool = False,
-    generation: int = 0,
-) -> np.ndarray:
-    """Persist a PQ index: ``<path>/codebooks`` (subspace, code,
-    centroid) + ``<path>/codes/gen=G`` (id, code array) as parquet —
-    the code table is stamped with the generation whose codebooks
-    encoded it, so a serve that paired codebooks with a generation can
-    fail LOUD if a reindex swap lands mid-read (see load_pq_serving)
-    instead of silently scanning new codes under old codebooks. Build
-    once, serve many via ``pq_topk_codes`` (the catalog's ``pq_topk``
-    query serves this index, rebuilding only when the fixture
-    changes). Returns the codebooks. Pass precomputed ``codebooks``
-    (e.g. from ``pq_codebooks_from_parquet``) to skip training — how
-    the catalog query keeps its codebooks bit-identical to the DuckDB
-    oracle builder's.
-
-    ``record_stats=True`` additionally writes ``<path>/stats.json``
-    with the build-time mean quantization error — the baseline
-    :func:`reindex_pq` compares against (opt-in: it costs one extra
-    corpus pass, and the catalog's benched build path doesn't need
-    it). ``generation`` stamps the index manifest — leave at 0 for a
-    fresh build; :func:`reindex_pq` bumps it on every swap so
-    streaming workers and the merged-code reader can detect a
-    codebook change (see read_index_manifest)."""
-    cb = (
-        np.asarray(codebooks, dtype=np.float64)
-        if codebooks is not None
-        else train_pq_codebooks(
-            df,
-            n_subspaces=n_subspaces,
-            n_codes=n_codes,
-            vec_col=vec_col,
-            seed=seed,
-            sample_fraction=sample_fraction,
-        )
-    )
-    spark = df.sparkSession
-    rows = [
-        (s, c, [float(x) for x in cb[s, c]])
-        for s in range(cb.shape[0])
-        for c in range(cb.shape[1])
-    ]
-    spark.createDataFrame(rows, "subspace INT, code INT, centroid ARRAY<DOUBLE>").write.mode(
-        "overwrite"
-    ).parquet(f"{path}/codebooks")
-    # REBALANCE before the write (guide §6): the encode fan-out would
-    # otherwise land one tiny file per task (64 files for a 560 KB
-    # fixture code table — measured), and every serve scan then pays
-    # per-file open + one Python-runner task per file. AQE sizes the
-    # output by advisoryPartitionSizeInBytes, so a 100 TB code table
-    # still splits into ~128 MB files while a fixture lands one.
-    pq_encode(df, cb, id_col=id_col, vec_col=vec_col).hint(
-        "rebalance"
-    ).write.mode("overwrite").parquet(
-        f"{path}/codes/gen={generation}"
-    )
-    _write_index_manifest(spark, path, "pq", generation)
-    if record_stats:
-        import json as _json
-
-        from flink_ms_spark import fsutil
-
-        stats = pq_quantization_error(df, cb, vec_col=vec_col)
-        fsutil.replace_text(
-            spark, fsutil.join(path, "stats.json"), _json.dumps(stats)
-        )
-    return cb
 
 
 def pq_quantization_error(
@@ -1138,230 +997,11 @@ def _drift_ratio(built: dict | None, cur_err: float) -> float:
     return 1.0 if cur_err <= 1e-12 else float("inf")
 
 
-def reindex_pq(
-    spark,
-    path: str,
-    df: DataFrame,
-    max_drift: float = 1.2,
-    force: bool = False,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    allow_missing: bool = False,
-) -> dict:
-    """Monitor → reindex half of the ANN lifecycle (the Faiss-ops
-    policy loop): measure the CURRENT corpus's quantization error
-    under the SERVING index's codebooks, compare to the error recorded
-    at build time (``stats.json``), and rebuild + swap the index when
-    the ratio exceeds ``max_drift``.
-
-    Crash ordering mirrors neardup.compact_registry: the replacement
-    index is fully written to ``<path>.rebuilding``, then swapped in
-    by rename-aside (see _swap_index for the crash argument and the
-    MAINTENANCE-WINDOW contract — no concurrent queries or live
-    ingest workers during the swap; a worker that survives anyway
-    fails loud on the generation stamp, never lands servable stale
-    codes). Returns a report dict ({action:
-    healthy|rebuilt|stats-missing, drift ratio, errors, generation}).
-
-    STREAMING-INCREMENT COHERENCE: the live index may carry
-    ``codes_increments/`` partitions landed by StreamingAnnIngest —
-    ids that exist ONLY there (or whose latest embedding does). The
-    swap discards the increments dir wholesale (its codes were encoded
-    under the outgoing codebooks and are meaningless under the new
-    ones), so before rebuilding, every CURRENTLY SERVED id — base and
-    increments, via the same merged view serving uses — must appear in
-    the rebuild input ``df``: anti-join count must be 0, else refuse.
-    ``allow_missing=True`` is the explicit retention/deletion path
-    (rebuild from a corpus that intentionally dropped ids); the report
-    then records ``dropped_ids`` so the shrink is visible, never
-    silent. The rebuilt index starts with NO increments and a bumped
-    manifest generation.
-
-    THE GATE PROVES ID COVERAGE ONLY — not embedding recency. An id
-    whose LATEST embedding arrived via an increment (a re-sent id
-    superseding its base row, the documented recency contract) passes
-    the gate even when ``df`` carries that id's STALE embedding; the
-    swap would then silently revert the vector to the older value.
-    The gate cannot see this (codes are not invertible to embeddings,
-    and increments carry no timestamps), so the operational contract
-    is: **the rebuild input must be the latest corpus snapshot** — the
-    same upstream table the streaming ingest reads from, snapshotted
-    at or after the last landed batch. No served ID is ever lost; a
-    served id's VALUE is only as fresh as the rebuild input.
-
-    An index built before stats recording (no ``stats.json``) cannot
-    measure drift — it reports ``stats-missing`` and rebuilds only
-    under ``force`` (silently assuming health would defeat the
-    monitor)."""
-    import json as _json
-
-    from flink_ms_spark import fsutil
-
-    cb = load_pq_codebooks(spark, path)
-    cur = pq_quantization_error(df, cb, vec_col=vec_col)
-    stats_path = fsutil.join(path, "stats.json")
-    built = (
-        _json.loads(fsutil.read_text(spark, stats_path))
-        if fsutil.exists(spark, stats_path)
-        else None
-    )
-    if built is None and not force:
-        return {"action": "stats-missing", "current_err": cur["mean_sq_err"]}
-    ratio = _drift_ratio(built, cur["mean_sq_err"])
-    if not force and ratio <= max_drift:
-        return {
-            "action": "healthy",
-            "drift_ratio": round(ratio, 4),
-            "built_err": built["mean_sq_err"],
-            "current_err": cur["mean_sq_err"],
-        }
-
-    # INTENT MARKER: create the rebuild dir BEFORE the coverage gate.
-    # Ingest workers refuse to COMMIT a batch while it exists (the
-    # post-write check in StreamingAnnIngest), so every batch whose
-    # commit preceded the marker is on disk when the gate's anti-join
-    # reads the served set, and every later batch replays after the
-    # swap — no batch can land-and-commit inside the gate→swap window
-    # and be silently discarded with the increments dir. A crashed
-    # rebuild leaves the marker and ingest fails LOUD until reindex is
-    # re-run (which clears the debris first) — fail-stop, never lossy.
-    gen = read_index_manifest(spark, path)["generation"]
-    tmp = path.rstrip("/") + ".rebuilding"
-    fsutil.delete(spark, tmp)  # stale debris from a prior crash
-    fsutil.mkdirs(spark, tmp)
-    try:
-        # the gate runs unconditionally: a rebuild input that lost BASE
-        # ids (bad upstream filter) is the same silent-shrink class as
-        # one that lost increment-only ids — load_codes is the serving
-        # truth either way (it degrades to base-only w/o increments)
-        from flink_ms_spark.streaming.ann_ingest import load_codes
-
-        served = load_codes(spark, path, id_col=id_col).select(id_col)
-        dropped = served.join(df.select(id_col), id_col, "left_anti").count()
-        if dropped and not allow_missing:
-            raise ValueError(
-                f"reindex_pq: {dropped} served id(s) (streaming increments "
-                f"or base) are missing from the rebuild input — the swap "
-                f"would silently drop them from serving. Rebuild from a "
-                f"corpus that covers every served id, or pass "
-                f"allow_missing=True to shrink deliberately."
-            )
-        new_cb = build_pq_index(
-            df,
-            tmp,
-            n_subspaces=cb.shape[0],
-            n_codes=cb.shape[1],
-            id_col=id_col,
-            vec_col=vec_col,
-            seed=seed,
-            record_stats=True,
-            generation=gen + 1,
-        )
-        new_err = _json.loads(
-            fsutil.read_text(spark, fsutil.join(tmp, "stats.json"))
-        )
-    except BaseException:
-        fsutil.delete(spark, tmp)  # unblock ingest on a refused rebuild
-        raise
-    _swap_index(spark, path, tmp)
-    return {
-        "action": "rebuilt",
-        "drift_ratio": round(ratio, 4) if built else None,
-        "built_err": built["mean_sq_err"] if built else None,
-        "current_err": cur["mean_sq_err"],
-        "rebuilt_err": new_err["mean_sq_err"],
-        "subspaces": int(new_cb.shape[0]),
-        "codes": int(new_cb.shape[1]),
-        "generation": gen + 1,
-        "dropped_ids": dropped,
-    }
-
-
-def load_pq_codebooks(spark, path: str) -> np.ndarray:
-    rows = spark.read.parquet(f"{path}/codebooks").collect()
-    n_sub = max(r.subspace for r in rows) + 1
-    n_codes = max(r.code for r in rows) + 1
-    cb = np.empty((n_sub, n_codes, len(rows[0].centroid)))
-    for r in rows:
-        cb[r.subspace, r.code] = r.centroid
-    return cb
-
-
-def load_pq_codes(
-    spark, path: str, expected_generation: int | None = None,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """The BASE code table of a persisted PQ index — (id, code) —
-    resolved to one generation. ``expected_generation`` pins the read
-    for a caller that already loaded codebooks under that generation
-    (load_pq_serving); ``None`` reads the manifest's current one.
-
-    Layout resolution: ``codes/gen=G`` is the stamped layout
-    (build_pq_index). A stamped table whose pinned generation dir is
-    MISSING raises loudly — the index was reindexed mid-serve, and
-    scanning the new generation's codes under the old codebooks would
-    be silently wrong. A table with no gen= dirs at all is the legacy
-    pre-stamp layout (read in place as-is; its coherence relies on the
-    documented maintenance window — reindex rewrites it stamped)."""
-    from flink_ms_spark import fsutil
-
-    gen = (
-        expected_generation
-        if expected_generation is not None
-        else read_index_manifest(spark, path)["generation"]
-    )
-    codes_dir = fsutil.join(path, "codes")
-    stamped = _stamped_dirs(spark, codes_dir)
-    if f"gen={gen}" in stamped:
-        out = spark.read.parquet(fsutil.join(codes_dir, f"gen={gen}"))
-    elif stamped:
-        raise IOError(
-            f"PQ code table for generation {gen} not found under "
-            f"{codes_dir} (present: {sorted(stamped)}) — the index was "
-            f"reindexed between the codebook load and this read. Retry "
-            f"against the current index; serving another generation's "
-            f"codes under these codebooks would be silently wrong."
-        )
-    elif fsutil.is_dir(spark, codes_dir):
-        out = spark.read.parquet(codes_dir)  # legacy pre-stamp layout
-    else:
-        raise IOError(f"PQ index at {path} has no code table ({codes_dir})")
-    return out.select(F.col(id_col), "code")
-
-
-def load_pq_serving(spark, path: str, id_col: str = "vec_id"):
-    """The coherent PQ serve pair: ``(codebooks, merged_codes,
-    generation)`` with every piece bound to ONE manifest generation —
-    codebooks, the gen-pinned base code table, and the
-    current-generation streaming increments (via
-    streaming.ann_ingest.load_codes). A reindex swap landing anywhere
-    between the reads raises loudly (manifest re-check + the pinned
-    codes read) instead of pairing old codebooks with new codes — the
-    ADC silent-garbage mix. This is the entry point every PQ serve
-    path (ann-query, the pq_topk catalog query) goes through."""
-    from flink_ms_spark.streaming.ann_ingest import load_codes
-
-    gen = read_index_manifest(spark, path)["generation"]
-    cb = load_pq_codebooks(spark, path)
-    if read_index_manifest(spark, path)["generation"] != gen:
-        raise IOError(
-            f"PQ index at {path} was reindexed while its codebooks were "
-            f"loading — retry the serve against the current index."
-        )
-    return cb, load_codes(spark, path, id_col=id_col, expected_generation=gen), gen
-
-
-# ---------------------------------------------------------------- IVF index
-# Persisted-artifact + health-loop lane for the IVF family. The served
-# artifact is the TRAINED COARSE QUANTIZER (centroid matrix) —
-# ivf_kmeans_topk / ivf_pq_topk take it as their `codebook` argument
-# and scan the corpus at query time (the cell assignment is a
-# broadcast map, postings never materialize). It drifts exactly like
+# Quantizer health. The coarse quantizer (centroid matrix) drifts like
 # PQ codebooks: under distribution shift the assignment error rises
-# and cells go unbalanced (skewed candidate lists), while every query
-# still "works" — so it needs the same build-baseline → monitor →
-# rebuild/swap loop, sharing the generation-stamp machinery above.
+# and cells go unbalanced (skewed candidate lists) while every query
+# still "works", so both get the same build-baseline → monitor →
+# rebuild loop (reindex).
 
 
 def ivf_cell_stats(
@@ -1532,410 +1172,6 @@ def assign_members(
     ).select(id_col, vec_col, "cell")
 
 
-def build_ivf_index(
-    df: DataFrame,
-    path: str,
-    n_cells: int = 8,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    sample_fraction: float | None = None,
-    centroids: np.ndarray | None = None,
-    record_stats: bool = False,
-    generation: int = 0,
-    persist_members: bool = False,
-    id_col: str = "vec_id",
-) -> np.ndarray:
-    """Persist an IVF coarse quantizer: ``<path>/centroids`` (cell,
-    centroid) parquet + generation manifest, optionally
-    ``<path>/stats.json`` with the build-time assignment-error /
-    cell-balance baseline :func:`reindex_ivf` compares against. Serve
-    by loading with :func:`load_ivf_centroids` and passing to
-    ``ivf_kmeans_topk`` / ``ivf_pq_topk`` as the coarse codebook.
-
-    ``persist_members=True`` additionally writes
-    ``<path>/members/gen=G`` — the corpus partitioned BY CELL (cell=C
-    directories) under the index generation that assigned the cells.
-    That turns a point lookup from "re-assign the whole corpus per
-    query" (:func:`ivf_query_topk` over raw embeddings) into an
-    O(n_probe) partition read (:func:`ivf_members_topk`), and it is
-    what gives the index a streaming increment lane
-    (StreamingAnnIngest lands member increments;
-    :func:`load_ivf_members` is the merged serving view). The gen=
-    level makes a reindex swap FAIL LOUD for an in-flight reader
-    instead of silently mixing: a lookup that probed cells under the
-    old centroids finds the old generation's members dir gone and
-    raises, never ranks new-assignment partitions under old probes.
-    Without members the index serves candidates from the query-time
-    corpus and is exactly as fresh as that corpus — batch-only by
-    contract."""
-    cents = (
-        np.asarray(centroids, dtype=np.float64)
-        if centroids is not None
-        else train_ivf_codebook(
-            df,
-            n_cells=n_cells,
-            vec_col=vec_col,
-            seed=seed,
-            sample_fraction=sample_fraction,
-        )
-    )
-    spark = df.sparkSession
-    rows = [(c, [float(x) for x in cents[c]]) for c in range(cents.shape[0])]
-    spark.createDataFrame(rows, "cell INT, centroid ARRAY<DOUBLE>").write.mode(
-        "overwrite"
-    ).parquet(f"{path}/centroids")
-    _write_index_manifest(spark, path, "ivf", generation)
-    if persist_members:
-        # rebalance by cell (guide §6): one AQE-sized file per cell
-        # partition instead of one per (task × cell) — the fixture
-        # members lane measured 234 files for 2 MB without it
-        assign_members(df, cents, id_col=id_col, vec_col=vec_col).hint(
-            "rebalance", F.col("cell")
-        ).write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(f"{path}/members/gen={generation}")
-    if record_stats:
-        import json as _json
-
-        from flink_ms_spark import fsutil
-
-        stats = ivf_assignment_stats(df, cents, vec_col=vec_col)
-        fsutil.replace_text(
-            spark, fsutil.join(path, "stats.json"), _json.dumps(stats)
-        )
-    return cents
-
-
-def load_ivf_centroids(spark, path: str) -> np.ndarray:
-    rows = spark.read.parquet(f"{path}/centroids").collect()
-    cents = np.empty((max(r.cell for r in rows) + 1, len(rows[0].centroid)))
-    for r in rows:
-        cents[r.cell] = r.centroid
-    return cents
-
-
-MEMBERS_INC = "members_increments"
-
-
-def has_ivf_members(spark, path: str) -> bool:
-    from flink_ms_spark import fsutil
-
-    return fsutil.is_dir(spark, fsutil.join(path, "members"))
-
-
-def _stamped_dirs(spark, inc_path: str) -> list[str]:
-    """gen=* partition dirs under an increments root ([] if none) —
-    guards the parquet read against an absent or empty directory."""
-    from flink_ms_spark import fsutil
-
-    if not fsutil.is_dir(spark, inc_path):
-        return []
-    return [
-        n
-        for n in fsutil.list_names(spark, inc_path, dirs_only=True)
-        if n.startswith("gen=")
-    ]
-
-
-def live_increment_census(
-    spark, path: str, kind: str, generation: int
-) -> tuple[list[str], list[str], int]:
-    """Directory-listing census of an index's increments root:
-    ``(stamped_live, legacy_live, stale_dirs)`` — absolute paths of
-    the batch partitions servable at ``generation`` (stamped under
-    ``gen=G/``; top-level legacy ``batch_id=N`` dirs count as live
-    only at generation 0, the pq pre-stamp contract), plus the count
-    of stale-generation dirs awaiting cleanup. Listing calls only, no
-    data read — safe against a 100 TB index. The two live groups are
-    returned SEPARATELY because their partition layouts conflict: one
-    ``spark.read`` over both raises AnalysisException, so callers
-    (ann-status) must read/count each group on its own, exactly as
-    load_codes does."""
-    from flink_ms_spark import fsutil
-
-    inc_name = "members_increments" if kind == "ivf" else "codes_increments"
-    inc_root = fsutil.join(path, inc_name)
-    stamped_live: list[str] = []
-    legacy_live: list[str] = []
-    stale = 0
-    if not fsutil.is_dir(spark, inc_root):
-        return stamped_live, legacy_live, stale
-    for gname in fsutil.list_names(spark, inc_root, dirs_only=True):
-        gdir = fsutil.join(inc_root, gname)
-        if gname == f"gen={generation}":
-            stamped_live.extend(
-                fsutil.join(gdir, b)
-                for b in fsutil.list_names(spark, gdir, dirs_only=True)
-            )
-        elif gname.startswith("batch_id=") and generation == 0:
-            legacy_live.append(gdir)
-        elif gname.startswith("gen=") or gname.startswith("batch_id="):
-            stale += 1
-    return stamped_live, legacy_live, stale
-
-
-def load_ivf_members(
-    spark,
-    path: str,
-    cells: list[int] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    expected_generation: int | None = None,
-) -> DataFrame:
-    """Serving view of a persisted IVF members table: (id, vec, cell)
-    = base members plus current-generation streaming increments,
-    latest batch winning per id. ``cells`` restricts the read to the
-    probed cells.
-
-    ``expected_generation`` is the coherence token for a caller that
-    already probed cells under a loaded centroid matrix
-    (ivf_members_topk): the base read targets ``members/gen=G``
-    explicitly, so a reindex swap completing between the centroid load
-    and this read raises loudly (the old generation's dir is gone)
-    instead of silently ranking NEW-assignment partitions under OLD
-    probes — the never-a-mix contract. ``None`` reads the manifest's
-    current generation.
-
-    IO shape at scale: the BASE read is a partition prune (members
-    land under ``gen=G/cell=C`` dirs), so a point lookup touches
-    O(n_probe) partitions of the big table. Increments are read in
-    FULL (gen-pruned only) even when ``cells`` is given —
-    deliberately: a re-sent id may have MOVED cells, so its latest row
-    can live in an increment for a cell the query didn't probe;
-    reading the whole live tail (small between reindexes by design —
-    reindex folds it) is what makes recency correct across cell moves.
-    The latest row's cell then decides visibility: an id whose newest
-    vector left the probed cells is dropped, never served stale."""
-    from flink_ms_spark import fsutil
-
-    gen = (
-        expected_generation
-        if expected_generation is not None
-        else read_index_manifest(spark, path)["generation"]
-    )
-    base_dir = fsutil.join(path, "members", f"gen={gen}")
-    if not fsutil.is_dir(spark, base_dir):
-        raise IOError(
-            f"IVF members table for generation {gen} not found under "
-            f"{path}/members — the index was reindexed (or is "
-            f"incomplete) between the centroid load and this read. "
-            f"Retry the lookup against the current index; serving a "
-            f"new generation's cell assignments under old-centroid "
-            f"probes would be silently wrong."
-        )
-    base = spark.read.parquet(base_dir).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col("cell").cast("int").alias("cell"),
-        F.lit(-1).cast("long").alias("_b"),
-    )
-    if cells is not None:
-        base = base.where(F.col("cell").isin([int(c) for c in cells]))
-    inc_path = fsutil.join(path, MEMBERS_INC)
-    stamped = _stamped_dirs(spark, inc_path)
-    if not stamped:
-        # no live tail: base ids are unique by construction, so the
-        # recency window (a shuffle on every point lookup) is skipped
-        return base.select(id_col, vec_col, "cell")
-    inc = (
-        spark.read.option("basePath", inc_path)
-        .parquet(*(fsutil.join(inc_path, n) for n in stamped))
-        .where(F.col("gen") == gen)
-        .select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.col("cell").cast("int").alias("cell"),
-            F.col("batch_id").cast("long").alias("_b"),
-        )
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("_b").desc())
-    out = (
-        base.unionByName(inc)
-        .withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") == 1)
-        .select(id_col, vec_col, "cell")
-    )
-    if cells is not None:
-        out = out.where(F.col("cell").isin([int(c) for c in cells]))
-    return out
-
-
-def ivf_members_topk(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_queries: int | None = MAX_BROADCAST_QUERIES,
-) -> DataFrame:
-    """Point-lookup IVF serve over a PERSISTED members table —
-    (a, b, cos_sim, rk), same probe/mask/tie contract as
-    :func:`ivf_query_topk` (each query ranked strictly against its own
-    ``n_probe`` cells) but without the query-time corpus scan: the
-    probed cells' partitions are the only base IO, plus the live
-    increment tail. This is the 100 TB point-lookup shape; the
-    corpus-scan variant remains for indexes built without members.
-
-    Swap coherence: the manifest generation is read ONCE up front and
-    pinned through the members read (load_ivf_members'
-    expected_generation), so a reindex completing mid-lookup raises
-    loudly rather than ranking the new generation's cell assignments
-    under probes computed from the old centroids."""
-    gen = read_index_manifest(spark, path)["generation"]
-    centers = load_ivf_centroids(spark, path)
-    q_rows = _collect_queries(
-        queries.select(id_col, vec_col), max_queries, "ivf_members_topk",
-        "ivf_kmeans_topk (per-cell self-join report)",
-    )
-    if not q_rows:
-        return spark.createDataFrame([], "a LONG, b LONG, cos_sim DOUBLE, rk INT")
-    q_ids, qm, qnorm = _query_matrices(q_rows, len(q_rows[0][1]))
-    allowed = _probe_cells(qm, centers, n_probe)
-    probed = [int(c) for c in np.flatnonzero(allowed.any(axis=0))]
-    members = load_ivf_members(spark, path, cells=probed,
-                               id_col=id_col, vec_col=vec_col,
-                               expected_generation=gen)
-    bq = spark.sparkContext.broadcast((q_ids, qnorm, allowed))
-    margin = 2 * k + 8
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, q, mask = bq.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield _score_masked(
-                ids, q, mask,
-                pdf[id_col].to_numpy(dtype=np.int64),
-                np.array(list(pdf[vec_col]), dtype=np.float64),
-                pdf["cell"].to_numpy(dtype=np.int64),
-                margin,
-            )
-
-    cands = members.mapInPandas(scan, CAND_SCHEMA).where(F.col("a") != F.col("b"))
-    return _rank_topk(cands, k)
-
-
-def reindex_ivf(
-    spark,
-    path: str,
-    df: DataFrame,
-    max_drift: float = 1.2,
-    force: bool = False,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    id_col: str = "vec_id",
-    allow_missing: bool = False,
-) -> dict:
-    """Monitor → reindex for the IVF coarse quantizer — the same
-    policy loop as :func:`reindex_pq` (measure the current corpus's
-    assignment error under the serving centroids, rebuild + swap past
-    ``max_drift`` × the build-time baseline) sharing the same
-    manifest-generation stamp and rename-aside swap (maintenance
-    window contract in _swap_index). An index WITHOUT a members table
-    has no increments and therefore no coverage gate — the centroids
-    are a pure function of the rebuild input and serving reads the
-    query-time corpus. An index WITH members gets the same id-coverage
-    gate as PQ: the swap discards ``members_increments`` and rewrites
-    ``members`` from ``df``, so every currently-served id (via the
-    same merged view serving uses) must appear in the rebuild input —
-    refuse otherwise; ``allow_missing=True`` is the reported,
-    deliberate shrink. Like PQ's gate, this proves id coverage only —
-    the rebuild input must be the latest corpus snapshot or a re-sent
-    id's value silently reverts. The report also carries cell balance
-    (built vs current max_cell_frac): balance decay with a healthy
-    error ratio is the early skew warning worth alerting on before it
-    trips the drift bar."""
-    import json as _json
-
-    from flink_ms_spark import fsutil
-
-    cents = load_ivf_centroids(spark, path)
-    cur = ivf_assignment_stats(df, cents, vec_col=vec_col)
-    stats_path = fsutil.join(path, "stats.json")
-    built = (
-        _json.loads(fsutil.read_text(spark, stats_path))
-        if fsutil.exists(spark, stats_path)
-        else None
-    )
-    if built is None and not force:
-        return {"action": "stats-missing", "current_err": cur["mean_sq_err"]}
-    ratio = _drift_ratio(built, cur["mean_sq_err"])
-    if not force and ratio <= max_drift:
-        return {
-            "action": "healthy",
-            "drift_ratio": round(ratio, 4),
-            "built_err": built["mean_sq_err"],
-            "current_err": cur["mean_sq_err"],
-            "built_max_cell_frac": built.get("max_cell_frac"),
-            "current_max_cell_frac": cur["max_cell_frac"],
-        }
-
-    # intent marker before the gate — same no-loss argument as
-    # reindex_pq (ingest post-write check refuses to commit while the
-    # rebuild dir exists, so the gate's served set is complete)
-    gen = read_index_manifest(spark, path)["generation"]
-    tmp = path.rstrip("/") + ".rebuilding"
-    fsutil.delete(spark, tmp)  # stale debris from a prior crash
-    fsutil.mkdirs(spark, tmp)
-    try:
-        had_members = has_ivf_members(spark, path)
-        dropped = 0
-        if had_members:
-            served = load_ivf_members(spark, path, id_col=id_col,
-                                      vec_col=vec_col).select(id_col)
-            dropped = served.join(df.select(id_col), id_col, "left_anti").count()
-            if dropped and not allow_missing:
-                raise ValueError(
-                    f"reindex_ivf: {dropped} served id(s) (streaming member "
-                    f"increments or base members) are missing from the rebuild "
-                    f"input — the swap would silently drop them from serving. "
-                    f"Rebuild from a corpus that covers every served id, or "
-                    f"pass allow_missing=True to shrink deliberately."
-                )
-        new_cents = build_ivf_index(
-            df,
-            tmp,
-            n_cells=cents.shape[0],
-            vec_col=vec_col,
-            seed=seed,
-            record_stats=True,
-            generation=gen + 1,
-            persist_members=had_members,
-            id_col=id_col,
-        )
-        new_stats = _json.loads(
-            fsutil.read_text(spark, fsutil.join(tmp, "stats.json"))
-        )
-    except BaseException:
-        fsutil.delete(spark, tmp)  # unblock ingest on a refused rebuild
-        raise
-    _swap_index(spark, path, tmp)
-    return {
-        "action": "rebuilt",
-        "drift_ratio": round(ratio, 4) if built else None,
-        "built_err": built["mean_sq_err"] if built else None,
-        "current_err": cur["mean_sq_err"],
-        "rebuilt_err": new_stats["mean_sq_err"],
-        "current_max_cell_frac": cur["max_cell_frac"],
-        "rebuilt_max_cell_frac": new_stats["max_cell_frac"],
-        "cells": int(new_cents.shape[0]),
-        "generation": gen + 1,
-        "dropped_ids": dropped,
-    }
-
-
-# ------------------------------------------------------------ IVF-PQ index
-# The FAISS staple's PERSISTED serving shape: coarse centroids pick the
-# cells, PQ codes price the candidates, and the code table lands
-# partitioned BY CELL under a generation stamp — a point lookup reads
-# O(n_probe) partitions of n_subspaces-byte codes, the cheapest
-# possible IO for corpus-scale ANN. `ivf_pq_topk` remains the
-# all-pairs REPORT shape over raw vectors; this is its build-once
-# serve-many counterpart (what `build_pq_index`+`pq_topk_codes` are to
-# `pq_topk`).
-
 
 def ivfpq_encode(
     df: DataFrame,
@@ -1950,7 +1186,12 @@ def ivfpq_encode(
     (per-subspace argmin — the pq_encode contract). The batch build's
     corpus pass and the streaming increment lane share this kernel, so
     a streamed row's (cell, code) pair can never diverge from what the
-    build would have produced for the same vector."""
+    build would have produced for the same vector. An ivfpq index is the
+    FAISS staple's persisted serving shape: coarse centroids pick the
+    cells, PQ codes price the candidates, and the codes land
+    partitioned by cell, so a point lookup reads O(n_probe) partitions
+    of n_subspaces-byte codes (ivfpq_query_topk); ``ivf_pq_topk`` is
+    the all-pairs report over raw vectors."""
     spark = df.sparkSession
     cents = np.asarray(centroids, dtype=np.float64)
     cb = np.asarray(codebooks, dtype=np.float64)
@@ -1986,189 +1227,601 @@ def ivfpq_encode(
                 }
             )
 
-    return df.select(id_col, vec_col).mapInPandas(enc, schema=schema)
+    return fan_out(df.select(id_col, vec_col)).mapInPandas(enc, schema=schema)
 
 
-def build_ivfpq_index(
+class _Quantizer(NamedTuple):
+    """One trained artifact of a persisted index."""
+
+    stats_key: str  # its key in a two-quantizer stats.json, and report prefix
+    dims: tuple[str, ...]  # names of the leading array dimensions
+    schema: str  # parquet row shape: index columns, then the centroid
+    train: Callable[..., np.ndarray]  # (df, {dim: size}, **trainer_kwargs)
+    measure: Callable[..., dict]
+
+
+_QUANTIZERS = {
+    "centroids": _Quantizer(
+        "coarse", ("cells",), "cell INT, centroid ARRAY<DOUBLE>",
+        lambda df, shape, **kw: train_ivf_codebook(
+            df, n_cells=shape["cells"], **kw),
+        ivf_assignment_stats,
+    ),
+    "codebooks": _Quantizer(
+        "pq", ("subspaces", "codes"),
+        "subspace INT, code INT, centroid ARRAY<DOUBLE>",
+        lambda df, shape, **kw: train_pq_codebooks(
+            df, n_subspaces=shape["subspaces"], n_codes=shape["codes"], **kw),
+        pq_quantization_error,
+    ),
+}
+
+
+def _encode_members(df, arts, id_col, vec_col):
+    return assign_members(df, arts["centroids"], id_col=id_col, vec_col=vec_col)
+
+
+@dataclass(frozen=True, eq=False)
+class IndexKind:
+    """One persisted ANN index family.
+
+    ``artifacts`` are its trained quantizers in training order
+    (``centroids``: the coarse IVF cells; ``codebooks``: the PQ
+    subspace codebooks). ``tables`` maps each served table, in write
+    order, to the kernel that encodes corpus rows into it; the batch
+    build and the streaming ingest share that kernel, so a streamed
+    row is exactly what the build would have written for the same
+    vector. A ``members`` table (raw vectors by cell, for point lookups
+    and the ivfpq refine stage) is written only on request; the LAST
+    table is the one every query scans. A table whose rows carry a
+    ``cell`` lands partitioned ``cell=C``."""
+
+    name: str
+    artifacts: tuple[str, ...]
+    tables: dict[str, Callable[..., DataFrame]]
+
+    def measure(self, df: DataFrame, arts: dict, vec_col: str) -> dict:
+        """Health of each quantizer over ``df``, keyed ``coarse`` (mean
+        squared assignment error and cell balance) and ``pq`` (mean
+        squared quantization error): the drift signal reindex watches."""
+        return {
+            _QUANTIZERS[a].stats_key: _QUANTIZERS[a].measure(
+                df, arts[a], vec_col=vec_col)
+            for a in self.artifacts
+        }
+
+
+INDEX_KINDS = {
+    k.name: k
+    for k in (
+        IndexKind("pq", ("codebooks",), {
+            "codes": lambda df, a, i, v: pq_encode(df, a["codebooks"], i, v),
+        }),
+        IndexKind("ivf", ("centroids",), {"members": _encode_members}),
+        # members BEFORE codes: a serve between an ingest's two writes
+        # then sees a not-yet-visible candidate (harmless) instead of a
+        # code whose exact vector is missing (the rerank would raise)
+        IndexKind("ivfpq", ("centroids", "codebooks"), {
+            "members": _encode_members,
+            "codes": lambda df, a, i, v: ivfpq_encode(
+                df, a["centroids"], a["codebooks"], i, v),
+        }),
+    )
+}
+
+
+def read_index_manifest(spark, path: str) -> dict:
+    """Manifest of a persisted ANN index: ``{"kind": "pq"|"ivf"|"ivfpq",
+    "generation": N}``. Every writer (build, reindex, fold) writes it
+    LAST, as the commit marker, so a directory without one is not an
+    index or holds an incomplete build, and reading it raises.
+
+    The GENERATION is the coherence token the lifecycle hangs on: every
+    rebuild bumps it, every served table and increment partition is
+    stamped with it, and serving reads and ingest workers compare
+    against it, so codes encoded under one generation's artifacts can
+    never be served against another generation's (the
+    silent-wrong-neighbor failure mode)."""
+    mpath = fsutil.join(path, INDEX_MANIFEST)
+    if not fsutil.exists(spark, mpath):
+        raise IOError(
+            f"{path} is not an index or incomplete build: no "
+            f"{INDEX_MANIFEST} (every build writes it last)"
+        )
+    return json.loads(fsutil.read_text(spark, mpath))
+
+
+def _write_index_manifest(spark, path: str, kind: str, generation: int) -> None:
+    fsutil.replace_text(
+        spark,
+        fsutil.join(path, INDEX_MANIFEST),
+        json.dumps({"kind": kind, "generation": int(generation)}),
+    )
+
+
+def load_artifact(spark, path: str, name: str) -> np.ndarray:
+    """A persisted quantizer as an array: (cells, dim) centroids or
+    (subspaces, codes, sub_dim) codebooks."""
+    rows = spark.read.parquet(fsutil.join(path, name)).collect()
+    keys = [tuple(r[:-1]) for r in rows]
+    out = np.empty(tuple(np.max(keys, axis=0) + 1) + (len(rows[0][-1]),))
+    for key, r in zip(keys, rows):
+        out[key] = r[-1]
+    return out
+
+
+def _write_artifact(spark, path: str, name: str, arr: np.ndarray) -> None:
+    rows = [(*ix, [float(x) for x in arr[ix]]) for ix in np.ndindex(arr.shape[:-1])]
+    spark.createDataFrame(rows, _QUANTIZERS[name].schema).write.mode(
+        "overwrite"
+    ).parquet(fsutil.join(path, name))
+
+
+def _dims(arts: dict) -> dict:
+    """{"cells": C, "subspaces": S, "codes": K}, as far as present."""
+    return {
+        d: int(n)
+        for a, arr in arts.items()
+        for d, n in zip(_QUANTIZERS[a].dims, arr.shape)
+    }
+
+
+def load_index(spark, path: str) -> tuple[IndexKind, dict, int]:
+    """``(kind, artifacts, generation)`` of the index at ``path``, all
+    bound to ONE manifest generation: a swap landing while the
+    artifacts load raises instead of pairing them with another
+    generation's tables. Pass the generation on to
+    :func:`served_view` as ``expected_generation``."""
+    m = read_index_manifest(spark, path)
+    kind = INDEX_KINDS[m["kind"]]
+    arts = {a: load_artifact(spark, path, a) for a in kind.artifacts}
+    if read_index_manifest(spark, path)["generation"] != m["generation"]:
+        raise IOError(
+            f"index at {path} was rebuilt while its artifacts were "
+            f"loading; retry against the current index."
+        )
+    return kind, arts, m["generation"]
+
+
+def persisted_tables(spark, path: str, kind: IndexKind) -> list[str]:
+    """The kind's served tables this index holds, in write order."""
+    return [
+        t for t in kind.tables
+        if t != "members" or fsutil.is_dir(spark, fsutil.join(path, t))
+    ]
+
+
+def _read_stats(spark, path: str, kind: IndexKind) -> dict | None:
+    """Build-time quantizer health from ``stats.json``, keyed as
+    :meth:`IndexKind.measure` keys it (None if not recorded). The file
+    holds the one quantizer's stats flat, or both keyed."""
+    p = fsutil.join(path, "stats.json")
+    if not fsutil.exists(spark, p):
+        return None
+    stats = json.loads(fsutil.read_text(spark, p))
+    if len(kind.artifacts) == 1:
+        return {_QUANTIZERS[kind.artifacts[0]].stats_key: stats}
+    return stats
+
+
+def _write_table(df: DataFrame, out: str) -> None:
+    """Write one served table. REBALANCE first (guide §6): the encode
+    fan-out would otherwise land one tiny file per task (64 files for a
+    560 KB fixture code table, 234 for 2 MB of members — measured), and
+    every serve scan then pays per-file open plus one Python-runner
+    task per file. AQE sizes the output by advisoryPartitionSizeInBytes,
+    so a 100 TB table still splits into ~128 MB files."""
+    cells = [F.col("cell")] if "cell" in df.columns else []
+    w = df.hint("rebalance", *cells).write.mode("overwrite")
+    (w.partitionBy("cell") if cells else w).parquet(out)
+
+
+def build_index(
     df: DataFrame,
     path: str,
+    kind: str = "pq",
     n_cells: int = 8,
     n_subspaces: int = 16,
     n_codes: int = 32,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
+    sample_fraction: float | None = None,
     centroids: np.ndarray | None = None,
-    pq_codebooks: np.ndarray | None = None,
-    generation: int = 0,
+    codebooks: np.ndarray | None = None,
     record_stats: bool = False,
+    generation: int = 0,
     persist_members: bool = False,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Persist an IVF-PQ index: ``<path>/centroids`` (coarse cells) +
-    ``<path>/codebooks`` (PQ) + ``<path>/codes/gen=G/cell=C`` (id,
-    code) — manifest kind ``ivfpq``. One fused narrow map
-    (:func:`ivfpq_encode`) assigns the home cell and PQ-encodes in a
-    single corpus pass; the only write partitioning is by cell, so
-    serving prunes directories.
+) -> dict[str, np.ndarray]:
+    """Persist an ANN index of ``kind`` (see INDEX_KINDS) at ``path``:
+    train each artifact on the corpus (or take the given ``centroids``
+    / ``codebooks``, e.g. the shared pyarrow trainers' output, which is
+    how the catalog queries stay bit-identical to their DuckDB oracle
+    builders), write it, encode the corpus into each served table
+    under ``<table>/gen=G``, and write the manifest LAST, as the
+    commit marker. Returns the artifacts by name.
 
-    FRESHNESS: the kind has the full lifecycle — StreamingAnnIngest
-    lands code increments under ``codes_increments/gen=G/batch_id=N``
-    (served by :func:`load_ivfpq_codes`, the merged view
-    ``ivfpq_query_topk`` reads), and :func:`reindex_ivfpq` is the
-    drift-monitored rebuild + swap. ``record_stats=True`` writes
-    ``stats.json`` with BOTH build-time baselines the reindex monitor
-    compares against — coarse assignment error (``"coarse"``,
-    ivf_assignment_stats) and PQ quantization error (``"pq"``,
-    pq_quantization_error) — at the cost of two extra corpus passes
-    (opt-in, like the other builders).
+    The generation stamp on the tables makes a swap mid-serve fail
+    LOUD for an in-flight reader instead of silently mixing: a reader
+    that loaded generation G's artifacts finds ``gen=G`` gone and
+    raises. Leave ``generation`` at 0 for a fresh build; reindex and
+    fold bump it.
 
-    ``persist_members=True`` additionally writes ``members/gen=G``
-    (the raw corpus partitioned by cell, exactly the IVF members
-    layout) — what enables ``ivfpq_query_topk(rerank=N)``, the FAISS
-    refine stage: exact re-ranking of the top-N ADC candidates from
-    O(n_probe) member partitions. Costs one extra corpus pass + the
-    raw-vector storage; the ADC-only serve never reads it."""
-    cents = (
-        np.asarray(centroids, dtype=np.float64)
-        if centroids is not None
-        else train_ivf_codebook(df, n_cells=n_cells, vec_col=vec_col, seed=seed)
-    )
-    cb = (
-        np.asarray(pq_codebooks, dtype=np.float64)
-        if pq_codebooks is not None
-        else train_pq_codebooks(
-            df, n_subspaces=n_subspaces, n_codes=n_codes,
-            vec_col=vec_col, seed=seed,
-        )
-    )
+    ``persist_members=True`` also writes ``members`` for the kinds
+    that have one: the raw corpus partitioned by cell, which turns an
+    ivf lookup into an O(n_probe) partition read (ivf_members_topk),
+    gives an ivf index a streaming lane, and enables the ivfpq refine
+    stage (ivfpq_query_topk(rerank=N)). Without members an ivf index
+    serves candidates from the query-time corpus and is exactly as
+    fresh as that corpus.
+
+    ``record_stats=True`` writes ``stats.json`` with each quantizer's
+    build-time health, the baseline :func:`reindex` compares against
+    (opt-in: one extra corpus pass per quantizer)."""
+    spec = INDEX_KINDS[kind]
+    given = {"centroids": centroids, "codebooks": codebooks}
+    shape = {"cells": n_cells, "subspaces": n_subspaces, "codes": n_codes}
     spark = df.sparkSession
-    crows = [(c, [float(x) for x in cents[c]]) for c in range(cents.shape[0])]
-    spark.createDataFrame(crows, "cell INT, centroid ARRAY<DOUBLE>").write.mode(
-        "overwrite"
-    ).parquet(f"{path}/centroids")
-    brows = [
-        (s, c, [float(x) for x in cb[s, c]])
-        for s in range(cb.shape[0])
-        for c in range(cb.shape[1])
-    ]
-    spark.createDataFrame(
-        brows, "subspace INT, code INT, centroid ARRAY<DOUBLE>"
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
-    # manifest BEFORE the corpus-scale codes pass: a crash mid-encode
-    # then leaves a layout that reads as kind=ivfpq with a missing
-    # codes/gen=G dir — the serve raises "incomplete", instead of the
-    # pre-manifest inference mis-classifying centroids-without-codes
-    # as a healthy IVF index and dispatching to the wrong lane
-    _write_index_manifest(spark, path, "ivfpq", generation)
-
-    ivfpq_encode(
-        fan_out(df.select(id_col, vec_col)), cents, cb,
-        id_col=id_col, vec_col=vec_col,
-    ).hint("rebalance", F.col("cell")).write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(
-        f"{path}/codes/gen={generation}"
-    )
-    if persist_members:
-        # rebalance by cell (guide §6): one AQE-sized file per cell
-        # partition instead of one per (task × cell) — the fixture
-        # members lane measured 234 files for 2 MB without it
-        assign_members(df, cents, id_col=id_col, vec_col=vec_col).hint(
-            "rebalance", F.col("cell")
-        ).write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(f"{path}/members/gen={generation}")
-    if record_stats:
-        import json as _json
-
-        from flink_ms_spark import fsutil
-
-        stats = {
-            "coarse": ivf_assignment_stats(df, cents, vec_col=vec_col),
-            "pq": pq_quantization_error(df, cb, vec_col=vec_col),
-        }
-        fsutil.replace_text(
-            spark, fsutil.join(path, "stats.json"), _json.dumps(stats)
+    arts = {}
+    for a in spec.artifacts:
+        arts[a] = (
+            np.asarray(given[a], dtype=np.float64)
+            if given[a] is not None
+            else _QUANTIZERS[a].train(
+                df, shape, vec_col=vec_col, seed=seed,
+                sample_fraction=sample_fraction,
+            )
         )
-    return cents, cb
+        _write_artifact(spark, path, a, arts[a])
+    for table, encode in spec.tables.items():
+        if table != "members" or persist_members:
+            _write_table(encode(df, arts, id_col, vec_col),
+                        fsutil.join(path, table, f"gen={generation}"))
+    if record_stats:
+        stats = spec.measure(df, arts, vec_col)
+        fsutil.replace_text(
+            spark, fsutil.join(path, "stats.json"),
+            json.dumps(stats if len(stats) > 1 else next(iter(stats.values()))),
+        )
+    _write_index_manifest(spark, path, kind, generation)
+    return arts
 
 
-def load_ivfpq_codes(
+def served_view(
     spark,
     path: str,
+    table: str,
     cells: list[int] | None = None,
     id_col: str = "vec_id",
     expected_generation: int | None = None,
 ) -> DataFrame:
-    """Merged serving view of an IVF-PQ code table — (id, code, cell)
-    = base codes plus current-generation streaming increments, latest
-    batch winning per id — the exact shape of
-    :func:`load_ivf_members`, but over 16-byte codes instead of raw
-    vectors. ``cells`` restricts the BASE read to the probed cells
-    (partition prune, the O(n_probe) IO contract);
-    ``expected_generation`` pins the read for a caller that already
-    loaded centroids+codebooks under that generation
-    (ivfpq_query_topk) so a reindex swap mid-serve raises loudly.
+    """The serving view of one persisted table (``codes`` or
+    ``members``): the base ``<table>/gen=G`` plus the streaming
+    increments under ``<table>_increments/gen=G``, latest batch winning
+    per id (the base has batch −1, so any increment supersedes it).
+    Columns are the table's own: (id, code) for pq codes, (id, code,
+    cell) for ivfpq codes, (id, vec, cell) for members.
 
-    Increments are read in FULL (gen-pruned only) even when ``cells``
-    is given, for the same reason as the members view: a re-sent id
-    may have MOVED cells, so its latest row can live in an increment
-    partition the query didn't probe; the latest row's cell then
-    decides visibility. The tail stays small between reindexes by
-    design (reindex_ivfpq folds it)."""
-    from flink_ms_spark import fsutil
+    ``expected_generation`` pins the read for a caller that loaded the
+    artifacts at that generation (:func:`load_index`); None reads the
+    manifest's. If the pinned base is gone the index was swapped
+    mid-serve, and the read raises: serving another generation's codes
+    or cells under these artifacts would be silently wrong. Increments
+    of other generations (debris a racing worker wrote during a swap)
+    are never read.
 
+    ``cells`` prunes the base read to those cell partitions (the
+    O(n_probe) IO contract of a point lookup). The increments are read
+    in FULL even then: a re-sent id may have MOVED cells, so its latest
+    row can live in a partition the query did not probe; the latest
+    row's cell then decides visibility, so an id whose newest vector
+    left the probed cells is dropped, never served stale. The tail
+    stays small between folds (fold_ann_increments, reindex)."""
     gen = (
         expected_generation
         if expected_generation is not None
         else read_index_manifest(spark, path)["generation"]
     )
-    codes_dir = fsutil.join(path, "codes", f"gen={gen}")
-    if not fsutil.is_dir(spark, codes_dir):
+    base_dir = fsutil.join(path, table, f"gen={gen}")
+    if not fsutil.is_dir(spark, base_dir):
         raise IOError(
-            f"IVF-PQ code table for generation {gen} not found under "
-            f"{path}/codes — the index was rebuilt (or is incomplete) "
-            f"between the artifact load and this read; retry."
+            f"{table} table for generation {gen} not found under "
+            f"{path}/{table}: the index was rebuilt (or is incomplete) "
+            f"between the artifact load and this read. Retry against "
+            f"the current index."
         )
-    base = (
-        spark.read.option("basePath", fsutil.join(path, "codes"))
-        .parquet(codes_dir)
-        .select(
-            F.col(id_col),
-            "code",
-            F.col("cell").cast("int").alias("cell"),
-            F.lit(-1).cast("long").alias("_b"),
-        )
-    )
+    base = spark.read.parquet(base_dir)
+    cols = [F.col(c).cast("int").alias(c) if c == "cell" else F.col(c)
+            for c in base.columns]
+    base = base.select(*cols)
     if cells is not None:
         base = base.where(F.col("cell").isin([int(c) for c in cells]))
-    inc_path = fsutil.join(path, "codes_increments")
-    stamped = _stamped_dirs(spark, inc_path)
-    if not stamped:
+    inc_dir = fsutil.join(path, f"{table}_increments", f"gen={gen}")
+    if not fsutil.list_names(spark, inc_dir, dirs_only=True):
         # no live tail: base ids are unique by construction, so the
         # recency window (a shuffle on every point lookup) is skipped
-        return base.select(id_col, "code", "cell")
-    inc = (
-        spark.read.option("basePath", inc_path)
-        .parquet(*(fsutil.join(inc_path, n) for n in stamped))
-        .where(F.col("gen") == gen)
-        .select(
-            F.col(id_col),
-            "code",
-            F.col("cell").cast("int").alias("cell"),
-            F.col("batch_id").cast("long").alias("_b"),
-        )
-    )
+        return base
+    inc = spark.read.parquet(inc_dir).select(
+        *cols, F.col("batch_id").cast("long").alias("_b"))
     w = Window.partitionBy(id_col).orderBy(F.col("_b").desc())
     out = (
-        base.unionByName(inc)
+        base.withColumn("_b", F.lit(-1).cast("long"))
+        .unionByName(inc)
         .withColumn("_rk", F.row_number().over(w))
         .where(F.col("_rk") == 1)
-        .select(id_col, "code", "cell")
+        .drop("_b", "_rk")
     )
     if cells is not None:
         out = out.where(F.col("cell").isin([int(c) for c in cells]))
     return out
+
+
+def live_increment_census(
+    spark, path: str, table: str, generation: int
+) -> tuple[list[str], int]:
+    """``(live, stale)``: the batch partitions of ``table``'s
+    increments servable at ``generation``, and the count of
+    other-generation dirs awaiting cleanup. Listing calls only, no
+    data read, so it is safe against a 100 TB index."""
+    root = fsutil.join(path, f"{table}_increments")
+    live: list[str] = []
+    stale = 0
+    for g in fsutil.list_names(spark, root, dirs_only=True):
+        gdir = fsutil.join(root, g)
+        if g == f"gen={generation}":
+            live = [fsutil.join(gdir, b)
+                    for b in fsutil.list_names(spark, gdir, dirs_only=True)]
+        elif g.startswith("gen="):
+            stale += 1
+    return live, stale
+
+
+def _replace_index(spark, path: str, write: Callable[[str], object]):
+    """Run ``write(tmp)`` into the ``<path>.rebuilding`` dir, then swap
+    it in by rename-aside (fsutil.swap_dir, maintenance-window
+    contract). Returns what ``write`` returned.
+
+    The dir doubles as an INTENT MARKER, created before ``write``
+    runs: ingest workers refuse to COMMIT a batch while it exists (the
+    post-write check in StreamingAnnIngest), so every batch committed
+    before the marker is on disk when ``write`` reads the served view,
+    and every later batch replays after the swap. No batch can land
+    and commit inside the read→swap window and be discarded with the
+    increments. A refused or failed ``write`` removes the marker; a
+    crash leaves it, and ingest fails loud until the rebuild is re-run
+    (which clears the debris first): fail-stop, never lossy."""
+    tmp = path.rstrip("/") + ".rebuilding"
+    fsutil.delete(spark, tmp)  # stale debris from a prior crash
+    fsutil.mkdirs(spark, tmp)
+    try:
+        out = write(tmp)
+    except BaseException:
+        fsutil.delete(spark, tmp)  # unblock ingest
+        raise
+    fsutil.swap_dir(spark, path, tmp, "index")
+    return out
+
+
+def reindex(
+    spark,
+    path: str,
+    df: DataFrame,
+    max_drift: float = 1.2,
+    force: bool = False,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = 42,
+    allow_missing: bool = False,
+) -> dict:
+    """Monitor → reindex half of the ANN lifecycle (the Faiss-ops
+    policy loop), for every kind: measure each quantizer of the
+    SERVING index over the current corpus ``df``, compare to its
+    build-time baseline (``stats.json``), and when any ratio exceeds
+    ``max_drift`` (or under ``force``) rebuild at generation+1 and swap
+    it in. ANN degrades silently under distribution shift (queries
+    still return k results, just worse ones), and the quantizers of an
+    ivfpq index drift independently, so each is watched. Cell balance
+    (built vs current max_cell_frac) rides along where there are
+    cells: balance decay under a healthy error ratio is the early skew
+    warning. Returns a report: ``action`` healthy | rebuilt |
+    stats-missing, with the drift ratios, errors, and on a rebuild the
+    new shape, generation and ``dropped_ids``.
+
+    COVERAGE GATE: the swap discards the increments (encoded under the
+    outgoing artifacts) and rebuilds every table from ``df``, so each
+    CURRENTLY SERVED id, base or increment, read through the same view
+    serving uses, must appear in ``df``: the anti-join count must be 0,
+    else refuse. ``allow_missing=True`` is the deliberate shrink (a
+    corpus that dropped ids on purpose); the report records
+    ``dropped_ids``. The gate runs after the intent marker exists
+    (_replace_index), so its served set is complete. An ivf index
+    without members has nothing served to cover: its centroids are a
+    pure function of ``df``.
+
+    THE GATE PROVES ID COVERAGE ONLY, not recency: an id whose latest
+    embedding arrived as an increment passes the gate even when ``df``
+    holds its older embedding, and the swap then reverts it. So the
+    rebuild input must be the latest corpus snapshot, taken at or after
+    the last landed batch.
+
+    An index without a baseline reports ``stats-missing`` and rebuilds
+    only under ``force``: silently assuming health would defeat the
+    monitor."""
+    kind, arts, gen = load_index(spark, path)
+    cur = kind.measure(df, arts, vec_col)
+    built = _read_stats(spark, path, kind)
+    pre = {q: "" if len(cur) == 1 else f"{q}_" for q in cur}
+    head = {"kind": kind.name}
+    if built is None and not force:
+        return {**head, "action": "stats-missing",
+                **{f"current_{pre[q]}err": s["mean_sq_err"] for q, s in cur.items()}}
+    report = {}
+    ratio = {q: _drift_ratio(built and built[q], s["mean_sq_err"])
+             for q, s in cur.items()}
+    for q in cur:
+        report[f"{pre[q]}drift_ratio"] = round(ratio[q], 4) if built else None
+    for q in cur:
+        report[f"built_{pre[q]}err"] = built[q]["mean_sq_err"] if built else None
+    for q, s in cur.items():
+        report[f"current_{pre[q]}err"] = s["mean_sq_err"]
+    if "coarse" in cur:
+        report["current_max_cell_frac"] = cur["coarse"]["max_cell_frac"]
+    if not force and max(ratio.values()) <= max_drift:
+        if "coarse" in cur:
+            report["built_max_cell_frac"] = built["coarse"].get("max_cell_frac")
+        return {**head, "action": "healthy", **report}
+    tables = persisted_tables(spark, path, kind)
+
+    def rebuild(tmp: str):
+        dropped = 0
+        if tables:
+            served = served_view(spark, path, tables[-1], id_col=id_col,
+                                 expected_generation=gen).select(id_col)
+            dropped = served.join(df.select(id_col), id_col, "left_anti").count()
+            if dropped and not allow_missing:
+                raise ValueError(
+                    f"reindex: {dropped} served id(s) (base or streaming "
+                    f"increments) are missing from the rebuild input; the "
+                    f"swap would silently drop them from serving. Rebuild "
+                    f"from a corpus that covers every served id, or pass "
+                    f"allow_missing=True to shrink deliberately."
+                )
+        new = build_index(
+            df, tmp, kind.name, id_col=id_col, vec_col=vec_col, seed=seed,
+            record_stats=True, generation=gen + 1,
+            persist_members="members" in tables,
+            **{f"n_{d}": n for d, n in _dims(arts).items()},
+        )
+        return dropped, new, _read_stats(spark, tmp, kind)
+
+    dropped, new, stats = _replace_index(spark, path, rebuild)
+    for q, s in stats.items():
+        report[f"rebuilt_{pre[q]}err"] = s["mean_sq_err"]
+    if "coarse" in stats:
+        report["rebuilt_max_cell_frac"] = stats["coarse"]["max_cell_frac"]
+    return {**head, "action": "rebuilt", **report, **_dims(new),
+            "generation": gen + 1, "dropped_ids": dropped}
+
+
+def fold_ann_increments(spark, path: str, id_col: str = "vec_id") -> dict:
+    """Fold an index's live increment tail into its base tables
+    WITHOUT retraining: the cheap tail-bounding maintenance between
+    drift-triggered reindexes. Every point lookup reads the full tail
+    (cell-move correctness, see served_view), so a long-running ingest
+    degrades lookups toward tail scans until something folds it; a
+    reindex does, but retrains. This rewrites each served table through
+    the SAME view serving reads, as the new base at generation+1 with
+    the artifacts and baselines unchanged, and swaps it in.
+
+    The generation bump without retraining is sound: codes and cells
+    stay valid because the artifacts that produced them are unchanged;
+    the bump retires the folded tail dirs and trips live ingest workers
+    into a reload, so the retried batch lands under the new generation.
+    The intent marker guards the fold exactly as in reindex, and no
+    coverage gate is needed because the fold input IS the served view.
+    An ivf index without members has nothing to fold."""
+    kind, arts, gen = load_index(spark, path)
+    tables = persisted_tables(spark, path, kind)
+    if not tables:
+        # decided before the intent marker exists, which would otherwise
+        # leak and block ingest until removed by hand
+        return {"action": "no-members", "generation": gen}
+
+    def write(tmp: str) -> int:
+        for a, arr in arts.items():
+            _write_artifact(spark, tmp, a, arr)
+        stats_path = fsutil.join(path, "stats.json")
+        if fsutil.exists(spark, stats_path):
+            fsutil.replace_text(spark, fsutil.join(tmp, "stats.json"),
+                                fsutil.read_text(spark, stats_path))
+        for t in tables:  # members and codes fold in lockstep
+            _write_table(
+                served_view(spark, path, t, id_col=id_col, expected_generation=gen),
+                fsutil.join(tmp, t, f"gen={gen + 1}"),
+            )
+        # count the WRITTEN base (footer metadata, no re-run of the window)
+        n = spark.read.parquet(fsutil.join(tmp, tables[-1], f"gen={gen + 1}")).count()
+        _write_index_manifest(spark, tmp, kind.name, gen + 1)
+        return n
+
+    n = _replace_index(spark, path, write)
+    return {"action": "folded", "kind": kind.name, "generation": gen + 1,
+            "base_rows": int(n)}
+
+
+def pq_index_topk(
+    spark,
+    path: str,
+    queries: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """ADC top-k over a persisted PQ index: the codebooks and the
+    MERGED code view (base plus current-generation increments) bound
+    to one generation, so a swap mid-serve raises instead of pairing
+    old codebooks with new codes. The serve path of ann-query and the
+    pq_topk catalog query."""
+    _kind, arts, gen = load_index(spark, path)
+    codes = served_view(spark, path, "codes", id_col=id_col,
+                        expected_generation=gen)
+    return pq_topk_codes(codes, arts["codebooks"], queries, k=k,
+                         id_col=id_col, vec_col=vec_col)
+
+
+def ivf_members_topk(
+    spark,
+    path: str,
+    queries: DataFrame,
+    k: int = 5,
+    n_probe: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    max_queries: int | None = MAX_BROADCAST_QUERIES,
+) -> DataFrame:
+    """Point-lookup IVF serve over a PERSISTED members table —
+    (a, b, cos_sim, rk), same probe/mask/tie contract as
+    :func:`ivf_query_topk` (each query ranked strictly against its own
+    ``n_probe`` cells) but without the query-time corpus scan: the
+    probed cells' partitions are the only base IO, plus the live
+    increment tail. This is the 100 TB point-lookup shape; the
+    corpus-scan variant remains for indexes built without members.
+
+    Swap coherence: the generation the centroids loaded under is
+    pinned through the members read (served_view), so a reindex
+    completing mid-lookup raises loudly rather than ranking the new
+    generation's cell assignments under probes from the old centroids."""
+    _kind, arts, gen = load_index(spark, path)
+    centers = arts["centroids"]
+    q_rows = _collect_queries(
+        queries.select(id_col, vec_col), max_queries, "ivf_members_topk",
+        "ivf_kmeans_topk (per-cell self-join report)",
+    )
+    if not q_rows:
+        return spark.createDataFrame([], "a LONG, b LONG, cos_sim DOUBLE, rk INT")
+    q_ids, qm, qnorm = _query_matrices(q_rows, len(q_rows[0][1]))
+    allowed = _probe_cells(qm, centers, n_probe)
+    probed = [int(c) for c in np.flatnonzero(allowed.any(axis=0))]
+    members = served_view(spark, path, "members", cells=probed,
+                          id_col=id_col, expected_generation=gen)
+    bq = spark.sparkContext.broadcast((q_ids, qnorm, allowed))
+    margin = 2 * k + 8
+
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ids, q, mask = bq.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            yield _score_masked(
+                ids, q, mask,
+                pdf[id_col].to_numpy(dtype=np.int64),
+                np.array(list(pdf[vec_col]), dtype=np.float64),
+                pdf["cell"].to_numpy(dtype=np.int64),
+                margin,
+            )
+
+    cands = members.mapInPandas(scan, CAND_SCHEMA).where(F.col("a") != F.col("b"))
+    return _rank_topk(cands, k)
 
 
 def ivfpq_query_topk(
@@ -2188,8 +1841,8 @@ def ivfpq_query_topk(
 
     ``rerank=N`` is the FAISS refine stage: keep each query's top-N
     ADC candidates (N ≥ k), fetch their EXACT vectors from the
-    members table (``build_ivfpq_index(persist_members=True)`` +
-    member increments, via the same merged view as the IVF lane) from
+    members table (``build_index(kind="ivfpq", persist_members=True)``
+    plus member increments, through served_view like the IVF lane) from
     the probed cells' partitions only, and re-rank top-k on exact
     squared L2 — output (a, b, d2, rk) with ``d2`` the exact rounded
     distance. ADC error comes from quantization; the refine pass
@@ -2199,7 +1852,7 @@ def ivfpq_query_topk(
     sync mid-crash) raises in the kernel rather than silently serving
     a shorter list. Each query's n_probe nearest cells come from a driver-side
     argmin over the tiny centroid matrix; the code read is the MERGED
-    serving view (:func:`load_ivfpq_codes` — base partitions pruned to
+    serving view (:func:`served_view`: base partitions pruned to
     the probed cells, plus the current-generation streaming increment
     tail), so vectors landed by StreamingAnnIngest serve immediately;
     inside the kernel each query prices ONLY its own probed cells'
@@ -2209,15 +1862,8 @@ def ivfpq_query_topk(
     never raw vectors. Swap coherence: the generation is read once and
     pinned through the code read — a rebuild completing mid-serve
     raises loudly instead of pricing new codes with old codebooks."""
-    manifest = read_index_manifest(spark, path)
-    gen = manifest["generation"]
-    cents = load_ivf_centroids(spark, path)
-    cb = load_pq_codebooks(spark, path)
-    if read_index_manifest(spark, path)["generation"] != gen:
-        raise IOError(
-            f"IVF-PQ index at {path} was rebuilt while its artifacts were "
-            f"loading — retry the serve against the current index."
-        )
+    _kind, arts, gen = load_index(spark, path)
+    cents, cb = arts["centroids"], arts["codebooks"]
     q_rows = _collect_queries(
         queries.select(id_col, vec_col), max_queries, "ivfpq_query_topk",
         "ivf_pq_topk (per-cell all-pairs report)",
@@ -2229,8 +1875,8 @@ def ivfpq_query_topk(
     allowed = _probe_cells(qm, cents, n_probe)
     probed = [int(c) for c in np.flatnonzero(allowed.any(axis=0))]
 
-    codes = load_ivfpq_codes(spark, path, cells=probed, id_col=id_col,
-                             expected_generation=gen)
+    codes = served_view(spark, path, "codes", cells=probed, id_col=id_col,
+                        expected_generation=gen)
 
     bq = spark.sparkContext.broadcast((q_ids, qm, allowed, cb))
     # the batch prune must keep at least the refine shortlist: with
@@ -2281,11 +1927,11 @@ def ivfpq_query_topk(
             F.col("rk") <= k
         )
 
-    if not has_ivf_members(spark, path):
+    if not fsutil.is_dir(spark, fsutil.join(path, "members")):
         raise ValueError(
             f"ivfpq_query_topk(rerank={rerank}): index {path} has no "
             f"members table — the refine stage needs exact vectors. "
-            f"Build with build_ivfpq_index(persist_members=True) (CLI: "
+            f"Build with build_index(kind='ivfpq', persist_members=True) (CLI: "
             f"build-ann-index --kind ivfpq --persist-members), or serve "
             f"ADC-only (rerank=None)."
         )
@@ -2295,8 +1941,8 @@ def ivfpq_query_topk(
         .where(F.col("_ark") <= n_cand)
         .select("a", "b")
     )
-    members = load_ivf_members(spark, path, cells=probed, id_col=id_col,
-                               vec_col=vec_col, expected_generation=gen)
+    members = served_view(spark, path, "members", cells=probed, id_col=id_col,
+                          expected_generation=gen)
     joined = short.join(
         members.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_bvec")),
         "b",
@@ -2346,225 +1992,6 @@ def ivfpq_query_topk(
     return rescored.withColumn("rk", F.row_number().over(w2).cast("int")).where(
         F.col("rk") <= k
     )
-
-
-def reindex_ivfpq(
-    spark,
-    path: str,
-    df: DataFrame,
-    max_drift: float = 1.2,
-    force: bool = False,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    allow_missing: bool = False,
-) -> dict:
-    """Monitor → reindex for the IVF-PQ index — the same policy loop
-    as :func:`reindex_pq` / :func:`reindex_ivf`, watching BOTH
-    quantizers: coarse assignment error (cells drift → wrong probe
-    sets) and PQ quantization error (codebooks drift → wrong ADC
-    order). Either ratio past ``max_drift`` × its build-time baseline
-    triggers the rebuild; both always appear in the report, because
-    they degrade independently (a corpus can keep its cluster
-    structure while its within-cell geometry moves, and vice versa).
-
-    Shares every piece of the generation machinery: the
-    ``.rebuilding`` intent marker lands BEFORE the coverage gate
-    (ingest commits are refused while it exists, so the gate's served
-    set is complete), the gate anti-joins the MERGED serving view
-    (:func:`load_ivfpq_codes` — base + live increments) against the
-    rebuild input and refuses to drop served ids unless
-    ``allow_missing=True``, the rebuild lands in the marker dir at
-    generation+1 with fresh baselines, and :func:`_swap_index`
-    installs it rename-aside (maintenance-window contract). The swap
-    discards the increments dir — its codes are meaningless under the
-    new codebooks — which is also what folds a long live tail back
-    into O(n_probe) base partitions. Same id-coverage-only caveat as
-    the other gates: the rebuild input must be the latest corpus
-    snapshot or a re-sent id's value silently reverts."""
-    import json as _json
-
-    from flink_ms_spark import fsutil
-
-    cents = load_ivf_centroids(spark, path)
-    cb = load_pq_codebooks(spark, path)
-    cur_coarse = ivf_assignment_stats(df, cents, vec_col=vec_col)
-    cur_pq = pq_quantization_error(df, cb, vec_col=vec_col)
-    stats_path = fsutil.join(path, "stats.json")
-    built = (
-        _json.loads(fsutil.read_text(spark, stats_path))
-        if fsutil.exists(spark, stats_path)
-        else None
-    )
-    if built is None and not force:
-        return {
-            "action": "stats-missing",
-            "current_coarse_err": cur_coarse["mean_sq_err"],
-            "current_pq_err": cur_pq["mean_sq_err"],
-        }
-    coarse_ratio = _drift_ratio(
-        built["coarse"] if built else None, cur_coarse["mean_sq_err"]
-    )
-    pq_ratio = _drift_ratio(built["pq"] if built else None, cur_pq["mean_sq_err"])
-    report = {
-        "coarse_drift_ratio": round(coarse_ratio, 4) if built else None,
-        "pq_drift_ratio": round(pq_ratio, 4) if built else None,
-        "built_coarse_err": built["coarse"]["mean_sq_err"] if built else None,
-        "built_pq_err": built["pq"]["mean_sq_err"] if built else None,
-        "current_coarse_err": cur_coarse["mean_sq_err"],
-        "current_pq_err": cur_pq["mean_sq_err"],
-        "current_max_cell_frac": cur_coarse["max_cell_frac"],
-    }
-    if not force and max(coarse_ratio, pq_ratio) <= max_drift:
-        return {"action": "healthy", **report}
-
-    gen = read_index_manifest(spark, path)["generation"]
-    tmp = path.rstrip("/") + ".rebuilding"
-    fsutil.delete(spark, tmp)  # stale debris from a prior crash
-    fsutil.mkdirs(spark, tmp)
-    try:
-        served = load_ivfpq_codes(spark, path, id_col=id_col).select(id_col)
-        dropped = served.join(df.select(id_col), id_col, "left_anti").count()
-        if dropped and not allow_missing:
-            raise ValueError(
-                f"reindex_ivfpq: {dropped} served id(s) (streaming code "
-                f"increments or base) are missing from the rebuild input — "
-                f"the swap would silently drop them from serving. Rebuild "
-                f"from a corpus that covers every served id, or pass "
-                f"allow_missing=True to shrink deliberately."
-            )
-        new_cents, new_cb = build_ivfpq_index(
-            df,
-            tmp,
-            n_cells=cents.shape[0],
-            n_subspaces=cb.shape[0],
-            n_codes=cb.shape[1],
-            id_col=id_col,
-            vec_col=vec_col,
-            seed=seed,
-            generation=gen + 1,
-            record_stats=True,
-            persist_members=has_ivf_members(spark, path),
-        )
-        new_stats = _json.loads(
-            fsutil.read_text(spark, fsutil.join(tmp, "stats.json"))
-        )
-    except BaseException:
-        fsutil.delete(spark, tmp)  # unblock ingest on a refused rebuild
-        raise
-    _swap_index(spark, path, tmp)
-    return {
-        "action": "rebuilt",
-        **report,
-        "rebuilt_coarse_err": new_stats["coarse"]["mean_sq_err"],
-        "rebuilt_pq_err": new_stats["pq"]["mean_sq_err"],
-        "rebuilt_max_cell_frac": new_stats["coarse"]["max_cell_frac"],
-        "cells": int(new_cents.shape[0]),
-        "subspaces": int(new_cb.shape[0]),
-        "codes": int(new_cb.shape[1]),
-        "generation": gen + 1,
-        "dropped_ids": dropped,
-    }
-
-
-def fold_ann_increments(
-    spark,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
-    """Fold a persisted ANN index's live increment tail into its base
-    table WITHOUT retraining — the cheap tail-bounding maintenance
-    between drift-triggered reindexes. Every point lookup reads the
-    full tail (cell-move correctness, see load_ivf_members), so a
-    long-running ingest degrades lookups toward tail scans until
-    something folds it; a reindex does, but costs a corpus re-train —
-    this rewrites only base+tail through the SAME merged view serving
-    reads, re-lands it as the new base at generation+1, copies the
-    trained artifacts (centroids/codebooks/stats baselines) unchanged,
-    and installs via the rename-aside swap.
-
-    Generation bump without retraining is sound: codes/cells stay
-    valid because the artifacts that produced them are byte-identical;
-    the bump exists to invalidate the folded tail dirs and trip live
-    ingest workers into a reload (which fetches the same artifacts —
-    the retried batch lands under the new generation). The
-    ``.rebuilding`` intent marker guards the fold window exactly as in
-    reindex: a batch landing after the view snapshot stays uncommitted
-    (the post-write check refuses) and replays after the swap, so no
-    served id is lost — no coverage gate is needed because the fold
-    input IS the served view. MAINTENANCE-WINDOW contract of
-    _swap_index applies."""
-    from flink_ms_spark import fsutil
-    from flink_ms_spark.streaming.ann_ingest import load_codes
-
-    manifest = read_index_manifest(spark, path)
-    kind, gen = manifest["kind"], manifest["generation"]
-    if kind == "ivf" and not has_ivf_members(spark, path):
-        # nothing to fold (no members → no increments) — decide BEFORE
-        # creating the intent marker, which would otherwise leak and
-        # block ingest until manually removed
-        return {"action": "no-members", "generation": gen}
-    tmp = path.rstrip("/") + ".rebuilding"
-    fsutil.delete(spark, tmp)  # stale debris from a prior crash
-    fsutil.mkdirs(spark, tmp)
-    try:
-        def _copy(name: str) -> None:
-            src = fsutil.join(path, name)
-            if fsutil.is_dir(spark, src):
-                spark.read.parquet(src).write.parquet(fsutil.join(tmp, name))
-
-        stats_path = fsutil.join(path, "stats.json")
-        if fsutil.exists(spark, stats_path):
-            fsutil.replace_text(
-                spark, fsutil.join(tmp, "stats.json"),
-                fsutil.read_text(spark, stats_path),
-            )
-        if kind == "ivf":
-            _copy("centroids")
-            out_dir = fsutil.join(tmp, "members", f"gen={gen + 1}")
-            load_ivf_members(
-                spark, path, id_col=id_col, vec_col=vec_col,
-                expected_generation=gen,
-            ).hint("rebalance", F.col("cell")).write.partitionBy(
-                "cell"
-            ).parquet(out_dir)
-        elif kind == "ivfpq":
-            _copy("centroids")
-            _copy("codebooks")
-            out_dir = fsutil.join(tmp, "codes", f"gen={gen + 1}")
-            load_ivfpq_codes(
-                spark, path, id_col=id_col, expected_generation=gen,
-            ).hint("rebalance", F.col("cell")).write.partitionBy(
-                "cell"
-            ).parquet(out_dir)
-            if has_ivf_members(spark, path):
-                # the rerank lane's members table folds in lockstep so
-                # codes and exact vectors stay id-for-id in sync
-                load_ivf_members(
-                    spark, path, id_col=id_col, vec_col=vec_col,
-                    expected_generation=gen,
-                ).hint("rebalance", F.col("cell")).write.partitionBy(
-                    "cell"
-                ).parquet(
-                    fsutil.join(tmp, "members", f"gen={gen + 1}")
-                )
-        else:
-            _copy("codebooks")
-            out_dir = fsutil.join(tmp, "codes", f"gen={gen + 1}")
-            load_codes(
-                spark, path, id_col=id_col, expected_generation=gen,
-            ).hint("rebalance").write.parquet(out_dir)
-        # count the WRITTEN base (parquet footer metadata, no re-run of
-        # the merged view's window)
-        n = spark.read.parquet(out_dir).count()
-        _write_index_manifest(spark, tmp, kind, gen + 1)
-    except BaseException:
-        fsutil.delete(spark, tmp)  # unblock ingest on a failed fold
-        raise
-    _swap_index(spark, path, tmp)
-    return {"action": "folded", "kind": kind, "generation": gen + 1,
-            "base_rows": int(n)}
 
 
 def pq_codebooks_from_parquet(
@@ -2820,7 +2247,7 @@ def ivf_pq_topk(
                 {"a": np.int64, "b": np.int64, "ad2": np.float64}
             )
         # encode members (the index's codes; build-once in a real
-        # deployment — see build_pq_index for the persisted form)
+        # deployment — see build_index for the persisted form)
         codes = np.empty((len(mem), n_sub), dtype=np.int64)
         for s in range(n_sub):
             x = mem[:, s * sub : (s + 1) * sub]

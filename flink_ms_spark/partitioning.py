@@ -139,36 +139,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def compact_parquet(
-    spark,
-    in_path: str,
-    out_path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-files compaction: rewrite a parquet directory into files
-    sized for the scan path (default 128 MB — one task per file at
-    standard ``maxPartitionBytes``).
-
-    The small-files problem is the classic failure mode of streaming
-    ingestion at scale: a million 1 MB files turn every scan into a
-    million tasks and crush the driver/listing layer. Returns the
-    number of output partitions chosen.
-
-    Partition count comes from actual input bytes (file-status sum via
-    the Hadoop FileSystem, no data read — a local glob would sum ZERO
-    bytes for an hdfs://s3a:// input and silently repartition 100 TB
-    into one file); round-robin repartition gives uniformly sized
-    files.
-    """
-    from flink_ms_spark import fsutil
-
-    total = fsutil.total_bytes(spark, in_path)
-    n = max(1, round(total / target_bytes))
-    df = spark.read.parquet(in_path)
-    df.repartition(n).write.mode("overwrite").parquet(out_path)
-    return n
-
-
 def zvalue(x, y, bits: int = 16):
     """Morton (Z-order) interleave of two rank-normalized integer
     columns → one BIGINT curve position. Pure bitwise column
@@ -318,50 +288,3 @@ def salted_join(
     return out.drop("_salt")
 
 
-def partitioned_write(
-    df: DataFrame,
-    out_path: str,
-    partition_cols: list[str],
-    files_per_partition: int = 1,
-) -> None:
-    """Hive-style partitioned parquet layout (``out/col=value/...``) —
-    the directory-level complement to bucketing and Z-order: a filter
-    on a partition column is resolved at FILE LISTING time (partition
-    pruning), before any parquet footer is opened.
-
-    At 100 TB this is the difference between listing one ``lang=de``
-    directory and scanning the full corpus for a per-language job; the
-    salted repartition bounds each directory at
-    ``files_per_partition`` files instead of one-file-per-task
-    fragments (the small-files trap ``compact_parquet`` exists to
-    repair). Partition columns must be low-cardinality (lang, source,
-    date) — a high-cardinality partition column creates millions of
-    directories and moves the bottleneck to the metastore/listing
-    layer, which is why doc_id-grained layout goes through
-    ``write_bucketed`` instead.
-
-    The shuffle key is (partition cols, salt in [0, files_per_partition)):
-    every partition value spreads over up to ``files_per_partition``
-    reducers (each writes at most one file per value it holds), and
-    distinct values land on DIFFERENT reducers — never
-    ``repartition(n, *cols)``, which caps the WHOLE write at n tasks
-    (n=1 would funnel 100 TB through a single task).
-
-    The salt is an ``xxhash64`` of the row's non-partition columns: it
-    is the same under task retry and independent of the partition
-    columns. A position-based salt (row index in its input partition
-    mod k) would equal a partition column computed as ``id % k`` and
-    give every value one file. A frame of partition columns only
-    hashes those.
-    """
-    cols = [F.col(c) for c in partition_cols]
-    hashed = [c for c in df.columns if c not in partition_cols] or partition_cols
-    salt = F.pmod(F.xxhash64(*hashed), F.lit(files_per_partition))
-    (
-        df.withColumn("_file_salt", salt)
-        .repartition(*cols, F.col("_file_salt"))
-        .drop("_file_salt")
-        .write.mode("overwrite")
-        .partitionBy(*partition_cols)
-        .parquet(out_path)
-    )

@@ -10,9 +10,11 @@ rational math, explicit rounding on both engines).
 
 from __future__ import annotations
 
+import math
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from flink_ms_spark.operators.mixing import (
     dsir_weights,
@@ -23,7 +25,7 @@ from flink_ms_spark.operators.mixing import (
     unimax_alloc,
 )
 from flink_ms_spark.plans.northstar import _DUCK_TOKS as _DUCK_TOKS_MIX
-from flink_ms_spark.plans.registry import register, values_clause
+from flink_ms_spark.plans.registry import fixture_index, register, values_clause
 from flink_ms_spark.sources.tables import load_table
 
 _TOKS = "string_split_regex(trim(text), '\\s+')"
@@ -383,46 +385,24 @@ def q_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_pq_topk(emb, centers, cb, k=5, n_probe=2)
 
 
-def _ivfpq_index_dir(sf_dir: str) -> str:
-    """Cache location for the persisted IVF-PQ index, keyed on the
-    fixture file's identity (same pattern as pipeline._pq_index_dir /
-    northstar._ivf_members_index_dir). v3: rebalance-sized files (v2:
-    # members table)
-    (the rerank lane shares this index; the ADC path never reads it)."""
-    import hashlib
-    import tempfile
-
-    f = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(f)
-    key = hashlib.md5(
-        f"v3:{f}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"flink_ms_ivfpq_{key}")
-
-
-def _ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once guard shared by ivfpq_lookup / ivfpq_rerank: both
-    serve the SAME persisted index (codes + members), trained by the
-    shared pyarrow trainers so the oracles' numpy replay is
-    bit-identical."""
+def _ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
+    """The persisted IVF-PQ index (codes + members) ivfpq_lookup and
+    ivfpq_rerank both serve, trained by the shared pyarrow trainers so
+    the oracles' numpy replay is bit-identical."""
     from flink_ms_spark.operators.similarity import (
-        build_ivfpq_index,
+        build_index,
         codebook_from_parquet,
         pq_codebooks_from_parquet,
     )
 
-    idx = _ivfpq_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(idx, "codes", "gen=0", "_SUCCESS")):
-        build_ivfpq_index(
-            load_table(spark, sf_dir, "embeddings"),
-            idx,
-            centroids=codebook_from_parquet(sf_dir, n_cells=8, seed=42),
-            pq_codebooks=pq_codebooks_from_parquet(
-                sf_dir, n_subspaces=16, n_codes=32, seed=42
-            ),
-            persist_members=True,
-        )
-    return idx
+    # v4: the manifest is written last (v3: rebalance-sized files; v2:
+    # members table)
+    return fixture_index(spark, sf_dir, "ivfpq", "v4", lambda emb, path: build_index(
+        emb, path, "ivfpq", persist_members=True,
+        centroids=codebook_from_parquet(sf_dir, n_cells=8, seed=42),
+        codebooks=pq_codebooks_from_parquet(
+            sf_dir, n_subspaces=16, n_codes=32, seed=42),
+    ))
 
 
 @register("ivfpq_lookup", oracle=_ivfpq_lookup_oracle)
@@ -430,7 +410,7 @@ def q_ivfpq_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-lookup serve over the PERSISTED IVF-PQ index
     (operators/similarity.py:ivfpq_query_topk): coarse centroids + PQ
     codebooks + the code table partitioned by cell land once
-    (build_ivfpq_index), then each lookup reads only its probed cells'
+    (build_index), then each lookup reads only its probed cells'
     code partitions — O(n_probe) partition IO of n_subspaces-byte
     codes, the cheapest corpus-scale ANN serve — with each query in
     the batch priced strictly against ITS OWN probed cells. Queries
@@ -438,11 +418,9 @@ def q_ivfpq_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared pyarrow ones, so the DuckDB oracle's numpy replay
     (assignment, probe, subspace-order ADC, rank) is bit-identical to
     ivf_pq_topk's — same contract, persisted serve shape."""
-    from pyspark.sql import functions as F
-
     from flink_ms_spark.operators.similarity import ivfpq_query_topk
 
-    idx = _ensure_ivfpq_index(spark, sf_dir)
+    idx = _ivfpq_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where((F.col("vec_id") % 100) == 0)
     return ivfpq_query_topk(spark, idx, queries, k=5, n_probe=2)
@@ -454,7 +432,7 @@ def q_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.py:ivfpq_query_topk(rerank=20)): each
     query's top-20 ADC candidates re-rank on EXACT squared L2 fetched
     from the probed cells' member partitions (the index persists
-    members beside codes — build_ivfpq_index(persist_members=True)).
+    members beside codes — build_index(persist_members=True)).
     Output (a, b, d2, rk) is exact distance — the quantization error
     the ADC-only lookup carries is removed for the short list at the
     cost of 20 raw-vector rows per query, the standard accuracy/IO
@@ -462,11 +440,9 @@ def q_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivfpq_lookup, so the DuckDB oracle's numpy replay (ADC shortlist →
     exact re-rank, both with id tie-breaks on rounded values) is
     bit-identical."""
-    from pyspark.sql import functions as F
-
     from flink_ms_spark.operators.similarity import ivfpq_query_topk
 
-    idx = _ensure_ivfpq_index(spark, sf_dir)
+    idx = _ivfpq_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where((F.col("vec_id") % 100) == 0)
     return ivfpq_query_topk(spark, idx, queries, k=5, n_probe=2, rerank=20)
@@ -587,8 +563,6 @@ def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     8 learned merges. Scale: the merges fold over the VOCABULARY
     (model-scale); the corpus pays the same two shuffles as
     bpe_encode plus one language-keyed rollup."""
-    from pyspark.sql import functions as F
-
     from flink_ms_spark.operators.text import (
         bpe_encode_stats,
         learn_bpe_merges_local,
@@ -649,8 +623,6 @@ def q_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets, broadcast offsets, keyed windows), so the selection has
     no single-partition stage; the weight table is the dsir_weights
     plan (one corpus shuffle, broadcast ratio join)."""
-    from pyspark.sql import functions as F
-
     from flink_ms_spark.operators.mixing import _bucketed_ranks
 
     w = dsir_weights(load_table(spark, sf_dir, "documents"))
@@ -715,8 +687,6 @@ def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     training mix. Assignment is the broadcast-codebook map; the cap
     is a keyed (per-cell) window — fully parallel."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from flink_ms_spark.operators.similarity import (
         assign_cells,
         codebook_from_parquet,
@@ -783,8 +753,6 @@ def q_media_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     PNG payloads (stdlib zlib decode) — both carrying the same md5
     pixel stream, so one format-independent oracle covers the union.
     The stats operator routes per payload signature."""
-    from pyspark.sql import functions as F
-
     from flink_ms_spark.operators.multimodal import (
         pixel_stats,
         synthesize_png_media,
@@ -858,8 +826,6 @@ def q_media_histogram_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     produced by extract_features with the stdlib histogram decoder;
     the summary (argmax bin, max fraction, support) is pure DataFrame
     comparison logic over the already-rounded vector."""
-    from pyspark.sql import functions as F
-
     from flink_ms_spark.operators.multimodal import (
         extract_features,
         histogram_image_decoder,
@@ -1053,8 +1019,6 @@ def q_media_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     generator plants mod-3 duplicate cohorts; a broken demux,
     selection, or digest would split or merge groups and diverge from
     the closed-form oracle."""
-    from pyspark.sql import functions as F
-
     from flink_ms_spark.operators.multimodal import (
         synthesize_video_media,
         video_fingerprints,
@@ -1127,8 +1091,6 @@ def q_media_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct assets, and id range. The quantization (round(frac·1e6))
     happens on values already Python-rounded to 6 dp, so both engines
     land on the same integers away from any rounding boundary."""
-    from pyspark.sql import functions as F
-
     from flink_ms_spark.operators.multimodal import (
         extract_features,
         histogram_image_decoder,
@@ -1218,7 +1180,7 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Log-histogram of events.value with the geometric binning of
-# streaming/quantiles.py:log_bin, hash-checked.
+# log_bin below, hash-checked.
 # IEEE double ln/division/floor are bit-deterministic across engines,
 # so the bin ids match exactly.
 
@@ -1231,15 +1193,26 @@ FROM b GROUP BY bin ORDER BY bin
 """
 
 
+def log_bin(col, growth: float = 1.2) -> Column:
+    """Geometric bin index for a positive value: floor(log(v)/log(g)),
+    the HDR-histogram approach to quantiles. Bin edges grow by
+    ``growth`` per bin, so any quantile read off the histogram is within
+    ``growth − 1`` RELATIVE error, independent of the data; state is
+    one count per occupied bin and two histograms merge by adding
+    counts. Non-positive values land in a reserved bin (-2**31) so they
+    are counted but never interpolated."""
+    c = F.col(col) if isinstance(col, str) else col
+    return (
+        F.when(c > 0, F.floor(F.log(c) / F.lit(math.log(growth))).cast("int"))
+        .otherwise(F.lit(-(2**31)).cast("int"))
+    )
+
+
 @register("log_histogram", oracle=_LOG_HIST_ORACLE)
 def q_log_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Geometric (growth 1.2) value histogram of events.value — one
     map-side-combined keyed agg; any quantile is then a scan of
     ~hundreds of bins with relative error ≤ growth − 1."""
-    from pyspark.sql import functions as F
-
-    from flink_ms_spark.streaming.quantiles import log_bin
-
     ev = load_table(spark, sf_dir, "events").where(F.col("value") > 0)
     b = ev.select(log_bin("value", 1.2).alias("bin"))
     return (
@@ -1282,8 +1255,6 @@ def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman modularity of the 3-round LPA partition of the
     co-purchase graph — the community-quality metric, computed from
     exact integer edge/degree sums (one double division at the end)."""
-    from pyspark.sql import functions as F
-
     from flink_ms_spark.operators.graph import cooccurrence_edges, lpa_communities
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -1444,8 +1415,6 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one token-count aggregate (vocab-sized), top-V via
     sort+limit partial top-k, broadcast semi-join back onto the token
     stream — the corpus pays one explode + one keyed agg."""
-    from pyspark.sql import functions as F
-
     from flink_ms_spark.operators.text import tokens
     from flink_ms_spark.partitioning import fan_out
 
@@ -1509,8 +1478,6 @@ def q_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k) + a row_number window over those 1000 rows only; the corpus
     pays one explode, one broadcast left join, one aggregate."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from flink_ms_spark.operators.text import tokens
     from flink_ms_spark.partitioning import fan_out
 
@@ -1603,8 +1570,6 @@ def q_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     would cause (10^6 docs → 10^12 pairs) cannot happen; its volume is
     reported in ``n_dropped_bucket_docs``, the honest curation-log
     form."""
-    from pyspark.sql import functions as F
-
     from flink_ms_spark.operators.dedup import (
         exact_dedup_groups,
         lsh_pair_stats,
@@ -1663,8 +1628,6 @@ FROM pd GROUP BY label
 def q_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid shift between the two vec_id-parity cohorts:
     cosine similarity + L2 distance of the cohort mean embeddings."""
-    from pyspark.sql import functions as F
-
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select(
         "label",
@@ -1808,8 +1771,6 @@ def q_data_constrained_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative raw-token cost fits the 1.7× budget; reports epochs,
     raw tokens consumed, and decay-weighted effective tokens."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from flink_ms_spark.operators.text import token_count
 
     docs = load_table(spark, sf_dir, "documents")

@@ -37,7 +37,7 @@ from flink_ms_spark.operators.text import (
     scrub_pii,
     token_count,
 )
-from flink_ms_spark.plans.registry import register, register_sql
+from flink_ms_spark.plans.registry import fixture_index, register, register_sql
 from flink_ms_spark.sources.tables import load_table
 
 # Shared DuckDB fragments
@@ -971,7 +971,7 @@ FROM a WHERE rk = 1 GROUP BY cell
 @register("ann_index_health", oracle=_ann_index_health_oracle)
 def q_ann_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cell IVF index health (round-12 ANN lifecycle monitor): the
-    breakdown an operator reads when reindex_ivf's aggregate drifts —
+    breakdown an operator reads when reindex's coarse error drifts —
     one hot cell with rising error = localized shift, uniform rise =
     retrain. Broadcast centroids, one vectorized narrow map, O(cells)
     shuffle rows (operators/similarity.py:ivf_cell_stats)."""
@@ -1098,24 +1098,6 @@ SELECT a, b, cos_sim, rk FROM rk WHERE rk <= 5
 """
 
 
-def _ivf_members_index_dir(sf_dir: str) -> str:
-    """Cache location for the persisted IVF members index, keyed on
-    the fixture file's identity so a driver-regenerated fixture
-    transparently triggers a rebuild (same pattern as pipeline.py's
-    _pq_index_dir)."""
-    import hashlib
-    import os
-    import tempfile
-
-    f = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(f)
-    # v3: rebalance-sized files (v2: members stamped under gen=G)
-    key = hashlib.md5(
-        f"v3:{f}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"flink_ms_ivfm_{key}")
-
-
 @register("ivf_members_lookup", oracle=_ivf_members_lookup_oracle)
 def q_ivf_members_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-lookup serve over the PERSISTED IVF members index
@@ -1128,19 +1110,18 @@ def q_ivf_members_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice of the corpus; centroids come from the shared pyarrow
     trainer so the DuckDB oracle replays assignment, per-query probe,
     and rounded-cosine rank bit-identically."""
-    import os
-
     from flink_ms_spark.operators.similarity import (
-        build_ivf_index,
+        build_index,
         codebook_from_parquet,
         ivf_members_topk,
     )
 
+    # v4: the manifest is written last (v3: rebalance-sized files; v2:
+    # members stamped under gen=G)
+    idx = fixture_index(spark, sf_dir, "ivfm", "v4", lambda emb, path: build_index(
+        emb, path, "ivf", persist_members=True,
+        centroids=codebook_from_parquet(sf_dir, n_cells=8, seed=42)))
     emb = load_table(spark, sf_dir, "embeddings")
-    idx = _ivf_members_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(idx, "members", "gen=0", "_SUCCESS")):
-        centers = codebook_from_parquet(sf_dir, n_cells=8, seed=42)
-        build_ivf_index(emb, idx, centroids=centers, persist_members=True)
     queries = emb.where((F.col("vec_id") % 100) == 0)
     return ivf_members_topk(spark, idx, queries, k=5, n_probe=2)
 

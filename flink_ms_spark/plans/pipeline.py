@@ -11,9 +11,7 @@ reproduce them exactly (same trick as ``minhash``: 15-hex-char prefix
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -25,7 +23,7 @@ from flink_ms_spark.operators.cluster import (
 )
 from flink_ms_spark.operators.dedup import minhash_signatures
 from flink_ms_spark.plans.northstar import _MINHASH_ORACLE
-from flink_ms_spark.plans.registry import register, values_clause
+from flink_ms_spark.plans.registry import fixture_index, register, values_clause
 from flink_ms_spark.sources.tables import load_table
 
 # --------------------------------------------------------------------------
@@ -908,18 +906,6 @@ def q_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_index_dir(sf_dir: str) -> str:
-    """Cache location for the persisted PQ index, keyed on the fixture
-    file's identity (path + mtime + size) so a driver-regenerated
-    fixture transparently triggers a rebuild."""
-    f = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(f)
-    # v4: rebalance-sized files; v3 was gen-stamped codes/gen=G; v2 was
-    # shared-pyarrow-trainer codebooks. The tag busts stale layouts.
-    key = hashlib.md5(f"v4:{f}:{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"flink_ms_pq_{key}")
-
-
 def _pq_oracle() -> str:
     """Deferred oracle for pq_topk: replicate the full PQ pipeline in
     numpy — codebooks via the SAME pyarrow trainer the serve path
@@ -980,26 +966,24 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (Jégou et al. 2011): 16 subspaces × 32
     codes (16 bytes/vector — 16× compression of 64×float32), ADC
     table-lookup scan SERVING the persisted index (built once per
-    fixture by build_pq_index, like a resident engine's indexing job —
+    fixture by build_index, like a resident engine's indexing job —
     the serve plan reads the codes parquet and never retrains).
     Codebooks come from the shared pyarrow trainer so the DuckDB
     oracle's numpy replay is bit-identical. Recall@5 vs exact L2
     asserted in tests/test_curation_ops.py (random-vector
     distance-concentration worst case)."""
     from flink_ms_spark.operators.similarity import (
-        build_pq_index,
-        load_pq_serving,
+        build_index,
         pq_codebooks_from_parquet,
-        pq_topk_codes,
+        pq_index_topk,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = _pq_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(idx, "codes", "gen=0", "_SUCCESS")):
-        cb = pq_codebooks_from_parquet(sf_dir, n_subspaces=16, n_codes=32, seed=42)
-        build_pq_index(emb, idx, n_subspaces=16, n_codes=32, seed=42, codebooks=cb)
-    cb, codes, _gen = load_pq_serving(spark, idx)
-    return pq_topk_codes(codes, cb, emb, k=5)
+    # v4: rebalance-sized files; v3 was gen-stamped codes/gen=G; v2 was
+    # shared-pyarrow-trainer codebooks
+    idx = fixture_index(spark, sf_dir, "pq", "v4", lambda emb, path: build_index(
+        emb, path, "pq", codebooks=pq_codebooks_from_parquet(
+            sf_dir, n_subspaces=16, n_codes=32, seed=42)))
+    return pq_index_topk(spark, idx, load_table(spark, sf_dir, "embeddings"), k=5)
 
 
 # --------------------------------------------------------------------------

@@ -85,3 +85,34 @@ def values_clause(rows_sql: str, table_alias: str) -> str:
     n_cols = table_alias.split("(", 1)[1].count(",") + 1
     nulls = ", ".join(["NULL"] * n_cols)
     return f"FROM (VALUES ({nulls})) {table_alias} WHERE 1 = 0"
+
+
+def fixture_index(
+    spark: SparkSession, sf_dir: str, name: str, tag: str,
+    build: Callable[[DataFrame, str], object],
+) -> str:
+    """Build-once cache of a persisted ANN index over the fixture's
+    embeddings, for the catalog queries that serve one like a resident
+    engine would. The directory is keyed on the fixture file's identity
+    (path, mtime, size), so a regenerated fixture transparently gets a
+    new index, and on ``tag``, bumped when the layout changes. The
+    index counts as built once its manifest exists: every build writes
+    it last, as the commit marker, so a build that died part-way is
+    redone rather than served partial. ``build(embeddings, path)``
+    writes the index."""
+    import hashlib
+    import os
+    import tempfile
+
+    from flink_ms_spark.operators.similarity import INDEX_MANIFEST
+    from flink_ms_spark.sources.tables import load_table
+
+    f = os.path.join(sf_dir, "embeddings.parquet")
+    st = os.stat(f)
+    key = hashlib.md5(
+        f"{tag}:{f}:{st.st_mtime_ns}:{st.st_size}".encode()
+    ).hexdigest()[:12]
+    idx = os.path.join(tempfile.gettempdir(), f"flink_ms_{name}_{key}")
+    if not os.path.exists(os.path.join(idx, INDEX_MANIFEST)):
+        build(load_table(spark, sf_dir, "embeddings"), idx)
+    return idx

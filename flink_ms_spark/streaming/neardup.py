@@ -119,23 +119,10 @@ def compact_registry(
     tmp = registry_dir.rstrip("/") + ".compacting"
     compacted.write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
     after = spark.read.parquet(tmp).count()
-    # Swap by renaming the live registry ASIDE first (never delete
-    # before the replacement is in place): Hadoop rename reports many
-    # failures by returning false, and a delete-then-failed-rename
-    # would leave NO registry at all — every previously-kept doc
-    # would be silently re-admitted on the next batch. A failed step
-    # here aborts loud and, where possible, rolls the old dir back.
-    old = registry_dir.rstrip("/") + ".old"
-    fsutil.delete(spark, old)  # stale debris from a prior crash
-    if not fsutil.rename(spark, registry_dir, old):
-        raise IOError(f"compact_registry: failed to move live registry "
-                      f"{registry_dir} aside; compaction aborted, registry intact")
-    if not fsutil.rename(spark, tmp, registry_dir):
-        restored = fsutil.rename(spark, old, registry_dir)
-        raise IOError(f"compact_registry: failed to install compacted registry "
-                      f"at {registry_dir}; old registry "
-                      f"{'restored' if restored else f'left at {old}'}")
-    fsutil.delete(spark, old)
+    # rename-aside, never delete-then-rename: a failed rename after a
+    # delete would leave NO registry, silently re-admitting every
+    # previously-kept doc on the next batch
+    fsutil.swap_dir(spark, registry_dir, tmp, "registry")
     return {
         "rows_before": before,
         "rows_after": after,

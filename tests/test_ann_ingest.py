@@ -18,8 +18,12 @@ def _write_jsonl(path, rows):
 
 
 def test_streaming_ann_ingest_end_to_end(spark, tmp_path):
-    from flink_ms_spark.operators.similarity import build_pq_index, pq_topk_codes
-    from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest, load_codes
+    from flink_ms_spark.operators.similarity import (
+        build_index,
+        pq_topk_codes,
+        served_view,
+    )
+    from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest
 
     rng = np.random.default_rng(11)
     base_vecs = rng.normal(size=(30, 8))
@@ -28,7 +32,7 @@ def test_streaming_ann_ingest_end_to_end(spark, tmp_path):
         [(i, [float(x) for x in base_vecs[i]]) for i in range(30)],
         "vec_id LONG, embedding ARRAY<DOUBLE>",
     )
-    build_pq_index(base_df, idx, n_subspaces=4, n_codes=8)
+    build_index(base_df, idx, kind="pq", n_subspaces=4, n_codes=8)
 
     # stream: 20 new vectors plus a RE-SENT id 5 with a new embedding
     new_vecs = rng.normal(size=(20, 8))
@@ -46,7 +50,7 @@ def test_streaming_ann_ingest_end_to_end(spark, tmp_path):
     ).json(str(src))
     ingest.run(stream, str(tmp_path / "ckpt")).awaitTermination()
 
-    merged = load_codes(spark, idx)
+    merged = served_view(spark, idx, "codes")
     assert merged.count() == 50  # 30 base + 20 new; id 5 superseded, not duped
     assert merged.where(F.col("vec_id") == 5).count() == 1
 
@@ -57,7 +61,7 @@ def test_streaming_ann_ingest_end_to_end(spark, tmp_path):
         spark.createDataFrame(
             [(5, [float(x) for x in resent_5])], "vec_id LONG, embedding ARRAY<DOUBLE>"
         ),
-        ingest.codebooks,
+        ingest.artifacts["codebooks"],
     ).collect()[0].code
     got = merged.where(F.col("vec_id") == 5).collect()[0].code
     assert list(got) == list(want)
@@ -67,7 +71,7 @@ def test_streaming_ann_ingest_end_to_end(spark, tmp_path):
     q = spark.createDataFrame(
         [(-1, [float(x) for x in new_vecs[7]])], "vec_id LONG, embedding ARRAY<DOUBLE>"
     )
-    top = pq_topk_codes(merged, ingest.codebooks, q, k=3).orderBy("rk").collect()
+    top = pq_topk_codes(merged, ingest.artifacts["codebooks"], q, k=3).orderBy("rk").collect()
     assert top[0].b == 107
 
     # replay idempotence: a fresh checkpoint reprocesses the same files
@@ -77,15 +81,15 @@ def test_streaming_ann_ingest_end_to_end(spark, tmp_path):
         "vec_id LONG, embedding ARRAY<DOUBLE>"
     ).json(str(src))
     ingest2.run(stream2, str(tmp_path / "ckpt2")).awaitTermination()
-    assert load_codes(spark, idx).count() == 50
+    assert served_view(spark, idx, "codes").count() == 50
 
 
 def test_within_batch_duplicate_id_lands_one_deterministic_row(spark, tmp_path):
     """A micro-batch carrying the same vec_id twice must land exactly
     ONE code row, identical across a replay (the recency window in
-    load_codes cannot be left to break an equal-batch_id tie)."""
-    from flink_ms_spark.operators.similarity import build_pq_index
-    from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest, load_codes
+    served_view cannot be left to break an equal-batch_id tie)."""
+    from flink_ms_spark.operators.similarity import build_index, served_view
+    from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest
 
     rng = np.random.default_rng(23)
     base = spark.createDataFrame(
@@ -93,7 +97,7 @@ def test_within_batch_duplicate_id_lands_one_deterministic_row(spark, tmp_path):
         "vec_id LONG, embedding ARRAY<DOUBLE>",
     )
     idx = str(tmp_path / "idx")
-    build_pq_index(base, idx, n_subspaces=4, n_codes=8)
+    build_index(base, idx, kind="pq", n_subspaces=4, n_codes=8)
 
     dup_batch = spark.createDataFrame(
         [
@@ -105,9 +109,9 @@ def test_within_batch_duplicate_id_lands_one_deterministic_row(spark, tmp_path):
     )
     ingest = StreamingAnnIngest(spark, idx)
     ingest.process_batch(dup_batch, batch_id=0)
-    first = {r.vec_id: r.code for r in load_codes(spark, idx).collect()}
+    first = {r.vec_id: r.code for r in served_view(spark, idx, "codes").collect()}
     assert list(first).count(500) == 1
     # replay the same batch (same batch_id): byte-identical outcome
     ingest.process_batch(dup_batch, batch_id=0)
-    second = {r.vec_id: r.code for r in load_codes(spark, idx).collect()}
+    second = {r.vec_id: r.code for r in served_view(spark, idx, "codes").collect()}
     assert first == second

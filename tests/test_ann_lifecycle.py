@@ -1,6 +1,6 @@
 """ANN index lifecycle coherence: reindex vs streaming increments.
 
-The failure class under test: ``reindex_pq`` swaps in NEW codebooks
+The failure class under test: ``reindex`` swaps in NEW codebooks
 while ``StreamingAnnIngest`` increments encoded under the OLD ones
 exist (or keep arriving from a stale worker). Mixed-generation codes
 served through ADC produce plausible-looking wrong neighbors — so the
@@ -32,7 +32,7 @@ def pq_index(spark, tmp_path):
     """A generation-0 PQ index over 30 base vectors, with a recorded
     drift baseline, plus one landed streaming increment batch of 10
     NEW ids (100..109) — the exact state a reindex must not corrupt."""
-    from flink_ms_spark.operators.similarity import build_pq_index
+    from flink_ms_spark.operators.similarity import build_index
     from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest
 
     rng = np.random.default_rng(7)
@@ -40,7 +40,7 @@ def pq_index(spark, tmp_path):
     inc_vecs = rng.normal(size=(10, 8))
     idx = str(tmp_path / "idx")
     base = _vec_df(spark, range(30), base_vecs)
-    build_pq_index(base, idx, n_subspaces=4, n_codes=8, record_stats=True)
+    build_index(base, idx, kind="pq", n_subspaces=4, n_codes=8, record_stats=True)
     ingest = StreamingAnnIngest(spark, idx)
     ingest.process_batch(_vec_df(spark, range(100, 110), inc_vecs), batch_id=0)
     return idx, base_vecs, inc_vecs, ingest
@@ -51,11 +51,14 @@ def test_reindex_folds_covered_increments_without_loss(spark, tmp_path, pq_index
     increment-only ids from their fresh vectors — nothing vanishes
     from serving, the generation bumps, and the new index starts with
     no increments directory."""
-    from flink_ms_spark.operators.similarity import read_index_manifest, reindex_pq
-    from flink_ms_spark.streaming.ann_ingest import load_codes
+    from flink_ms_spark.operators.similarity import (
+        read_index_manifest,
+        reindex,
+        served_view,
+    )
 
     idx, base_vecs, inc_vecs, _ = pq_index
-    before = {r.vec_id for r in load_codes(spark, idx).collect()}
+    before = {r.vec_id for r in served_view(spark, idx, "codes").collect()}
     assert before == set(range(30)) | set(range(100, 110))
 
     full = _vec_df(
@@ -63,13 +66,13 @@ def test_reindex_folds_covered_increments_without_loss(spark, tmp_path, pq_index
         list(range(30)) + list(range(100, 110)),
         list(base_vecs) + list(inc_vecs),
     )
-    report = reindex_pq(spark, idx, full, force=True)
+    report = reindex(spark, idx, full, force=True)
     assert report["action"] == "rebuilt"
     assert report["dropped_ids"] == 0
     assert report["generation"] == 1
     assert read_index_manifest(spark, idx) == {"kind": "pq", "generation": 1}
 
-    after = {r.vec_id for r in load_codes(spark, idx).collect()}
+    after = {r.vec_id for r in served_view(spark, idx, "codes").collect()}
     assert after == before, "the swap lost served ids"
     # the increments were FOLDED into the base: no increment partitions
     import os
@@ -81,33 +84,33 @@ def test_reindex_refuses_rebuild_input_missing_served_ids(spark, tmp_path, pq_in
     """Rebuild input that lacks the increment-only ids: refuse loudly
     and leave the serving index untouched; allow_missing=True is the
     deliberate-shrink path and reports the drop count."""
-    from flink_ms_spark.operators.similarity import read_index_manifest, reindex_pq
-    from flink_ms_spark.streaming.ann_ingest import load_codes
+    from flink_ms_spark.operators.similarity import (
+        read_index_manifest,
+        reindex,
+        served_view,
+    )
 
     idx, base_vecs, _, _ = pq_index
     base_only = _vec_df(spark, range(30), base_vecs)
 
     with pytest.raises(ValueError, match="10 served id"):
-        reindex_pq(spark, idx, base_only, force=True)
+        reindex(spark, idx, base_only, force=True)
     # refused = untouched: generation 0, all 40 ids still served
     assert read_index_manifest(spark, idx)["generation"] == 0
-    assert load_codes(spark, idx).count() == 40
+    assert served_view(spark, idx, "codes").count() == 40
 
-    report = reindex_pq(spark, idx, base_only, force=True, allow_missing=True)
+    report = reindex(spark, idx, base_only, force=True, allow_missing=True)
     assert report["action"] == "rebuilt"
     assert report["dropped_ids"] == 10  # visible, never silent
-    assert load_codes(spark, idx).count() == 30
+    assert served_view(spark, idx, "codes").count() == 30
 
 
 def test_stale_worker_fails_loud_after_swap(spark, tmp_path, pq_index):
     """A StreamingAnnIngest constructed before a reindex holds the OLD
     codebooks; its next batch must raise (generation mismatch), not
     encode old-generation codes into the new index's increments."""
-    from flink_ms_spark.operators.similarity import reindex_pq
-    from flink_ms_spark.streaming.ann_ingest import (
-        StaleIndexGenerationError,
-        load_codes,
-    )
+    from flink_ms_spark.operators.similarity import reindex, served_view
+    from flink_ms_spark.streaming.ann_ingest import StaleIndexGenerationError
 
     idx, base_vecs, inc_vecs, stale_worker = pq_index
     full = _vec_df(
@@ -115,7 +118,7 @@ def test_stale_worker_fails_loud_after_swap(spark, tmp_path, pq_index):
         list(range(30)) + list(range(100, 110)),
         list(base_vecs) + list(inc_vecs),
     )
-    reindex_pq(spark, idx, full, force=True)
+    reindex(spark, idx, full, force=True)
 
     rng = np.random.default_rng(13)
     with pytest.raises(StaleIndexGenerationError, match="generation 1"):
@@ -123,7 +126,7 @@ def test_stale_worker_fails_loud_after_swap(spark, tmp_path, pq_index):
             _vec_df(spark, [200], rng.normal(size=(1, 8))), batch_id=1
         )
     # nothing landed: the new index still serves exactly the folded set
-    assert load_codes(spark, idx).count() == 40
+    assert served_view(spark, idx, "codes").count() == 40
 
 
 def test_load_codes_never_serves_mismatched_generation_increments(
@@ -134,8 +137,8 @@ def test_load_codes_never_serves_mismatched_generation_increments(
     gen-stamped increment partition whose generation doesn't match the
     manifest is partition-pruned at read, never served as
     mixed-generation distances."""
-    from flink_ms_spark.operators.similarity import pq_encode, reindex_pq
-    from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest, load_codes
+    from flink_ms_spark.operators.similarity import pq_encode, reindex, served_view
+    from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest
 
     idx, base_vecs, inc_vecs, stale_worker = pq_index
     full = _vec_df(
@@ -143,24 +146,24 @@ def test_load_codes_never_serves_mismatched_generation_increments(
         list(range(30)) + list(range(100, 110)),
         list(base_vecs) + list(inc_vecs),
     )
-    reindex_pq(spark, idx, full, force=True)
+    reindex(spark, idx, full, force=True)
 
     # simulate the race: old-generation codes written into the NEW
     # index (what the stale worker would have landed had it won)
     rng = np.random.default_rng(29)
     ghost = pq_encode(_vec_df(spark, [300], rng.normal(size=(1, 8))),
-                      stale_worker.codebooks)
+                      stale_worker.artifacts["codebooks"])
     ghost.write.mode("overwrite").parquet(
         f"{idx}/codes_increments/gen=0/batch_id=99"
     )
-    served = load_codes(spark, idx)
+    served = served_view(spark, idx, "codes")
     assert served.where(F.col("vec_id") == 300).count() == 0
 
     # a CURRENT-generation worker's increments are served as before
     fresh = StreamingAnnIngest(spark, idx)
     assert fresh.generation == 1
     fresh.process_batch(_vec_df(spark, [301], rng.normal(size=(1, 8))), batch_id=0)
-    served = load_codes(spark, idx)
+    served = served_view(spark, idx, "codes")
     assert served.where(F.col("vec_id") == 301).count() == 1
     assert served.where(F.col("vec_id") == 300).count() == 0
     assert served.count() == 41
@@ -171,64 +174,50 @@ def test_reindex_coverage_gate_also_guards_base_only_indexes(spark, tmp_path):
     index rebuilt from an input that lost base ids (bad upstream
     filter) is the same silent-shrink class — refuse, and report the
     drop only under allow_missing."""
-    from flink_ms_spark.operators.similarity import build_pq_index, reindex_pq
-    from flink_ms_spark.streaming.ann_ingest import load_codes
+    from flink_ms_spark.operators.similarity import build_index, reindex, served_view
 
     rng = np.random.default_rng(19)
     vecs = rng.normal(size=(30, 8))
     idx = str(tmp_path / "idx")
-    build_pq_index(_vec_df(spark, range(30), vecs), idx,
-                   n_subspaces=4, n_codes=8, record_stats=True)
+    build_index(_vec_df(spark, range(30), vecs), idx, kind="pq",
+                n_subspaces=4, n_codes=8, record_stats=True)
 
     truncated = _vec_df(spark, range(24), vecs[:24])  # lost 6 base ids
     with pytest.raises(ValueError, match="6 served id"):
-        reindex_pq(spark, idx, truncated, force=True)
-    assert load_codes(spark, idx).count() == 30, "refusal must not touch serving"
+        reindex(spark, idx, truncated, force=True)
+    assert served_view(spark, idx, "codes").count() == 30, "refusal must not touch serving"
 
-    report = reindex_pq(spark, idx, truncated, force=True, allow_missing=True)
+    report = reindex(spark, idx, truncated, force=True, allow_missing=True)
     assert report["dropped_ids"] == 6
-    assert load_codes(spark, idx).count() == 24
+    assert served_view(spark, idx, "codes").count() == 24
 
 
-def test_legacy_unstamped_increments_serve_as_generation_zero(spark, tmp_path):
-    """Increments landed before generation stamping existed (layout
-    codes_increments/batch_id=N, no index manifest) must stay servable
-    WITHOUT the reader mutating the index: load_codes reads them in
-    place as generation 0 (read-only storage and concurrent readers
-    stay safe). The WRITER migrates them into gen=0/ before landing a
-    stamped partition, so the layout never mixes on disk."""
+def test_manifestless_directory_raises_on_query_status_and_ingest(
+    spark, tmp_path, capsys
+):
+    """Every writer commits an index by writing its manifest LAST, so a
+    directory without one is not an index (or an incomplete build):
+    serving, ann-status and ingest all refuse it loudly instead of
+    guessing a kind from the layout."""
     import os
 
-    from flink_ms_spark.operators.similarity import build_pq_index, pq_encode
-    from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest, load_codes
+    from flink_ms_spark import cli
+    from flink_ms_spark.operators.similarity import build_index, pq_index_topk
+    from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest
 
     rng = np.random.default_rng(37)
     vecs = rng.normal(size=(16, 8))
     idx = str(tmp_path / "idx")
-    cb = build_pq_index(_vec_df(spark, range(16), vecs), idx,
-                        n_subspaces=4, n_codes=8)
-    os.unlink(os.path.join(idx, "index_manifest.json"))  # pre-manifest index
+    df = _vec_df(spark, range(16), vecs)
+    build_index(df, idx, kind="pq", n_subspaces=4, n_codes=8)
+    os.unlink(os.path.join(idx, "index_manifest.json"))  # the build "died"
 
-    # legacy-layout increment, written the way the old worker did
-    pq_encode(_vec_df(spark, [500], rng.normal(size=(1, 8))), cb).write.mode(
-        "overwrite"
-    ).parquet(f"{idx}/codes_increments/batch_id=0")
-
-    served = load_codes(spark, idx)
-    assert served.where(F.col("vec_id") == 500).count() == 1
-    # the read is pure: the legacy layout is untouched on disk
-    assert os.path.isdir(f"{idx}/codes_increments/batch_id=0")
-    assert not os.path.isdir(f"{idx}/codes_increments/gen=0")
-
-    # a new stamped worker migrates-then-lands: no mixed layout, both
-    # increments served, latest batch still winning per id
-    worker = StreamingAnnIngest(spark, idx)
-    assert worker.generation == 0
-    worker.process_batch(_vec_df(spark, [501], rng.normal(size=(1, 8))), batch_id=1)
-    assert os.path.isdir(f"{idx}/codes_increments/gen=0/batch_id=0")
-    assert not os.path.isdir(f"{idx}/codes_increments/batch_id=0")
-    served = load_codes(spark, idx)
-    assert served.count() == 18  # 16 base + 500 + 501
+    with pytest.raises(IOError, match="not an index or incomplete build"):
+        pq_index_topk(spark, idx, df, k=3)
+    with pytest.raises(IOError, match="not an index or incomplete build"):
+        cli.main(["ann-status", "--index", idx])
+    with pytest.raises(IOError, match="not an index or incomplete build"):
+        StreamingAnnIngest(spark, idx)
 
 
 class _RacingIngest:
@@ -237,7 +226,7 @@ class _RacingIngest:
     the batch is not yet committed, the exact post-check window."""
 
     def __new__(cls, spark, idx, reindex_input):
-        from flink_ms_spark.operators.similarity import reindex_pq
+        from flink_ms_spark.operators.similarity import reindex
         from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest
 
         class Racing(StreamingAnnIngest):
@@ -252,8 +241,8 @@ class _RacingIngest:
                     # from the rebuild input (allow_missing documents
                     # the drop — the post-write check is what recovers
                     # the batch)
-                    reindex_pq(self.spark, idx, reindex_input,
-                               force=True, allow_missing=True)
+                    reindex(self.spark, idx, reindex_input,
+                            force=True, allow_missing=True)
 
         return Racing(spark, idx)
 
@@ -263,10 +252,10 @@ def test_post_write_generation_race_raises_not_commits(spark, tmp_path, pq_index
     write landing must raise AFTER the write too: the landed partition
     is generation-pruned (unservable), and committing the batch would
     silently drop its vectors from serving until a resend."""
+    from flink_ms_spark.operators.similarity import served_view
     from flink_ms_spark.streaming.ann_ingest import (
         StaleIndexGenerationError,
         StreamingAnnIngest,
-        load_codes,
     )
 
     idx, base_vecs, inc_vecs, _ = pq_index
@@ -281,14 +270,14 @@ def test_post_write_generation_race_raises_not_commits(spark, tmp_path, pq_index
     with pytest.raises(StaleIndexGenerationError, match="while batch 7 was landing"):
         worker.process_batch(_vec_df(spark, [700], new_vec), batch_id=7)
     # the stale-gen debris is never served...
-    assert load_codes(spark, idx).where(F.col("vec_id") == 700).count() == 0
+    assert served_view(spark, idx, "codes").where(F.col("vec_id") == 700).count() == 0
     # ...and the REPLAY (what the uncommitted sink does on restart,
     # here a reloaded worker) re-lands the batch under the new
     # generation: no vector lost
     worker.reload()
     assert worker.generation == 1
     worker.process_batch(_vec_df(spark, [700], new_vec), batch_id=7)
-    assert load_codes(spark, idx).where(F.col("vec_id") == 700).count() == 1
+    assert served_view(spark, idx, "codes").where(F.col("vec_id") == 700).count() == 1
 
 
 def test_run_recovers_ingest_across_reindex_without_reconstruction(
@@ -301,7 +290,7 @@ def test_run_recovers_ingest_across_reindex_without_reconstruction(
     hand."""
     import json
 
-    from flink_ms_spark.streaming.ann_ingest import load_codes
+    from flink_ms_spark.operators.similarity import served_view
 
     idx, base_vecs, inc_vecs, _ = pq_index
     full = _vec_df(
@@ -325,7 +314,7 @@ def test_run_recovers_ingest_across_reindex_without_reconstruction(
     worker.run(stream, str(tmp_path / "ckpt")).awaitTermination()
 
     assert worker.generation == 1  # reloaded in place, same object
-    served = load_codes(spark, idx)
+    served = served_view(spark, idx, "codes")
     assert served.where(F.col("vec_id") == 800).count() == 1
 
 
@@ -335,20 +324,16 @@ def test_pq_serving_pair_fails_loud_when_generation_swapped_mid_serve(
     """Swap coherence for the PQ base pair: codes are stamped
     codes/gen=G, so a serve that paired codebooks with generation G
     errors if the code read happens after a swap to G+1 — old books
-    over new codes is the silent ADC-garbage mix. Legacy pre-stamp
-    indexes (flat codes/) still serve, and a reindex rewrites them
-    stamped."""
-    import os
-    import shutil
-
+    over new codes is the silent ADC-garbage mix."""
     from flink_ms_spark.operators.similarity import (
-        load_pq_codes,
-        load_pq_serving,
-        reindex_pq,
+        load_index,
+        reindex,
+        served_view,
     )
 
     idx, base_vecs, inc_vecs, _ = pq_index
-    cb, codes, gen = load_pq_serving(spark, idx)
+    _kind, arts, gen = load_index(spark, idx)
+    codes = served_view(spark, idx, "codes", expected_generation=gen)
     assert gen == 0 and codes.count() == 40  # merged view: base+increment
 
     full = _vec_df(
@@ -356,23 +341,13 @@ def test_pq_serving_pair_fails_loud_when_generation_swapped_mid_serve(
         list(range(30)) + list(range(100, 110)),
         list(base_vecs) + list(inc_vecs),
     )
-    reindex_pq(spark, idx, full, force=True)
+    reindex(spark, idx, full, force=True)
     # generation-0 probe against the generation-1 index: loud, not a mix
     with pytest.raises(IOError, match="generation 0"):
-        load_pq_codes(spark, idx, expected_generation=0).collect()
-    cb, codes, gen = load_pq_serving(spark, idx)
+        served_view(spark, idx, "codes", expected_generation=0).collect()
+    _kind, arts, gen = load_index(spark, idx)
+    codes = served_view(spark, idx, "codes", expected_generation=gen)
     assert gen == 1 and codes.count() == 40
-
-    # legacy pre-stamp layout (flat codes/): served in place...
-    legacy = str(tmp_path / "legacy")
-    os.makedirs(legacy)
-    shutil.copytree(f"{idx}/codebooks", f"{legacy}/codebooks")
-    shutil.copytree(f"{idx}/codes/gen=1", f"{legacy}/codes")
-    assert load_pq_codes(spark, legacy).count() == 40
-    # ...and a reindex rewrites it stamped
-    reindex_pq(spark, legacy, full, force=True)
-    assert os.path.isdir(f"{legacy}/codes/gen=1")
-    assert load_pq_serving(spark, legacy)[2] == 1
 
 
 def test_rebuild_intent_marker_blocks_ingest_commits(spark, tmp_path, pq_index):
@@ -384,11 +359,10 @@ def test_rebuild_intent_marker_blocks_ingest_commits(spark, tmp_path, pq_index):
     so ingest resumes."""
     import os
 
-    from flink_ms_spark.operators.similarity import reindex_pq
+    from flink_ms_spark.operators.similarity import reindex, served_view
     from flink_ms_spark.streaming.ann_ingest import (
         StaleIndexGenerationError,
         StreamingAnnIngest,
-        load_codes,
     )
 
     idx, base_vecs, _, worker = pq_index
@@ -402,15 +376,57 @@ def test_rebuild_intent_marker_blocks_ingest_commits(spark, tmp_path, pq_index):
     base_only = _vec_df(spark, range(30), base_vecs)
     os.rmdir(idx + ".rebuilding")
     with pytest.raises(ValueError, match="served id"):
-        reindex_pq(spark, idx, base_only, force=True)
+        reindex(spark, idx, base_only, force=True)
     assert not os.path.isdir(idx + ".rebuilding"), "refusal must clear marker"
     worker.process_batch(batch, batch_id=3)
-    assert load_codes(spark, idx).where(F.col("vec_id") == 600).count() == 1
+    assert served_view(spark, idx, "codes").where(F.col("vec_id") == 600).count() == 1
     # and a fresh worker constructed mid-rebuild also refuses to commit
     os.makedirs(idx + ".rebuilding")
     fresh = StreamingAnnIngest(spark, idx)
     with pytest.raises(StaleIndexGenerationError, match="rebuild in progress"):
         fresh.process_batch(batch, batch_id=4)
+
+
+def test_failed_swap_keeps_index_serving_and_ingest_blocked(
+    spark, tmp_path, pq_index, monkeypatch
+):
+    """Hadoop rename reports failure by returning false. When the
+    swap's first rename (live index aside) fails, reindex raises, the
+    live index keeps serving at its generation, and the finished
+    rebuild stays in <index>.rebuilding, so ingest refuses to commit
+    until a re-run completes the swap."""
+    import os
+
+    from flink_ms_spark import fsutil
+    from flink_ms_spark.operators.similarity import (
+        read_index_manifest,
+        reindex,
+        served_view,
+    )
+    from flink_ms_spark.streaming.ann_ingest import StaleIndexGenerationError
+
+    idx, base_vecs, inc_vecs, worker = pq_index
+    full = _vec_df(
+        spark,
+        list(range(30)) + list(range(100, 110)),
+        list(base_vecs) + list(inc_vecs),
+    )
+    monkeypatch.setattr(fsutil, "rename", lambda s, a, b: False)
+    with pytest.raises(IOError, match="aside"):
+        reindex(spark, idx, full, force=True)
+    monkeypatch.undo()
+    assert read_index_manifest(spark, idx)["generation"] == 0
+    assert served_view(spark, idx, "codes").count() == 40
+    assert os.path.isdir(idx + ".rebuilding")
+    late = np.random.default_rng(53).normal(size=(1, 8))
+    with pytest.raises(StaleIndexGenerationError, match="rebuild in progress"):
+        worker.process_batch(_vec_df(spark, [650], late), batch_id=5)
+
+    # the re-run's gate sees the refused batch's landed rows too
+    full = full.unionByName(_vec_df(spark, [650], late))
+    assert reindex(spark, idx, full, force=True)["generation"] == 1
+    assert not os.path.isdir(idx + ".rebuilding")
+    assert served_view(spark, idx, "codes").count() == 41
 
 
 def test_ivf_query_topk_matches_brute_force_when_probing_all_cells(spark, tmp_path):
@@ -474,9 +490,9 @@ def test_serve_kernels_handle_empty_query_frames(spark, tmp_path):
     answer in every broadcast-query serve kernel, never an
     (0,)-shape numpy crash."""
     from flink_ms_spark.operators.similarity import (
-        build_pq_index,
+        build_index,
         ivf_query_topk,
-        load_pq_codebooks,
+        load_artifact,
         pq_topk_codes,
         train_ivf_codebook,
     )
@@ -491,9 +507,9 @@ def test_serve_kernels_handle_empty_query_frames(spark, tmp_path):
     assert [f.name for f in out.schema.fields] == ["a", "b", "cos_sim", "rk"]
 
     idx = str(tmp_path / "idx")
-    build_pq_index(corpus, idx, n_subspaces=4, n_codes=8)
+    build_index(corpus, idx, kind="pq", n_subspaces=4, n_codes=8)
     codes = spark.read.parquet(f"{idx}/codes/gen=0")
-    out = pq_topk_codes(codes, load_pq_codebooks(spark, idx), empty, k=3)
+    out = pq_topk_codes(codes, load_artifact(spark, idx, "codebooks"), empty, k=3)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == ["a", "b", "ad2", "rk"]
 
@@ -503,10 +519,10 @@ def test_serve_kernels_refuse_corpus_scale_query_frames(spark, tmp_path):
     kernels raise a ValueError naming the report-shape alternative
     instead of pulling a corpus onto the driver."""
     from flink_ms_spark.operators.similarity import (
-        build_pq_index,
+        build_index,
         cosine_topk,
         ivf_query_topk,
-        load_pq_codebooks,
+        load_artifact,
         pq_topk_codes,
         train_ivf_codebook,
     )
@@ -520,10 +536,10 @@ def test_serve_kernels_refuse_corpus_scale_query_frames(spark, tmp_path):
     with pytest.raises(ValueError, match="ivf_kmeans_topk"):
         ivf_query_topk(corpus, cents, corpus, k=3, max_queries=10)
     idx = str(tmp_path / "idx")
-    build_pq_index(corpus, idx, n_subspaces=4, n_codes=8)
+    build_index(corpus, idx, kind="pq", n_subspaces=4, n_codes=8)
     codes = spark.read.parquet(f"{idx}/codes/gen=0")
     with pytest.raises(ValueError, match="ivf_pq_topk"):
-        pq_topk_codes(codes, load_pq_codebooks(spark, idx), corpus,
+        pq_topk_codes(codes, load_artifact(spark, idx, "codebooks"), corpus,
                       k=3, max_queries=10)
     # at or under the cap (and with the cap lifted) the kernels serve
     assert cosine_topk(corpus, k=1, max_queries=30).count() == 30
@@ -535,17 +551,17 @@ def test_zero_error_baseline_reads_healthy_not_infinite_drift(spark, tmp_path):
     EXACTLY zero quantization error; the monitor must read an
     unchanged corpus as healthy (cur 0 / built 0), not as infinite
     drift that rebuilds a perfect index on every pass."""
-    from flink_ms_spark.operators.similarity import build_pq_index, reindex_pq
+    from flink_ms_spark.operators.similarity import build_index, reindex
 
     rng = np.random.default_rng(3)
     vecs = rng.normal(size=(4, 8))  # 4 rows, 8 codes -> every row a centroid
     idx = str(tmp_path / "idx0")
     df = _vec_df(spark, range(4), vecs)
-    build_pq_index(df, idx, n_subspaces=4, n_codes=8, record_stats=True)
+    build_index(df, idx, kind="pq", n_subspaces=4, n_codes=8, record_stats=True)
     built = json.loads((tmp_path / "idx0" / "stats.json").read_text())
     assert built["mean_sq_err"] == 0.0, "degenerate baseline precondition"
 
-    report = reindex_pq(spark, idx, df)
+    report = reindex(spark, idx, df)
     assert report["action"] == "healthy"
     assert report["drift_ratio"] == 1.0
 
@@ -556,41 +572,41 @@ def test_ivf_reindex_drift_policy(spark, tmp_path):
     under distribution shift, stats-missing without a baseline, and
     the report carries the cell-balance scalars."""
     from flink_ms_spark.operators.similarity import (
-        build_ivf_index,
+        build_index,
         ivf_assignment_stats,
-        load_ivf_centroids,
+        load_artifact,
         read_index_manifest,
-        reindex_ivf,
+        reindex,
     )
 
     rng = np.random.default_rng(17)
     vecs = rng.normal(size=(80, 8))
     idx = str(tmp_path / "ivf")
     df = _vec_df(spark, range(80), vecs)
-    cents = build_ivf_index(df, idx, n_cells=4, record_stats=True)
+    cents = build_index(df, idx, kind="ivf", n_cells=4, record_stats=True)["centroids"]
     assert read_index_manifest(spark, idx) == {"kind": "ivf", "generation": 0}
     built = json.loads((tmp_path / "ivf" / "stats.json").read_text())
     assert built["n"] == 80 and built["n_cells"] == 4
     assert 0.25 <= built["max_cell_frac"] <= 1.0
     # the stats pass agrees with a direct recompute of the persisted artifact
-    loaded = load_ivf_centroids(spark, idx)
+    loaded = load_artifact(spark, idx, "centroids")
     assert np.allclose(loaded, cents)
     again = ivf_assignment_stats(df, loaded)
     assert abs(again["mean_sq_err"] - built["mean_sq_err"]) < 1e-9
 
-    report = reindex_ivf(spark, idx, df)
+    report = reindex(spark, idx, df)
     assert report["action"] == "healthy"
     assert abs(report["drift_ratio"] - 1.0) < 1e-9
 
     shifted = _vec_df(spark, range(80), 3.0 * vecs)
-    report = reindex_ivf(spark, idx, shifted)
+    report = reindex(spark, idx, shifted)
     assert report["action"] == "rebuilt"
     assert report["drift_ratio"] > 1.2
     assert report["rebuilt_err"] < report["current_err"]
     assert report["generation"] == 1
     assert 0.0 < report["rebuilt_max_cell_frac"] <= 1.0
     assert read_index_manifest(spark, idx)["generation"] == 1
-    assert reindex_ivf(spark, idx, shifted)["action"] == "healthy"
+    assert reindex(spark, idx, shifted)["action"] == "healthy"
 
     (tmp_path / "ivf" / "stats.json").unlink()
-    assert reindex_ivf(spark, idx, shifted)["action"] == "stats-missing"
+    assert reindex(spark, idx, shifted)["action"] == "stats-missing"

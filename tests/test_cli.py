@@ -499,7 +499,7 @@ def test_cli_ann_status_reports_lifecycle_state(spark, tmp_path, capsys):
 
     import numpy as np
 
-    from flink_ms_spark.operators.similarity import reindex_pq
+    from flink_ms_spark.operators.similarity import reindex
     from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest
 
     rng = np.random.default_rng(73)
@@ -547,7 +547,7 @@ def test_cli_ann_status_reports_lifecycle_state(spark, tmp_path, capsys):
         + [(100 + i, [float(x) for x in new_vec[i]]) for i in range(2)],
         "vec_id LONG, embedding ARRAY<DOUBLE>",
     )
-    reindex_pq(spark, idx, full, force=True)
+    reindex(spark, idx, full, force=True)
     s = status()
     assert s["generation"] == "1" and s["base_rows"] == "32"
     assert s["live_increment_batches"] == "0" and s["stale_generation_dirs"] == "0"
@@ -617,51 +617,6 @@ def test_cli_build_over_existing_index_swaps_at_next_generation(
     with pytest.raises(SystemExit, match="refine stage"):
         cli.main(["ann-query", "--index", pq_idx, "--vector=0,0,0,0,0,0,0,0",
                   "--rerank", "10"])
-
-
-def test_cli_ann_status_counts_mixed_increment_layouts(spark, tmp_path, capsys):
-    """ADVICE r13 regression: legacy batch_id=N dirs and stamped gen=0
-    dirs coexisting under codes_increments have conflicting partition
-    layouts — one read over both raises AnalysisException, so
-    ann-status (the diagnostic meant for exactly such odd states) must
-    count the groups separately and sum."""
-    import numpy as np
-
-    from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest
-
-    rng = np.random.default_rng(251)
-    vecs = rng.normal(size=(30, 8))
-    src = tmp_path / "emb"
-    spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(30)],
-        "vec_id LONG, embedding ARRAY<DOUBLE>",
-    ).write.parquet(str(src))
-    idx = str(tmp_path / "idx")
-    cli.main(["build-ann-index", "--input", str(src), "--index", idx,
-              "--subspaces", "4", "--codes", "8"])
-    capsys.readouterr()
-
-    w = StreamingAnnIngest(spark, idx)
-    w.process_batch(
-        spark.createDataFrame(
-            [(900, [float(x) for x in rng.normal(size=8)])],
-            "vec_id LONG, embedding ARRAY<DOUBLE>",
-        ),
-        batch_id=0,
-    )
-    # manufacture the odd state: a legacy pre-stamp partition BESIDE
-    # the stamped one (normally the writer migrates legacy first)
-    import shutil
-
-    inc = tmp_path / "idx" / "codes_increments"
-    shutil.copytree(str(inc / "gen=0" / "batch_id=0"),
-                    str(inc / "batch_id=1"))
-
-    cli.main(["ann-status", "--index", idx])
-    s = dict(l.split("\t") for l in capsys.readouterr().out.splitlines()
-             if "\t" in l)
-    assert s["live_increment_batches"] == "2"
-    assert s["live_increment_rows"] == "2"
 
 
 def test_cli_sql_runs_over_fixture_views(sf_smoke, capsys):

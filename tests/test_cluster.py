@@ -4,21 +4,32 @@ from __future__ import annotations
 
 from flink_ms_spark.operators.cluster import (
     canonical_per_component,
-    connected_components,
+    connected_components_bipartite,
 )
+
+
+def _components(spark, pairs):
+    """(node, component) of a pair graph — each edge a two-node group —
+    through both solver paths (driver-local union-find and distributed
+    min-label propagation), which must agree."""
+    m = spark.createDataFrame(
+        [(n, f"e{i}") for i, e in enumerate(pairs) for n in e], ["node", "group"]
+    )
+    local = connected_components_bipartite(m)
+    dist = connected_components_bipartite(m, local_threshold=0)
+    got = {(r.node, r.component) for r in local.collect()}
+    assert got == {(r.node, r.component) for r in dist.collect()}
+    return got, dist
 
 
 def test_chain_collapses_to_one_component(spark):
     # 1-2, 2-3, 3-4: a diameter-3 chain — exercises multi-round propagation
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], ["a", "b"])
-    got = {(r.node, r.component) for r in connected_components(pairs).collect()}
+    got, _ = _components(spark, [(1, 2), (2, 3), (3, 4)])
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1)}
 
 
 def test_two_components_and_canonical(spark):
-    pairs = spark.createDataFrame([(5, 9), (9, 7), (20, 30)], ["a", "b"])
-    cc = connected_components(pairs)
-    comps = {(r.node, r.component) for r in cc.collect()}
+    comps, cc = _components(spark, [(5, 9), (9, 7), (20, 30)])
     assert comps == {(5, 5), (9, 5), (7, 5), (20, 20), (30, 20)}
     summary = {
         (r.component, r.n_docs, r.canonical_doc_id)
@@ -29,8 +40,7 @@ def test_two_components_and_canonical(spark):
 
 def test_edge_order_irrelevant(spark):
     # same graph, reversed/duplicated edges → same fixpoint
-    pairs = spark.createDataFrame([(4, 3), (3, 4), (2, 3), (1, 2)], ["a", "b"])
-    got = {(r.node, r.component) for r in connected_components(pairs).collect()}
+    got, _ = _components(spark, [(4, 3), (3, 4), (2, 3), (1, 2)])
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1)}
 
 

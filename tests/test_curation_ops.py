@@ -251,8 +251,8 @@ def test_pq_index_roundtrip(spark, sf_smoke, tmp_path):
     import numpy as np
 
     from flink_ms_spark.operators.similarity import (
-        build_pq_index,
-        load_pq_codebooks,
+        build_index,
+        load_artifact,
         pq_topk,
         train_pq_codebooks,
     )
@@ -260,17 +260,17 @@ def test_pq_index_roundtrip(spark, sf_smoke, tmp_path):
 
     emb = load_table(spark, sf_smoke, "embeddings")
     idx = str(tmp_path / "pq_index")
-    cb = build_pq_index(emb, idx, n_subspaces=16, n_codes=32, seed=42)
-    loaded = load_pq_codebooks(spark, idx)
+    cb = build_index(emb, idx, kind="pq", n_subspaces=16, n_codes=32, seed=42)["codebooks"]
+    loaded = load_artifact(spark, idx, "codebooks")
     assert np.allclose(cb, loaded)
     # same codebooks -> same top-k, whether fresh or loaded
     direct = train_pq_codebooks(emb, 16, 32, seed=42)
     want = {(r.a, r.b, r.rk) for r in pq_topk(emb, direct, k=3).collect()}
     got = {(r.a, r.b, r.rk) for r in pq_topk(emb, loaded, k=3).collect()}
     assert got == want
-    from flink_ms_spark.operators.similarity import load_pq_codes
+    from flink_ms_spark.operators.similarity import served_view
 
-    codes = load_pq_codes(spark, idx)
+    codes = served_view(spark, idx, "codes")
     assert codes.count() == emb.count()
 
 

@@ -1,13 +1,13 @@
 """IVF persisted-members serve lane: O(n_probe) partition lookups,
 streaming member increments, and the reindex coverage gate.
 
-The contract under test (build_ivf_index docstring): WITHOUT a members
+The contract under test (build_index docstring): WITHOUT a members
 table an IVF index persists only the coarse quantizer — serving scans
 the query-time corpus and is exactly as fresh as that corpus
 (batch-only; nothing to increment). WITH ``persist_members=True`` the
 corpus lands partitioned BY CELL, point lookups read only the probed
 cells' partitions plus the live increment tail, StreamingAnnIngest
-gains an ivf lane sharing the generation machinery, and reindex_ivf
+gains an ivf lane sharing the generation machinery, and reindex
 gets the same served-id coverage gate as PQ.
 """
 
@@ -32,14 +32,14 @@ def _vec_df(spark, ids, vecs):
 def members_index(spark, tmp_path):
     """An IVF index with a persisted members table over 80 vectors in
     4 cells, drift baseline recorded."""
-    from flink_ms_spark.operators.similarity import build_ivf_index
+    from flink_ms_spark.operators.similarity import build_index
 
     rng = np.random.default_rng(83)
     vecs = rng.normal(size=(80, 8))
     idx = str(tmp_path / "ivf")
     df = _vec_df(spark, range(80), vecs)
-    cents = build_ivf_index(df, idx, n_cells=4, record_stats=True,
-                            persist_members=True)
+    cents = build_index(df, idx, kind="ivf", n_cells=4, record_stats=True,
+                        persist_members=True)["centroids"]
     return idx, vecs, cents
 
 
@@ -76,11 +76,11 @@ def test_point_lookup_reads_only_probed_cell_partitions(spark, members_index):
     not depend on non-probed partitions even existing."""
     from flink_ms_spark.operators.similarity import (
         ivf_members_topk,
-        load_ivf_members,
+        served_view,
     )
 
     idx, vecs, cents = members_index
-    view = load_ivf_members(spark, idx, cells=[1])
+    view = served_view(spark, idx, "members", cells=[1])
     plan = view._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "cell" in plan
 
@@ -110,7 +110,7 @@ def test_streaming_member_increments_serve_fresh_and_moved_vectors(
     from flink_ms_spark.operators.similarity import (
         assign_members,
         ivf_members_topk,
-        load_ivf_members,
+        served_view,
     )
     from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest
 
@@ -125,7 +125,7 @@ def test_streaming_member_increments_serve_fresh_and_moved_vectors(
     new_vec = cents[target] + 0.003
     worker.process_batch(_vec_df(spark, [7, 900], [moved, new_vec]), batch_id=0)
 
-    served = load_ivf_members(spark, idx)
+    served = served_view(spark, idx, "members")
     assert served.count() == 81  # 80 base + 900; id 7 superseded not duped
     srow = served.where(F.col("vec_id") == 7).collect()[0]
     assert srow.cell == target and abs(srow.embedding[0] - moved[0]) < 1e-12
@@ -142,19 +142,19 @@ def test_streaming_member_increments_serve_fresh_and_moved_vectors(
 
     # replay idempotence: same batch_id overwrites its own partition
     worker.process_batch(_vec_df(spark, [7, 900], [moved, new_vec]), batch_id=0)
-    assert load_ivf_members(spark, idx).count() == 81
+    assert served_view(spark, idx, "members").count() == 81
 
 
 def test_ivf_reindex_coverage_gate_and_increment_fold(spark, members_index):
-    """reindex_ivf on a members index gets PQ's coverage gate: refuse
+    """reindex on a members index gets PQ's coverage gate: refuse
     a rebuild input missing served ids (increment-only ids included),
     fold everything on a covering input — generation bump, increments
     dir gone, members regenerated, no id lost — and report a
     deliberate allow_missing shrink."""
     from flink_ms_spark.operators.similarity import (
-        load_ivf_members,
+        served_view,
         read_index_manifest,
-        reindex_ivf,
+        reindex,
     )
     from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest
 
@@ -166,27 +166,27 @@ def test_ivf_reindex_coverage_gate_and_increment_fold(spark, members_index):
     )
     base_only = _vec_df(spark, range(80), vecs)
     with pytest.raises(ValueError, match="5 served id"):
-        reindex_ivf(spark, idx, base_only, force=True)
+        reindex(spark, idx, base_only, force=True)
     assert read_index_manifest(spark, idx)["generation"] == 0
-    assert load_ivf_members(spark, idx).count() == 85
+    assert served_view(spark, idx, "members").count() == 85
 
     full = _vec_df(
         spark,
         list(range(80)) + list(range(900, 905)),
         list(vecs) + list(inc_vecs),
     )
-    report = reindex_ivf(spark, idx, full, force=True)
+    report = reindex(spark, idx, full, force=True)
     assert report["action"] == "rebuilt"
     assert report["dropped_ids"] == 0
     assert report["generation"] == 1
     assert not os.path.isdir(os.path.join(idx, "members_increments"))
-    served = {r.vec_id for r in load_ivf_members(spark, idx).collect()}
+    served = {r.vec_id for r in served_view(spark, idx, "members").collect()}
     assert served == set(range(80)) | set(range(900, 905))
 
     # deliberate shrink is reported, never silent
-    report = reindex_ivf(spark, idx, base_only, force=True, allow_missing=True)
+    report = reindex(spark, idx, base_only, force=True, allow_missing=True)
     assert report["dropped_ids"] == 5
-    assert load_ivf_members(spark, idx).count() == 80
+    assert served_view(spark, idx, "members").count() == 80
 
 
 def test_stale_ivf_worker_fails_loud_and_stale_increments_never_served(
@@ -197,8 +197,8 @@ def test_stale_ivf_worker_fails_loud_and_stale_increments_never_served(
     member increment written anyway is partition-pruned at read."""
     from flink_ms_spark.operators.similarity import (
         assign_members,
-        load_ivf_members,
-        reindex_ivf,
+        served_view,
+        reindex,
     )
     from flink_ms_spark.streaming.ann_ingest import (
         StaleIndexGenerationError,
@@ -207,7 +207,7 @@ def test_stale_ivf_worker_fails_loud_and_stale_increments_never_served(
 
     idx, vecs, cents = members_index
     stale = StreamingAnnIngest(spark, idx)
-    reindex_ivf(spark, idx, _vec_df(spark, range(80), vecs), force=True)
+    reindex(spark, idx, _vec_df(spark, range(80), vecs), force=True)
 
     rng = np.random.default_rng(101)
     with pytest.raises(StaleIndexGenerationError, match="generation 1"):
@@ -218,14 +218,14 @@ def test_stale_ivf_worker_fails_loud_and_stale_increments_never_served(
     ghost.write.mode("overwrite").partitionBy("cell").parquet(
         f"{idx}/members_increments/gen=0/batch_id=9"
     )
-    served = load_ivf_members(spark, idx)
+    served = served_view(spark, idx, "members")
     assert served.where(F.col("vec_id").isin(950, 951)).count() == 0
     # recovery lane works for ivf too: reload, land, served
     stale.reload()
     assert stale.generation == 1
     stale.process_batch(_vec_df(spark, [950], rng.normal(size=(1, 8))),
                         batch_id=1)
-    assert load_ivf_members(spark, idx).where(F.col("vec_id") == 950).count() == 1
+    assert served_view(spark, idx, "members").where(F.col("vec_id") == 950).count() == 1
 
 
 def test_members_read_fails_loud_when_generation_swapped_mid_lookup(
@@ -234,20 +234,20 @@ def test_members_read_fails_loud_when_generation_swapped_mid_lookup(
     """Swap coherence: a lookup that loaded centroids (and probed
     cells) under generation G must ERROR if the members read happens
     after a swap to G+1 — new cell assignments under old-centroid
-    probes would be silently wrong, the exact mix _swap_index promises
+    probes would be silently wrong, the exact mix the swap promises
     cannot happen."""
     from flink_ms_spark.operators.similarity import (
-        load_ivf_members,
-        reindex_ivf,
+        served_view,
+        reindex,
     )
 
     idx, vecs, cents = members_index
-    reindex_ivf(spark, idx, _vec_df(spark, range(80), vecs), force=True)
+    reindex(spark, idx, _vec_df(spark, range(80), vecs), force=True)
     # generation 0 probes against a generation-1 index: loud, not a mix
     with pytest.raises(IOError, match="generation 0"):
-        load_ivf_members(spark, idx, cells=[0], expected_generation=0).collect()
+        served_view(spark, idx, "members", cells=[0], expected_generation=0).collect()
     # the current generation serves normally
-    assert load_ivf_members(spark, idx).count() == 80
+    assert served_view(spark, idx, "members").count() == 80
 
 
 def test_run_recovers_ivf_ingest_across_racing_reindex(
@@ -262,8 +262,8 @@ def test_run_recovers_ivf_ingest_across_racing_reindex(
     import json
 
     from flink_ms_spark.operators.similarity import (
-        load_ivf_members,
-        reindex_ivf,
+        served_view,
+        reindex,
     )
     from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest
 
@@ -273,16 +273,16 @@ def test_run_recovers_ivf_ingest_across_racing_reindex(
     class Racing(StreamingAnnIngest):
         _raced = False
 
-        def _land_increment(self, rows, out, partition_by=None):
-            super()._land_increment(rows, out, partition_by=partition_by)
+        def _land_increment(self, rows, out):
+            super()._land_increment(rows, out)
             if not Racing._raced:
                 Racing._raced = True
                 # reindex snapshot predates this batch: its ids are
                 # missing from the rebuild input (allow_missing
                 # documents the drop; the post-write check + replay
                 # recover the batch)
-                reindex_ivf(self.spark, idx, base, force=True,
-                            allow_missing=True)
+                reindex(self.spark, idx, base, force=True,
+                        allow_missing=True)
 
     worker = Racing(spark, idx)
     assert worker.kind == "ivf" and worker.generation == 0
@@ -300,7 +300,7 @@ def test_run_recovers_ivf_ingest_across_racing_reindex(
     worker.run(stream, str(tmp_path / "ckpt")).awaitTermination()
 
     assert worker.generation == 1  # reloaded in place, same object
-    served = load_ivf_members(spark, idx)
+    served = served_view(spark, idx, "members")
     assert served.where(F.col("vec_id") == 860).count() == 1
     assert served.count() == 81
 
@@ -311,7 +311,7 @@ def test_memberless_ivf_is_batch_only_by_contract(spark, tmp_path):
     is exactly as fresh as the query-time corpus — a vector appears
     the moment the corpus input carries it, no rebuild involved."""
     from flink_ms_spark.operators.similarity import (
-        build_ivf_index,
+        build_index,
         ivf_query_topk,
     )
     from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest
@@ -319,8 +319,8 @@ def test_memberless_ivf_is_batch_only_by_contract(spark, tmp_path):
     rng = np.random.default_rng(103)
     vecs = rng.normal(size=(40, 8))
     idx = str(tmp_path / "ivf_plain")
-    cents = build_ivf_index(_vec_df(spark, range(40), vecs), idx,
-                            n_cells=2, record_stats=True)
+    cents = build_index(_vec_df(spark, range(40), vecs), idx, kind="ivf",
+                        n_cells=2, record_stats=True)["centroids"]
 
     with pytest.raises(ValueError, match="persist_members=True"):
         StreamingAnnIngest(spark, idx)

@@ -22,13 +22,14 @@ def _vec_df(spark, ids, vecs):
 
 @pytest.fixture
 def ivfpq(spark, tmp_path):
-    from flink_ms_spark.operators.similarity import build_ivfpq_index
+    from flink_ms_spark.operators.similarity import build_index
 
     rng = np.random.default_rng(109)
     vecs = rng.normal(size=(80, 8))
     idx = str(tmp_path / "ivfpq")
     df = _vec_df(spark, range(80), vecs)
-    cents, cb = build_ivfpq_index(df, idx, n_cells=4, n_subspaces=4, n_codes=8)
+    cents, cb = build_index(df, idx, kind="ivfpq", n_cells=4, n_subspaces=4,
+                            n_codes=8).values()
     return idx, vecs, cents, cb
 
 
@@ -110,7 +111,7 @@ def test_streaming_code_increments_serve_fresh_and_moved_vectors(spark, ivfpq):
     members-lane contract over 16-byte codes."""
     from flink_ms_spark.operators.similarity import (
         ivfpq_query_topk,
-        load_ivfpq_codes,
+        served_view,
     )
     from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest
 
@@ -119,7 +120,7 @@ def test_streaming_code_increments_serve_fresh_and_moved_vectors(spark, ivfpq):
     assert worker.kind == "ivfpq" and worker.generation == 0
 
     # id 7 re-sent AT another centroid, plus a brand-new id 900
-    base7 = load_ivfpq_codes(spark, idx).where(F.col("vec_id") == 7).collect()[0]
+    base7 = served_view(spark, idx, "codes").where(F.col("vec_id") == 7).collect()[0]
     target = (base7.cell + 2) % 4
     moved = cents[target] + 0.002
     new_vec = cents[target] + 0.003
@@ -127,7 +128,7 @@ def test_streaming_code_increments_serve_fresh_and_moved_vectors(spark, ivfpq):
     assert os.path.isdir(os.path.join(
         idx, "codes_increments", "gen=0", "batch_id=0", f"cell={target}"))
 
-    served = load_ivfpq_codes(spark, idx)
+    served = served_view(spark, idx, "codes")
     assert served.count() == 81  # 80 base + 900; id 7 superseded not duped
     srow = served.where(F.col("vec_id") == 7).collect()[0]
     assert srow.cell == target
@@ -146,21 +147,21 @@ def test_streaming_code_increments_serve_fresh_and_moved_vectors(spark, ivfpq):
 
     # replay idempotence: same batch_id overwrites its own partition
     worker.process_batch(_vec_df(spark, [7, 900], [moved, new_vec]), batch_id=0)
-    assert load_ivfpq_codes(spark, idx).count() == 81
+    assert served_view(spark, idx, "codes").count() == 81
 
 
 def test_ivfpq_reindex_monitors_both_quantizers_and_gates_coverage(
     spark, tmp_path
 ):
-    """reindex_ivfpq: healthy corpus → no rebuild, both drift ratios
+    """reindex: healthy corpus → no rebuild, both drift ratios
     reported; a rebuild input missing a served (increment-only) id
     refuses; a forced rebuild with full coverage swaps to gen 1,
     folds the tail, and the fresh vector survives in the new base."""
     from flink_ms_spark.operators.similarity import (
-        build_ivfpq_index,
-        load_ivfpq_codes,
+        build_index,
+        served_view,
         read_index_manifest,
-        reindex_ivfpq,
+        reindex,
     )
     from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest
 
@@ -168,10 +169,10 @@ def test_ivfpq_reindex_monitors_both_quantizers_and_gates_coverage(
     vecs = rng.normal(size=(60, 8))
     idx = str(tmp_path / "ivfpq")
     df = _vec_df(spark, range(60), vecs)
-    build_ivfpq_index(df, idx, n_cells=4, n_subspaces=4, n_codes=8,
-                      record_stats=True)
+    build_index(df, idx, kind="ivfpq", n_cells=4, n_subspaces=4, n_codes=8,
+                record_stats=True)
 
-    healthy = reindex_ivfpq(spark, idx, df)
+    healthy = reindex(spark, idx, df)
     assert healthy["action"] == "healthy"
     assert healthy["coarse_drift_ratio"] <= 1.05
     assert healthy["pq_drift_ratio"] <= 1.05
@@ -181,17 +182,17 @@ def test_ivfpq_reindex_monitors_both_quantizers_and_gates_coverage(
         _vec_df(spark, [900], [new_vec]), batch_id=0)
 
     with pytest.raises(ValueError, match="900 .*|1 served id"):
-        reindex_ivfpq(spark, idx, df, force=True)
+        reindex(spark, idx, df, force=True)
     # the refused rebuild cleared its intent marker (ingest unblocked)
     assert not os.path.isdir(idx + ".rebuilding")
 
     full = _vec_df(spark, list(range(60)) + [900],
                    list(vecs) + [new_vec])
-    report = reindex_ivfpq(spark, idx, full, force=True)
+    report = reindex(spark, idx, full, force=True)
     assert report["action"] == "rebuilt" and report["generation"] == 1
     assert report["dropped_ids"] == 0
     assert read_index_manifest(spark, idx)["generation"] == 1
-    served = load_ivfpq_codes(spark, idx)
+    served = served_view(spark, idx, "codes")
     assert served.count() == 61
     assert not os.path.isdir(os.path.join(idx, "codes_increments"))
 
@@ -199,12 +200,12 @@ def test_ivfpq_reindex_monitors_both_quantizers_and_gates_coverage(
 def test_run_recovers_ivfpq_ingest_across_racing_reindex(spark, tmp_path):
     """A reindex swap completing under a live ivfpq ingest stream: the
     tripped batch re-encodes in place under the new generation
-    (run(reload_on_reindex=True)) and serves — same recovery contract
+    (run()'s reload) and serves — same recovery contract
     as the pq and ivf lanes."""
     from flink_ms_spark.operators.similarity import (
-        build_ivfpq_index,
-        load_ivfpq_codes,
-        reindex_ivfpq,
+        build_index,
+        served_view,
+        reindex,
     )
     from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest
 
@@ -212,11 +213,11 @@ def test_run_recovers_ivfpq_ingest_across_racing_reindex(spark, tmp_path):
     vecs = rng.normal(size=(40, 8))
     idx = str(tmp_path / "ivfpq")
     df = _vec_df(spark, range(40), vecs)
-    build_ivfpq_index(df, idx, n_cells=4, n_subspaces=4, n_codes=8,
-                      record_stats=True)
+    build_index(df, idx, kind="ivfpq", n_cells=4, n_subspaces=4, n_codes=8,
+                record_stats=True)
 
     worker = StreamingAnnIngest(spark, idx)
-    reindex_ivfpq(spark, idx, df, force=True)  # swap to gen 1 behind its back
+    reindex(spark, idx, df, force=True)  # swap to gen 1 behind its back
 
     from flink_ms_spark.streaming.ann_ingest import StaleIndexGenerationError
 
@@ -226,19 +227,15 @@ def test_run_recovers_ivfpq_ingest_across_racing_reindex(spark, tmp_path):
     worker.reload(spark)
     worker.process_batch(batch, batch_id=0)
     assert worker.generation == 1
-    served = load_ivfpq_codes(spark, idx)
+    served = served_view(spark, idx, "codes")
     assert served.where(F.col("vec_id") == 700).count() == 1
 
 
 def test_partial_fresh_build_reads_as_incomplete_ivfpq(spark, tmp_path):
-    """A fresh ivfpq build that crashed mid-encode (manifest written
-    before the corpus pass — round 14) reads as kind=ivfpq and the
-    serve fails 'incomplete', never mis-dispatching to the IVF lane;
-    the pre-manifest inference also classifies a centroids+codebooks
-    layout as ivfpq."""
-    from flink_ms_spark import fsutil
+    """An ivfpq index whose code table is gone still reads as
+    kind=ivfpq and the serve fails 'incomplete', never mis-dispatching
+    to the IVF lane."""
     from flink_ms_spark.operators.similarity import (
-        INDEX_MANIFEST,
         ivfpq_query_topk,
         read_index_manifest,
     )
@@ -247,9 +244,9 @@ def test_partial_fresh_build_reads_as_incomplete_ivfpq(spark, tmp_path):
     vecs = rng.normal(size=(30, 8))
     idx = str(tmp_path / "partial")
     df = _vec_df(spark, range(30), vecs)
-    from flink_ms_spark.operators.similarity import build_ivfpq_index
+    from flink_ms_spark.operators.similarity import build_index
 
-    build_ivfpq_index(df, idx, n_cells=4, n_subspaces=4, n_codes=8)
+    build_index(df, idx, kind="ivfpq", n_cells=4, n_subspaces=4, n_codes=8)
     shutil.rmtree(os.path.join(idx, "codes"))  # simulate the crash
 
     m = read_index_manifest(spark, idx)
@@ -257,11 +254,6 @@ def test_partial_fresh_build_reads_as_incomplete_ivfpq(spark, tmp_path):
     q = _vec_df(spark, [-1], [vecs[0]])
     with pytest.raises(IOError, match="incomplete"):
         ivfpq_query_topk(spark, idx, q, k=3).collect()
-
-    # pre-manifest layout (no manifest file at all): inference must
-    # still say ivfpq, not ivf, because both artifact dirs exist
-    fsutil.delete(spark, fsutil.join(idx, INDEX_MANIFEST))
-    assert read_index_manifest(spark, idx)["kind"] == "ivfpq"
 
 
 def test_fold_bounds_the_live_tail_without_retraining(spark, ivfpq):
@@ -272,8 +264,8 @@ def test_fold_bounds_the_live_tail_without_retraining(spark, ivfpq):
     from flink_ms_spark.operators.similarity import (
         fold_ann_increments,
         ivfpq_query_topk,
-        load_ivf_centroids,
-        load_ivfpq_codes,
+        load_artifact,
+        served_view,
         read_index_manifest,
     )
     from flink_ms_spark.streaming.ann_ingest import StreamingAnnIngest
@@ -296,23 +288,23 @@ def test_fold_bounds_the_live_tail_without_retraining(spark, ivfpq):
     assert after == before
     assert not os.path.isdir(os.path.join(idx, "codes_increments"))
     assert read_index_manifest(spark, idx)["generation"] == 1
-    assert np.allclose(load_ivf_centroids(spark, idx), cents)
+    assert np.allclose(load_artifact(spark, idx, "centroids"), cents)
     # the folded rows serve as base now
-    assert load_ivfpq_codes(spark, idx).where(
+    assert served_view(spark, idx, "codes").where(
         F.col("vec_id") == 900).count() == 1
 
 
 @pytest.fixture
 def ivfpq_members(spark, tmp_path):
     """An IVF-PQ index WITH a members table (the rerank lane)."""
-    from flink_ms_spark.operators.similarity import build_ivfpq_index
+    from flink_ms_spark.operators.similarity import build_index
 
     rng = np.random.default_rng(307)
     vecs = rng.normal(size=(80, 8))
     idx = str(tmp_path / "ivfpq_m")
     df = _vec_df(spark, range(80), vecs)
-    cents, cb = build_ivfpq_index(df, idx, n_cells=4, n_subspaces=4,
-                                  n_codes=8, persist_members=True)
+    cents, cb = build_index(df, idx, kind="ivfpq", n_cells=4, n_subspaces=4,
+                            n_codes=8, persist_members=True).values()
     return idx, vecs, cents, cb
 
 
@@ -325,7 +317,7 @@ def test_rerank_recovers_exact_order_within_probed_cells(spark, ivfpq_members):
     from flink_ms_spark.operators.similarity import (
         _probe_cells,
         ivfpq_query_topk,
-        load_ivfpq_codes,
+        served_view,
     )
 
     idx, vecs, cents, cb = ivfpq_members
@@ -337,7 +329,7 @@ def test_rerank_recovers_exact_order_within_probed_cells(spark, ivfpq_members):
     got_pairs = [(r.b, r.d2, r.rk) for r in sorted(got, key=lambda r: r.rk)]
 
     # numpy ground truth: exact d2 over the two probed cells' members
-    cells = load_ivfpq_codes(spark, idx).select("vec_id", "cell").collect()
+    cells = served_view(spark, idx, "codes").select("vec_id", "cell").collect()
     cell_of = {r.vec_id: r.cell for r in cells}
     probed = set(np.flatnonzero(_probe_cells(qv[None, :], cents, 2)[0]))
     cand = [i for i in range(80) if cell_of[i] in probed]
@@ -366,7 +358,7 @@ def test_rerank_serves_streamed_vectors_and_requires_members(
     rng = np.random.default_rng(313)
     qv = rng.normal(size=8)
     worker = StreamingAnnIngest(spark, idx)
-    assert worker.has_members
+    assert "members" in worker.tables
     worker.process_batch(_vec_df(spark, [900], [qv]), batch_id=0)
 
     q = _vec_df(spark, [-1], [qv])
@@ -389,7 +381,7 @@ def test_rerank_shortlist_survives_batch_prune_beyond_default_margin(
     with k=1/rerank=20 the refine can only find it if the batch prune
     kept all 20 — a 2k+8=10 prune silently serves the wrong neighbor."""
     from flink_ms_spark.operators.similarity import (
-        build_ivfpq_index,
+        build_index,
         ivfpq_query_topk,
     )
 
@@ -405,8 +397,8 @@ def test_rerank_shortlist_survives_batch_prune_beyond_default_margin(
     vecs = [[i * 0.001, 0.0] for i in range(19)] + [[0.019, 1.6]]
     idx = str(tmp_path / "adv")
     df = _vec_df(spark, range(20), vecs)
-    build_ivfpq_index(df, idx, centroids=cents, pq_codebooks=cb,
-                      persist_members=True)
+    build_index(df, idx, kind="ivfpq", centroids=cents, codebooks=cb,
+                persist_members=True)
 
     q = _vec_df(spark, [-1], [[0.0, 1.4]])
     # sanity: ADC-only serve ranks id 19 LAST (worst approximate dist)
@@ -436,14 +428,14 @@ def test_fold_no_members_leaves_no_marker(spark, tmp_path):
     reports no-members WITHOUT leaking the .rebuilding intent marker
     (which would block every future ingest commit)."""
     from flink_ms_spark.operators.similarity import (
-        build_ivf_index,
+        build_index,
         fold_ann_increments,
     )
 
     rng = np.random.default_rng(331)
     idx = str(tmp_path / "ivf_plain")
-    build_ivf_index(_vec_df(spark, range(20), rng.normal(size=(20, 8))),
-                    idx, n_cells=2)
+    build_index(_vec_df(spark, range(20), rng.normal(size=(20, 8))),
+                idx, kind="ivf", n_cells=2)
     report = fold_ann_increments(spark, idx)
     assert report["action"] == "no-members"
     assert not os.path.isdir(idx + ".rebuilding")
@@ -575,3 +567,28 @@ def test_cli_ivfpq_build_query_status_reindex(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert "action\trebuilt" in out and "generation\t2" in out
     assert status()["generation"] == "2"
+
+
+def test_fixture_index_rebuilds_a_build_that_never_committed(spark, sf_oracle):
+    """The catalog's build-once index cache trusts an index only once
+    its manifest, the commit marker every build writes last, exists. A
+    cached ivfpq index whose build died after the codes pass (no
+    members, no manifest) is rebuilt by the next query instead of
+    serving a partial members table, and ivfpq_rerank still matches its
+    oracle."""
+    from flink_ms_spark import fsutil
+    from flink_ms_spark.operators.similarity import INDEX_MANIFEST
+    from flink_ms_spark.plans.catalog import ORACLE_SQL, QUERIES
+    from flink_ms_spark.plans.mixing import _ivfpq_index
+    from tests.oracle_harness import compare
+
+    idx = _ivfpq_index(spark, sf_oracle)
+    fsutil.delete(spark, os.path.join(idx, INDEX_MANIFEST))
+    shutil.rmtree(os.path.join(idx, "members"))
+
+    assert _ivfpq_index(spark, sf_oracle) == idx
+    assert os.path.exists(os.path.join(idx, INDEX_MANIFEST))
+    assert os.path.isdir(os.path.join(idx, "members", "gen=0"))
+    ok, msg = compare(QUERIES["ivfpq_rerank"](spark, sf_oracle),
+                      ORACLE_SQL["ivfpq_rerank"](), sf_oracle)
+    assert ok, msg

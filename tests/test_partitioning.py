@@ -90,21 +90,6 @@ def test_salted_join_matches_plain_join(spark):
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
-def test_compact_parquet_merges_small_files(spark, tmp_path):
-    from flink_ms_spark.partitioning import compact_parquet
-
-    src, dst = str(tmp_path / "small"), str(tmp_path / "compacted")
-    # 64 tiny files
-    spark.range(10_000).repartition(64).write.parquet(src)
-    import glob
-
-    assert len(glob.glob(src + "/part-*")) == 64
-    n = compact_parquet(spark, src, dst, target_bytes=10**12)
-    assert n == 1
-    assert len(glob.glob(dst + "/part-*")) == 1
-    assert spark.read.parquet(dst).count() == 10_000
-
-
 def test_zorder_prunes_both_dimensions(spark, tmp_path):
     """A Z-ordered layout must prune files on BOTH predicate columns;
     a single-column sort prunes only its own column. Pruning power is
@@ -261,62 +246,6 @@ def test_fixture_guard_covers_every_epoch_and_arith_column(spark, sf_smoke):
     # the columns the synthetic-model `% N` arithmetic touches
     assert "event_id" in _CRITICAL_TYPES["events"]
     assert "user_id" in _CRITICAL_TYPES["events"]
-
-
-def test_partitioned_write_prunes_at_listing_time(spark, tmp_path):
-    """A filter on the hive-partition column must become a
-    PartitionFilter on the scan (resolved at file listing, zero
-    footers opened for other partitions) and the directory layout must
-    be one file per partition value — not one-file-per-task
-    fragments."""
-    import glob
-
-    from flink_ms_spark.partitioning import partitioned_write
-
-    df = spark.range(10_000).select(
-        F.col("id"),
-        (F.col("id") % 4).cast("string").alias("lang"),
-    )
-    out = str(tmp_path / "part")
-    partitioned_write(df, out, ["lang"], files_per_partition=1)
-
-    # layout: exactly one parquet file under each lang=value directory
-    for v in range(4):
-        files = glob.glob(f"{out}/lang={v}/*.parquet")
-        assert len(files) == 1, files
-
-    # files_per_partition must FAN OUT the write (the salt spreads
-    # each value over up to k reducers), never funnel it: with k=4 the
-    # total file count across the 4 values exceeds one-per-value, and
-    # no directory exceeds k files, whatever the input partitioning (a
-    # salt that tracked the row's position in its input partition would
-    # equal ``id % 4`` at 2,500-row partitions and collapse each value
-    # to one file). AQE's partition coalescing re-merges this TINY
-    # shuffle into few tasks (correct at this size — the salt matters
-    # when partitions are big enough to survive coalescing), so pin the
-    # mechanism with coalescing off.
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        for n_parts in (None, 4, 32):  # None: the session's default
-            df_n = spark.range(10_000, numPartitions=n_parts).select(
-                F.col("id"), (F.col("id") % 4).cast("string").alias("lang")
-            )
-            out4 = str(tmp_path / f"part4-{n_parts}")
-            partitioned_write(df_n, out4, ["lang"], files_per_partition=4)
-            per_dir = [len(glob.glob(f"{out4}/lang={v}/*.parquet")) for v in range(4)]
-            assert all(1 <= n <= 4 for n in per_dir), (n_parts, per_dir)
-            assert sum(per_dir) > 4, (n_parts, per_dir)
-            back = spark.read.parquet(out4)
-            assert back.count() == 10_000 and back.where("lang = '2'").count() == 2500
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-
-    scan = spark.read.parquet(out).filter(F.col("lang") == "2")
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "lang" in plan.split("PartitionFilters")[1][:80]
-    # the data filter list must NOT carry the partition predicate —
-    # pruning happened above the parquet reader
-    assert scan.count() == 2500
 
 
 def test_zorder_report_and_layout_agree_at_sf001(spark, tmp_path):

@@ -331,56 +331,6 @@ def test_streaming_reliability_conf():
     )
 
 
-def test_streaming_exact_dedup_first_seen_wins(spark, tmp_path):
-    """Stream dedup: duplicate digests are dropped within the watermark
-    horizon, including across micro-batch runs (digest state is
-    checkpointed)."""
-    from flink_ms_spark.streaming.dedup import streaming_exact_dedup
-
-    src = tmp_path / "docs_in"
-    ckpt = tmp_path / "ckpt_dedup"
-    src.mkdir()
-    schema = "ts TIMESTAMP, doc_id LONG, text STRING"
-    seen: list = []
-
-    def run() -> None:
-        stream = spark.readStream.schema(schema).json(str(src))
-        deduped = streaming_exact_dedup(stream, watermark_delay="2 hours")
-        q = (
-            deduped.writeStream.foreachBatch(
-                lambda df, _bid: seen.extend((r.doc_id, r.text_hash) for r in df.collect())
-            )
-            .outputMode("append")
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    _write(
-        str(src / "a.json"),
-        [
-            '{"ts": "2024-01-01 10:00:00", "doc_id": 1, "text": "the quick fox"}',
-            '{"ts": "2024-01-01 10:01:00", "doc_id": 2, "text": "The  quick fox "}',
-            '{"ts": "2024-01-01 10:02:00", "doc_id": 3, "text": "something else"}',
-        ],
-    )
-    run()
-    # doc 2 normalizes to doc 1's content → dropped
-    assert sorted(d for d, _ in seen) == [1, 3]
-
-    _write(
-        str(src / "b.json"),
-        [
-            '{"ts": "2024-01-01 10:30:00", "doc_id": 4, "text": "the quick fox"}',
-            '{"ts": "2024-01-01 10:31:00", "doc_id": 5, "text": "brand new text"}',
-        ],
-    )
-    run()
-    # doc 4 duplicates checkpointed digest state → still dropped
-    assert sorted(d for d, _ in seen) == [1, 3, 5]
-
-
 def test_online_sgd_stream_converges_over_batches(spark, tmp_path):
     """The streaming learning loop end-to-end: each micro-batch's
     touched-row SGD update + merge must reduce the served model's
@@ -428,67 +378,6 @@ def test_online_sgd_stream_converges_over_batches(spark, tmp_path):
 
     assert errs[-1] < errs[0] * 0.5, f"SGD failed to converge: {errs}"
     assert all(b <= a + 1e-9 for a, b in zip(errs, errs[1:])), f"MSE rose: {errs}"
-
-
-def test_streaming_curate_matches_batch_semantics(spark, tmp_path):
-    """Quality gate + scrub + watermark dedup as one append stream:
-    short docs drop, duplicate digests drop (first seen wins), PII is
-    scrubbed in survivors, and the second availableNow run continues
-    from checkpointed digest state."""
-    from flink_ms_spark.streaming.curate import streaming_curate
-
-    long_a = "alpha " * 25 + "mail me at bob@example.com"
-    long_b = "beta " * 30
-    src = tmp_path / "cur_in"
-    ckpt = tmp_path / "ckpt_cur"
-    src.mkdir()
-    schema = "ts TIMESTAMP, doc_id LONG, text STRING"
-    out: list = []
-
-    def run() -> None:
-        stream = spark.readStream.schema(schema).json(str(src))
-        q = (
-            streaming_curate(stream, min_tokens=20, watermark_delay="2 hours")
-            .writeStream.foreachBatch(
-                lambda df, _bid: out.extend(
-                    (r.doc_id, r.text, r.n_tokens) for r in df.collect()
-                )
-            )
-            .outputMode("append")
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    import json
-
-    _write(
-        str(src / "a.json"),
-        [
-            json.dumps({"ts": "2024-01-01 10:00:00", "doc_id": 1, "text": long_a}),
-            json.dumps({"ts": "2024-01-01 10:01:00", "doc_id": 2, "text": "too short"}),
-            json.dumps({"ts": "2024-01-01 10:02:00", "doc_id": 3, "text": long_a}),
-            json.dumps({"ts": "2024-01-01 10:03:00", "doc_id": 4, "text": long_b}),
-        ],
-    )
-    run()
-    got = {d: (t, n) for d, t, n in out}
-    # 2 fails the gate; 3 duplicates 1's digest; 1 and 4 survive
-    assert sorted(got) == [1, 4]
-    assert "bob@example.com" not in got[1][0], "PII must be scrubbed"
-    assert got[4][1] == 30
-
-    _write(
-        str(src / "b.json"),
-        [
-            json.dumps({"ts": "2024-01-01 10:30:00", "doc_id": 5, "text": long_b}),
-            json.dumps({"ts": "2024-01-01 10:31:00", "doc_id": 6, "text": "gamma " * 21}),
-        ],
-    )
-    run()
-    # 5 duplicates checkpointed digest state; 6 is new
-    assert sorted(d for d, _, _ in out) == [1, 4, 6]
 
 
 def test_streaming_mse_ledger(spark, tmp_path):
